@@ -41,6 +41,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources import keybloom
 from ..sources.icemini import FileEntry, IceMiniTable
 from .lineage import JobLog, commit_landed, run_tasks
 
@@ -66,6 +67,15 @@ def broadcast_threshold_bytes(spark: SparkSession) -> int:
         )
     except Exception:
         return -1
+
+
+def _max_partition_bytes(spark: SparkSession) -> int:
+    """Session ``spark.sql.files.maxPartitionBytes`` in bytes (the
+    bytes one scan task reads), 128 MB if it cannot be read."""
+    try:
+        return int(spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes())
+    except Exception:
+        return 128 * 1024 * 1024
 
 
 def _chunk(items: list, size: int) -> list[list]:
@@ -341,13 +351,15 @@ def _merge_mor(
     salt_partitions: int | None,
 ) -> dict[str, Any]:
     """Merge-on-read upsert — the Flink-on-Iceberg equality-delete
-    writer shape: ONE commit adds (a) equality-delete files holding the
-    source keys and (b) data files holding the source rows. Matched
-    target rows are suppressed at scan time by the deletes; unmatched
-    keys' deletes are no-ops. Commit cost is O(source) bytes — no
-    discovery scan, no target-file reads, no rewrites — which is what
-    makes a trickle upsert against a 10^5-file 100 TB table a
-    seconds-level operation instead of a full-table rewrite.
+    writer shape: ONE writer job (``IceMiniTable.write_upsert_files``)
+    writes the deduplicated source rows as data files, each with a
+    paired equality-delete file holding exactly its keys, and ONE
+    commit adds both. Matched target rows are suppressed at scan time
+    by the deletes; unmatched keys' deletes are no-ops. Cost is
+    O(source) bytes — no source count or cache, no discovery scan, no
+    target-file reads, no rewrites — which is what makes a trickle
+    upsert against a 10^5-file 100 TB table a seconds-level operation
+    instead of a full-table rewrite.
 
     Why NO conflict validation is needed (``required_paths=()``): both
     the delete and data files take the commit's own sequence number,
@@ -367,25 +379,20 @@ def _merge_mor(
     source writes deletes that supersede the earlier application's
     rows, leaving exactly one live row per key — the lineage probes
     below only avoid junk snapshots, they are not load-bearing."""
-    spark = table.spark
     log = JobLog(table.root, job_id)
 
     source = table.align_to_schema(source).dropDuplicates([key])
     if salt_partitions:
         source = source.repartition(salt_partitions, F.xxhash64(key, F.lit(42)))
-    source = source.persist()
-    n_src = source.count()
 
     tasks = log.load_plan()
     if tasks is None:
-        # the plan is pinned even when empty so a resume is a no-op
-        tasks = [{"task_id": "upsert", "kind": "mor"}] if n_src else []
+        tasks = [{"task_id": "upsert", "kind": "mor"}]
         log.write_plan(tasks)
 
     result: dict[str, Any] = {
         "job_id": job_id,
         "mode": "merge_on_read",
-        "source_keys": n_src,
         "skipped": 0,
         "delete_files": 0,
         "appended_files": 0,
@@ -416,8 +423,7 @@ def _merge_mor(
             result["rows"] += rec["rows"]
             result["tokens"] += rec["tokens"]
             continue
-        del_entries = table.write_delete_files(source.select(key))
-        data_entries = table.write_data_files(source)
+        data_entries, del_entries = table.write_upsert_files(source)
         record = {
             "task_id": tid,
             "output_files": [e.path for e in data_entries],
@@ -425,20 +431,21 @@ def _merge_mor(
             "rows": sum(e.rows for e in data_entries),
             "tokens": sum(e.token_count for e in data_entries),
         }
-        log.mark_intent(tid, record)
-        table.commit(
-            "merge-mor",
-            added=data_entries,
-            added_deletes=del_entries,
-            summary_extra={"maint_job_id": job_id, "maint_task_id": tid},
-        )
+        if data_entries:  # an empty source commits nothing
+            log.mark_intent(tid, record)
+            table.commit(
+                "merge-mor",
+                added=data_entries,
+                added_deletes=del_entries,
+                summary_extra={"maint_job_id": job_id, "maint_task_id": tid},
+            )
         log.mark_done(tid, record)
         result["delete_files"] += len(del_entries)
         result["appended_files"] += len(data_entries)
         result["rows"] += record["rows"]
         result["tokens"] += record["tokens"]
 
-    source.unpersist()
+    result["source_keys"] = result["rows"]  # one row per deduplicated key
     result["snapshot_id"] = table.current_version()
     return result
 
@@ -879,9 +886,9 @@ def bloom_prune_candidates(
     can match any source key. This is what makes point-lookup merges
     cheap on UNCLUSTERED tables, where per-file doc_id min/max prunes
     nothing (uniform-random keys ⇒ every file spans the full range):
-    the probe reads ~100 KB of sidecar per file instead of the file's
-    key column, and the exact discovery scan then runs on the survivors
-    only. Conservative on every axis: files without a sidecar (pre-bloom
+    the probe reads the file's sidecar (3 bytes per key, at least 272
+    bytes) instead of the file's key column, and the exact discovery
+    scan then runs on the survivors only. Conservative on every axis: files without a sidecar (pre-bloom
     manifests, external writers, corrupt sidecar) are kept; Bloom false
     positives are re-verified by the discovery scan; sources beyond
     ``max_probe_keys`` skip the probe — the cutoff is where the sketch
@@ -894,7 +901,10 @@ def bloom_prune_candidates(
     Hashing is Spark's ``xxhash64`` on BOTH sides (the writer feeds the
     sidecar from a JVM-computed ``__keyhash`` column), so Python never
     hashes a key. The probe itself is one Spark job over the sidecar
-    paths — O(#candidate files) tasks reading O(sidecar) bytes each."""
+    paths, with one task per ``spark.sql.files.maxPartitionBytes`` of
+    sidecar bytes (sizes known from the manifest's row counts, at most
+    64 tasks): a few hundred small sidecars are one task, not one Python
+    task per file."""
     if key != "doc_id" or n_src > max_probe_keys:
         return candidates
     with_bloom = [e for e in candidates if e.key_bloom]
@@ -926,9 +936,17 @@ def bloom_prune_candidates(
             ]
             yield _pd.DataFrame({"path": pdf["path"], "maybe": maybe})
 
+    # one task per maxPartitionBytes of sidecar, sized from the manifest
+    # (a sidecar's size follows from its file's row count), at most 64
+    sidecar_bytes = sum(
+        keybloom.num_blocks_for(e.rows) * keybloom.BLOCK_BYTES for e in with_bloom
+    )
+    parts = min(64, max(1, -(-sidecar_bytes // _max_partition_bytes(spark))))
     cdf = spark.createDataFrame(
         [(e.path, e.key_bloom) for e in with_bloom], "path string, bloom string"
-    ).repartition(min(len(with_bloom), 64))
+    )
+    # coalesce keeps a one-task probe a single narrow stage (no shuffle)
+    cdf = cdf.coalesce(1) if parts == 1 else cdf.repartition(parts)
     kept = {
         r["path"]
         for r in cdf.mapInPandas(_probe, "path string, maybe boolean")

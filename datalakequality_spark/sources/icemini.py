@@ -17,15 +17,16 @@ in later:
                                                   maintenance/lineage.py)
 
 Commit protocol (single filesystem, Iceberg HadoopTableOperations-style):
-a writer resolves the current version N, prepares manifests, then claims
-version N+1 by creating ``v<N+1>.metadata.json`` with O_CREAT|O_EXCL —
-the filesystem arbitrates concurrent committers. A loser re-reads the
-winner's snapshot and *validates*: if any data file it read (its
-``required_files``) is no longer live, the commit raises
-``CommitConflict`` (matching Iceberg's validation semantics for
-conflicting rewrites); otherwise it retries on top. ``version-hint.text``
-is advisory (crash between snapshot write and hint update is harmless —
-readers take ``max(vN present)``).
+a writer resolves the current version N, prepares manifests, writes the
+snapshot to a temp file, then claims version N+1 by hard-linking it to
+``v<N+1>.metadata.json`` — ``link`` fails when the name exists, so the
+filesystem arbitrates concurrent committers, and a claimed version is
+never visible half-written. A loser re-reads the winner's snapshot and
+*validates*: if any data file it read (its ``required_files``) is no
+longer live, the commit raises ``CommitConflict`` (matching Iceberg's
+validation semantics for conflicting rewrites); otherwise it retries on
+top. ``version-hint.text`` is advisory (crash between snapshot write and
+hint update is harmless — readers take ``max(vN present)``).
 
 Scale notes: all metadata ops are O(#files) driver-side, the same cost
 class as Iceberg's own planning. Data ops are single Spark jobs; per-file
@@ -417,7 +418,10 @@ class IceMiniTable:
     # ---------------------------------------------------------------- commits
 
     def _try_claim_version(self, version: int, snap: Snapshot) -> bool:
-        """Atomically claim v<version> via O_CREAT|O_EXCL. True if won."""
+        """Atomically claim v<version>: write the snapshot to a temp,
+        then hard-link it to its final name — ``link`` fails if the name
+        exists, so the filesystem arbitrates racing committers and the
+        version appears with its full content. True if won."""
         path = os.path.join(self.meta_dir, f"v{version}.metadata.json")
         payload = {
             "format_version": 1,
@@ -431,12 +435,20 @@ class IceMiniTable:
             "schema": snap.schema_ddl,
             "delete_manifests": snap.delete_manifests,
         }
+        # the full payload lands in a temp first: a reader (or a crash)
+        # can never see a partially written claimed version
+        tmp = os.path.join(self.meta_dir, f".tmp-v{version}-{uuid.uuid4().hex}")
         try:
-            fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
+            with open(tmp, "w") as f:
+                json.dump(payload, f)
+            os.link(tmp, path)
         except FileExistsError:
             return False
-        with os.fdopen(fd, "w") as f:
-            json.dump(payload, f)
+        finally:
+            try:
+                os.unlink(tmp)
+            except FileNotFoundError:
+                pass
         # advisory hint, atomically replaced
         tmp = os.path.join(self.meta_dir, f".tmp-hint-{uuid.uuid4().hex}")
         with open(tmp, "w") as f:
@@ -664,6 +676,28 @@ class IceMiniTable:
         prefix: str | None = None,
         split_col: str | None = None,
     ) -> list[FileEntry]:
+        """Write a DataFrame as new (uncommitted) data files, return stats
+        (see ``_write_files``)."""
+        return self._write_files(df, prefix, split_col, with_deletes=False)[0]
+
+    def write_upsert_files(
+        self, df: DataFrame
+    ) -> tuple[list[FileEntry], list[FileEntry]]:
+        """Write a merge-on-read upsert's files in ONE writer job: each
+        data file gets a paired equality-delete file holding exactly its
+        doc_ids (``delete-<data file name>``). Returns (data entries,
+        delete entries), index-aligned: ``deletes[i]`` pairs ``data[i]``,
+        so a caller that quarantines a data file drops its pair and the
+        replaced rows stay live. ``df`` must carry unique doc_ids."""
+        return self._write_files(df, None, None, with_deletes=True)
+
+    def _write_files(
+        self,
+        df: DataFrame,
+        prefix: str | None,
+        split_col: str | None,
+        with_deletes: bool,
+    ) -> tuple[list[FileEntry], list[FileEntry]]:
         """Write a DataFrame as new (uncommitted) data files, return stats.
 
         ONE distributed job — the Iceberg writer-task model (Spark's
@@ -688,6 +722,10 @@ class IceMiniTable:
         the deterministic final name, so retried tasks can't duplicate
         files; stale temps and never-committed orphans are swept by
         expire_snapshots' reachability GC.
+
+        With ``with_deletes`` the same task also streams each data file's
+        doc_id column into a paired equality-delete file, renamed into
+        place like the data file; its doc_id range is the data file's.
         """
         prefix = prefix or uuid.uuid4().hex
         data_dir = self.data_dir
@@ -697,7 +735,8 @@ class IceMiniTable:
             "path string, rows long, token_count long, sum_sq_n_tok long, "
             "size_bytes long, "
             "min_n_tok int, max_n_tok int, min_source string, max_source string, "
-            "min_doc_id string, max_doc_id string, key_bloom string"
+            "min_doc_id string, max_doc_id string, key_bloom string, "
+            "delete_path string, delete_size_bytes long"
         )
 
         def _write(batches):
@@ -727,19 +766,25 @@ class IceMiniTable:
                     ("min_doc_id", pa.string()),
                     ("max_doc_id", pa.string()),
                     ("key_bloom", pa.string()),
+                    ("delete_path", pa.string()),
+                    ("delete_size_bytes", pa.int64()),
                 ]
             )
             results: list[dict] = []
             cur: dict | None = None
 
             def _open(group: int) -> dict:
+                name = f"{prefix}-{group:05d}"
                 return {
                     "group": group,
-                    "final": _os.path.join(data_dir, f"{prefix}-{group:05d}.parquet"),
-                    "tmp": _os.path.join(
-                        data_dir, f".inprogress-{prefix}-{group:05d}-{attempt}"
+                    "final": _os.path.join(data_dir, f"{name}.parquet"),
+                    "tmp": _os.path.join(data_dir, f".inprogress-{name}-{attempt}"),
+                    "del_final": _os.path.join(data_dir, f"delete-{name}.parquet"),
+                    "del_tmp": _os.path.join(
+                        data_dir, f".inprogress-delete-{name}-{attempt}"
                     ),
                     "writer": None,
+                    "del_writer": None,
                     "buf": [],
                     "buffered": 0,
                     "rows": 0,
@@ -759,6 +804,13 @@ class IceMiniTable:
                         st["tmp"], tbl.schema, compression="zstd"
                     )
                 st["writer"].write_table(tbl)
+                if with_deletes:
+                    keys = tbl.select(["doc_id"])
+                    if st["del_writer"] is None:
+                        st["del_writer"] = pq.ParquetWriter(
+                            st["del_tmp"], keys.schema, compression="zstd"
+                        )
+                    st["del_writer"].write_table(keys)
                 st["buf"], st["buffered"] = [], 0
 
             def _feed(st: dict, batch, h_np) -> None:
@@ -800,6 +852,12 @@ class IceMiniTable:
                     np.concatenate(st["hashes"]) if st["hashes"] else [],
                     attempt,
                 )
+                del_path = del_size = None
+                if with_deletes:
+                    st["del_writer"].close()
+                    _os.rename(st["del_tmp"], st["del_final"])
+                    del_path = st["del_final"]
+                    del_size = _os.path.getsize(del_path)
                 _os.rename(st["tmp"], st["final"])
                 results.append(
                     {
@@ -815,6 +873,8 @@ class IceMiniTable:
                         "min_doc_id": st["mins"]["doc_id"],
                         "max_doc_id": st["maxs"]["doc_id"],
                         "key_bloom": bloom,
+                        "delete_path": del_path,
+                        "delete_size_bytes": del_size,
                     }
                 )
 
@@ -853,7 +913,8 @@ class IceMiniTable:
             .mapInArrow(_write, stats_schema)
             .collect()
         )
-        return [
+        stat_rows = sorted(stat_rows, key=lambda r: r["path"])
+        data = [
             FileEntry(
                 path=os.path.relpath(r["path"], root),
                 rows=int(r["rows"]),
@@ -868,8 +929,21 @@ class IceMiniTable:
                 sum_sq_n_tok=int(r["sum_sq_n_tok"] or 0),
                 key_bloom=os.path.relpath(r["key_bloom"], root),
             )
-            for r in sorted(stat_rows, key=lambda r: r["path"])
+            for r in stat_rows
         ]
+        deletes = [
+            FileEntry(
+                path=os.path.relpath(r["delete_path"], root),
+                rows=int(r["rows"]),
+                token_count=0,
+                size_bytes=int(r["delete_size_bytes"]),
+                min_doc_id=r["min_doc_id"],
+                max_doc_id=r["max_doc_id"],
+            )
+            for r in stat_rows
+            if r["delete_path"] is not None
+        ]
+        return data, deletes
 
     def write_delete_files(
         self, keys_df: DataFrame, max_rows_per_file: int = 4_000_000
@@ -878,6 +952,12 @@ class IceMiniTable:
         parquet under data/ with ``delete-`` names. The caller commits
         them via ``commit(added_deletes=...)``; at scan time their keys
         are anti-joined out of data files with seq < the delete's seq.
+
+        For key sets with no data file of their own: merge-on-read
+        DELETE (``merge._delete_mor``) and delete-file compaction
+        (``compaction.compact_delete_files``). Upserts, whose keys are
+        exactly their new rows' keys, write each delete file next to its
+        data file in one job instead (``write_upsert_files``).
 
         One distributed write + O(#delete files) driver-side footer
         reads for stats (delete files are O(matched keys) — tiny next
@@ -1441,7 +1521,8 @@ class IceMiniTable:
         unreachable: data files and manifests referenced by no retained
         snapshot, plus staged orphans never committed.
 
-        ``.inprogress-*`` writer temps are removed only when older than
+        ``.inprogress-*`` writer temps (and ``metadata/.tmp-*`` commit
+        temps) are removed only when older than
         ``orphan_temp_age_s`` (Iceberg's orphan-file-cleanup mtime
         pattern): an expire running concurrently with an in-flight
         rewrite/merge must not unlink temps a writer task still holds
@@ -1463,10 +1544,14 @@ class IceMiniTable:
             retained_files.update(q["path"] for q in snap.quarantine if "path" in q)
 
         deleted_files, deleted_manifests, deleted_snapshots = [], [], []
-        # stale writer temps from failed/retried tasks (never renamed) —
-        # age-gated so live writers' open temps survive a concurrent GC
+        # stale writer temps from failed/retried tasks (never renamed)
+        # and metadata temps of crashed commits — age-gated so live
+        # writers' open temps survive a concurrent GC
         now = time.time()
-        for p in glob.glob(os.path.join(self.data_dir, ".inprogress-*")):
+        for p in [
+            *glob.glob(os.path.join(self.data_dir, ".inprogress-*")),
+            *glob.glob(os.path.join(self.meta_dir, ".tmp-*")),
+        ]:
             try:
                 if now - os.path.getmtime(p) >= orphan_temp_age_s:
                     os.remove(p)

@@ -5,11 +5,12 @@ Why: MERGE discovery prunes candidate files on per-file doc_id min/max
 UNclustered tables — uniform-random keys make every file span the whole
 key range until the first clustering rewrite, so a point-lookup merge
 against freshly appended data scans every file's key column. A per-file
-Bloom filter answers "can key k live in file f?" from ~100 KB of sidecar
-bytes instead of the file's key column — the same role parquet's
-column-chunk Bloom filters play in Iceberg (our writer is pyarrow 16,
-which cannot emit parquet-native blooms, so the sketch lives in a
-sidecar `<data-file>.bloom` recorded in the manifest entry).
+Bloom filter answers "can key k live in file f?" from its sidecar (3
+bytes per key, at least 272 bytes, at most 4 MB) instead of the file's
+key column — the same role parquet's column-chunk Bloom filters play in
+Iceberg (our writer is pyarrow 16, which cannot emit parquet-native
+blooms, so the sketch lives in a sidecar `<data-file>.bloom` recorded in
+the manifest entry).
 
 Format/algorithm: the parquet split-block Bloom filter (SBBF) — 256-bit
 blocks of eight 32-bit words, one bit per word selected by salted

@@ -149,11 +149,15 @@ def windowed_counts(
 
 class IceMiniUpsertSink(IceMiniStreamSink):
     """Streaming MERGE-ON-READ upsert sink — the Flink-on-Iceberg CDC
-    writer shape. Each micro-batch lands as ONE atomic commit of
-    (a) equality-delete files holding the batch's keys and (b) data
-    files holding the batch's rows: O(batch) bytes per epoch, no
-    discovery scan, no target rewrite — which is what makes a
+    writer shape. Each micro-batch is deduplicated on the key and
+    written by ONE writer job (``IceMiniTable.write_upsert_files``):
+    every data file holding the batch's rows gets a paired
+    equality-delete file holding exactly its keys. Both land in ONE
+    atomic commit: O(batch) bytes per epoch, no discovery scan, no
+    target rewrite, no cached or re-read batch — which is what makes a
     continuous upsert stream against a 10^5-file table sustainable.
+    With ``quality_gate=True`` a quarantined data file drops its paired
+    delete file, so its keys' old rows stay live.
     Matched older rows are suppressed at scan time by sequence number
     (``IceMiniTable._read_with_deletes``); the next clustering rewrite
     sheds them physically, and ``compact_delete_files`` consolidates
@@ -190,53 +194,28 @@ class IceMiniUpsertSink(IceMiniStreamSink):
         if epoch_id in self._epochs:
             return
         df = self.table.align_to_schema(batch_df).dropDuplicates([self.key])
-        n = df.count()
-        if n == 0:
-            return
         if self.target_file_rows:
+            # explicit file sizing needs the row count; without it the
+            # dedup shuffle's (AQE-coalesced) partitions are the files
+            n = df.count()
+            if n == 0:
+                return
             df = df.repartition(max(1, -(-n // self.target_file_rows)))
-        df = df.persist()
-        try:
-            data_entries = self.table.write_data_files(df)
-            data_entries, quarantine = self._gate(data_entries)
-            # delete keys come from the CLEAN files only: quarantining a
-            # file while still deleting its keys' old rows would lose
-            # data (old row suppressed, replacement never published)
-            if quarantine:
-                clean_keys = (
-                    self.table.spark.read.schema(self.table.schema())
-                    .parquet(
-                        *[self.table._abs(e.path) for e in data_entries]
-                    )
-                    .select(self.key)
-                    if data_entries
-                    else None
-                )
-            else:
-                clean_keys = df.select(self.key)
-            del_entries = (
-                self.table.write_delete_files(clean_keys)
-                if clean_keys is not None
-                else []
-            )
-        finally:
-            df.unpersist()
-        if not data_entries and not del_entries:
-            if quarantine:
-                # publish the quarantine verdicts even when the whole
-                # batch failed the gate (operational visibility)
-                self.table.commit(
-                    "stream-upsert",
-                    added=[],
-                    quarantine=quarantine,
-                    summary_extra={"epoch_id": epoch_id},
-                )
-                self._epochs.add(epoch_id)
-            return
+        data_entries, del_entries = self.table.write_upsert_files(df)
+        clean, quarantine = self._gate(data_entries)
+        if not data_entries:
+            return  # empty batch
+        # a quarantined file's paired delete file is dropped with it:
+        # deleting its keys' old rows would lose data (old row
+        # suppressed, replacement never published). A batch quarantined
+        # as a whole still commits, to publish its verdicts.
+        keep = {e.path for e in clean}
         self.table.commit(
             "stream-upsert",
-            added=data_entries,
-            added_deletes=del_entries,
+            added=clean,
+            added_deletes=[
+                d for e, d in zip(data_entries, del_entries) if e.path in keep
+            ],
             quarantine=quarantine,
             summary_extra={"epoch_id": epoch_id},
         )

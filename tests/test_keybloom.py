@@ -150,6 +150,34 @@ def test_bloom_prune_is_conservative(spark, tmp_path):
     )
 
 
+def test_bloom_probe_small_candidate_set_is_one_task(spark, tmp_path):
+    """The probe job is sized by sidecar bytes (from the manifest's row
+    counts), not by file count: 20 small sidecars are probed by one
+    task, and the kept set is unchanged."""
+    t = IceMiniTable.create(spark, str(tmp_path / "onetask"))
+    t.append(generate_sequences(spark, 2000), target_file_rows=100)
+    cands = t.live_entries()
+    assert len(cands) >= 16
+    picked = cands[5]
+    src_keys = (
+        spark.read.schema(t.schema()).parquet(t._abs(picked.path)).select("doc_id")
+    )
+
+    sc = spark.sparkContext
+    group = "bloom-probe-one-task"
+    sc.setJobGroup(group, "bloom probe")
+    try:
+        kept = bloom_prune_candidates(t, cands, src_keys, "doc_id", picked.rows)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert picked in kept and len(kept) <= 3
+
+    tracker = sc.statusTracker()
+    probe_job = max(tracker.getJobIdsForGroup(group))  # the last action
+    stages = tracker.getJobInfo(probe_job).stageIds
+    assert sum(tracker.getStageInfo(s).numTasks for s in stages) == 1
+
+
 def test_expire_sweeps_orphan_sidecars(spark, tmp_path):
     """Sidecars die with their data file: after a rewrite + expire, no
     sidecar without a live data file remains, and every live data file

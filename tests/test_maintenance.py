@@ -144,6 +144,38 @@ def test_concurrent_nonconflicting_commit_retries(spark, table):
     assert {e.path for e in new} <= table.live_paths()
 
 
+def test_commit_survives_failed_snapshot_write(spark, tmp_path, monkeypatch):
+    """A failure while the snapshot JSON is being written (a crash or a
+    full disk mid-write) never leaves a torn v<N>.metadata.json: the
+    version is claimed only once its full content exists, so the
+    current version, its snapshot and the next commit all still work."""
+    import json
+
+    t = IceMiniTable.create(spark, str(tmp_path / "torn"))
+    t.append(generate_sequences(spark, 200))
+    v = t.current_version()
+    real_dump = json.dump
+
+    def failing_dump(obj, fp, *a, **k):
+        if isinstance(obj, dict) and "snapshot_id" in obj:
+            fp.write('{"snapshot_id": ')  # partial payload, then the fault
+            raise OSError("simulated fault while writing the snapshot")
+        return real_dump(obj, fp, *a, **k)
+
+    monkeypatch.setattr(json, "dump", failing_dump)
+    with pytest.raises(OSError, match="simulated"):
+        t.append(generate_sequences(spark, 100, start_id=1000))
+    monkeypatch.setattr(json, "dump", real_dump)
+
+    assert t.current_version() == v
+    assert t.snapshot().snapshot_id == v
+    assert t.scan().count() == 200
+    t.append(generate_sequences(spark, 100, start_id=1000))
+    assert t.current_version() == v + 1
+    assert t.scan().count() == 300
+    assert not [p for p in os.listdir(t.meta_dir) if p.startswith(".tmp-v")]
+
+
 def test_crash_resume_idempotent(spark, table, monkeypatch):
     job = "compact-resume-test"
     real_mark_done = JobLog.mark_done

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -395,6 +397,84 @@ def test_stream_upsert_merge_on_read(spark, tmp_path):
         .collect()[0][0]
     )
     assert h(t) == h(t2)
+
+    # one epoch's shape: at most two Spark jobs (the dedup shuffle and
+    # the writer), and every delete file it adds holds exactly the keys
+    # of its paired data file
+    from datalakequality_spark.streaming.ingest import IceMiniUpsertSink
+
+    sc = spark.sparkContext
+    dels_before = t.live_delete_paths()
+    group = "upsert-epoch-shape"
+    sc.setJobGroup(group, "one upsert epoch")
+    try:
+        IceMiniUpsertSink(t)(
+            generate_sequences(spark, 1000, rev=3, num_partitions=4).where(
+                "pmod(xxhash64(doc_id), 7) = 0"
+            ),
+            epoch_id=1000,
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert 1 <= len(sc.statusTracker().getJobIdsForGroup(group)) <= 2
+
+    keys = lambda rel: {
+        r["doc_id"] for r in spark.read.parquet(t._abs(rel)).select("doc_id").collect()
+    }
+    new_dels = t.live_delete_paths() - dels_before
+    assert new_dels
+    for d in new_dels:
+        head, name = os.path.split(d)
+        paired = os.path.join(head, name[len("delete-"):])
+        assert name.startswith("delete-") and paired in t.live_paths()
+        assert keys(d) == keys(paired)
+    assert t.scan().groupBy("doc_id").count().where("count > 1").count() == 0
+
+
+def test_stream_upsert_gate_quarantines_some_files(spark, tmp_path):
+    """One upsert epoch in which some files pass the gate and some are
+    quarantined: keys in passing files show their new rows, keys in
+    quarantined files keep their old rows, and no live delete file is
+    paired with a quarantined data file."""
+    from datalakequality_spark.streaming.ingest import IceMiniUpsertSink
+
+    row_h = F.xxhash64("doc_id", "tokens", "n_tok", "source").alias("h")
+    hashes = lambda df: {r["doc_id"]: r["h"] for r in df.select("doc_id", row_h).collect()}
+    keys = lambda paths: {
+        r["doc_id"]
+        for r in spark.read.parquet(*[t._abs(p) for p in paths]).select("doc_id").collect()
+    }
+
+    t = IceMiniTable.create(spark, str(tmp_path / "gp"))
+    t.append(generate_sequences(spark, 1000), target_file_rows=250)
+    old = hashes(t.scan())
+    # the batch arrives hash-partitioned on doc_id, so the sink's dedup
+    # keeps that partitioning and writes one file per partition; the
+    # rows of partition 0 get a null n_tok, which fails the gate
+    upd = (
+        generate_sequences(spark, 1000, rev=1)
+        .where("pmod(xxhash64(doc_id), 3) = 0")
+        .repartition(4, "doc_id")
+    )
+    poisoned = F.pmod(F.hash("doc_id"), F.lit(4)) == 0
+    batch = upd.withColumn(
+        "n_tok", F.when(poisoned, F.lit(None)).otherwise(F.col("n_tok"))
+    )
+    new = hashes(upd)
+    IceMiniUpsertSink(t, quality_gate=True)(batch, epoch_id=0)
+
+    snap = t.snapshot()
+    quarantined = [q["path"] for q in snap.quarantine]
+    passed = [e.path for e in t.live_entries() if e.seq == snap.snapshot_id]
+    assert quarantined and passed
+    now = hashes(t.scan())
+    assert len(now) == t.scan().count() == 1000
+    assert all(now[k] == old[k] for k in keys(quarantined))
+    assert all(now[k] == new[k] for k in keys(passed))
+    live_dels = {os.path.basename(p) for p in t.live_delete_paths()}
+    assert len(live_dels) == len(passed)
+    for q in quarantined:
+        assert f"delete-{os.path.basename(q)}" not in live_dels
 
 
 def test_stream_upsert_replayed_epoch_skipped(spark, tmp_path):
