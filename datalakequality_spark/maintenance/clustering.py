@@ -43,7 +43,8 @@ from pyspark.sql import functions as F
 
 from ..functions.spacecurves import with_cluster_bucket, with_cluster_key
 from ..sources.icemini import FileEntry, IceMiniTable, SEQUENCES_SCHEMA
-from .lineage import JobLog, commit_landed, run_tasks
+from . import compaction
+from .lineage import JobLog, run_job
 
 
 def _cluster_and_bucket(
@@ -132,107 +133,6 @@ def _plan_shards(
     ]
 
 
-def _run_shards(
-    table: IceMiniTable,
-    log: JobLog,
-    job_id: str,
-    tasks: list[dict[str, Any]],
-    operation: str,
-    method: str,
-    quality_gate: bool,
-    gate_thresholds: dict[str, Any] | None,
-    max_concurrent: int = 1,
-) -> dict[str, Any]:
-    """Execute rewrite shards: per-shard gate → cluster+sort → fanout
-    write → intent → tagged commit → done. Idempotent on re-run with
-    the same job_id; ``max_concurrent`` > 1 overlaps independent
-    shards' job barriers (run_tasks)."""
-    from .compaction import gate_batch
-
-    def _exec(task: dict[str, Any]) -> dict[str, int]:
-        tid = task["task_id"]
-        inputs = task["input_files"]
-        if log.is_done(tid):
-            return {"skipped": 1}
-        intent = log.intent(tid)
-        if intent is not None and (
-            commit_landed(table, job_id, tid)
-            or not (set(inputs) & table.live_paths())
-        ):
-            log.mark_done(tid, intent)
-            return {"skipped": 1}
-
-        # pin the read snapshot: the rewrite applies the deletes live at
-        # read_v and emits fresh-seq outputs, so the commit must abort
-        # if a newer applicable delete lands in between (otherwise the
-        # outputs would resurrect its rows) — see commit()'s
-        # no_new_deletes_since (Iceberg validateNoNewDeleteFiles)
-        read_v = table.current_version()
-        by_path = {e.path: e for e in table.live_entries(read_v)}
-        live_inputs = [by_path[p] for p in inputs if p in by_path]
-        quarantine: list[dict[str, Any]] = []
-        if quality_gate and live_inputs:
-            clean_bins, quarantine = gate_batch(table, [live_inputs], gate_thresholds)
-            live_inputs = clean_bins[0] if clean_bins else []
-
-        if live_inputs:
-            paths = [table._abs(e.path) for e in live_inputs]
-            clustered = _cluster_and_bucket(
-                table.spark,
-                paths,
-                task.get("method", method),
-                task["num_files"],
-                sum(e.rows for e in live_inputs),
-                schema=table.schema(),  # evolved columns survive rewrites
-                # pending MoR deletes are applied here (outputs take a
-                # fresh seq, so the rewrite physically sheds them; the
-                # last shard's commit then drops the dangling delete
-                # files — metadata-only)
-                df=table.read_files(
-                    [e.path for e in live_inputs], version=read_v
-                ),
-            )
-            new_entries = table.write_data_files(clustered, split_col="__pid")
-        else:
-            new_entries = []
-        record = {
-            "task_id": tid,
-            "input_files": inputs,
-            "output_files": [e.path for e in new_entries],
-            "rows": sum(e.rows for e in new_entries),
-            "tokens": sum(e.token_count for e in new_entries),
-            "quarantined": [q["path"] for q in quarantine],
-        }
-        log.mark_intent(tid, record)
-        table.commit(
-            operation,
-            added=new_entries,
-            removed_paths=inputs,
-            required_paths=inputs,
-            quarantine=quarantine,
-            summary_extra={"maint_job_id": job_id, "maint_task_id": tid},
-            no_new_deletes_since=read_v,
-        )
-        log.mark_done(tid, record)
-        return {
-            "tasks": 1,
-            "new_files": len(new_entries),
-            "quarantined_files": len(quarantine),
-        }
-
-    result = {
-        "job_id": job_id,
-        "tasks": 0,
-        "skipped": 0,
-        "new_files": 0,
-        "quarantined_files": 0,
-    }
-    for out in run_tasks(tasks, _exec, max_concurrent):
-        for k, v in out.items():
-            result[k] += v
-    return result
-
-
 def rewrite_sorted(
     table: IceMiniTable,
     method: str = "zorder",
@@ -273,19 +173,70 @@ def rewrite_sorted(
     strictly ordered execution (deterministic crash-ordering tests).
     """
     job_id = job_id or f"rewrite-{uuid.uuid4().hex[:12]}"
-    log = JobLog(table.root, job_id)
     max_shard_rows = max_shard_rows or 64 * target_rows_per_file
 
-    tasks = log.load_plan()
-    if tasks is None:
-        tasks = _plan_shards(
+    def plan() -> list[dict[str, Any]]:
+        return _plan_shards(
             table.live_entries(), target_rows_per_file, max_shard_rows, method
         )
-        log.write_plan(tasks)
-    return _run_shards(
-        table, log, job_id, tasks, "rewrite-sorted", method,
-        quality_gate, gate_thresholds, max_concurrent_shards,
+
+    def execute(task: dict[str, Any], read_v: int) -> dict[str, Any]:
+        """Per-shard gate → cluster+sort → fanout write. The read is
+        pinned at ``read_v``: the rewrite applies the deletes live there
+        and emits fresh-seq outputs, so the commit must abort if a newer
+        applicable delete lands in between (otherwise the outputs would
+        resurrect its rows) — commit()'s no_new_deletes_since (Iceberg
+        validateNoNewDeleteFiles)."""
+        inputs = task["input_files"]
+        by_path = {e.path: e for e in table.live_entries(read_v)}
+        live_inputs = [by_path[p] for p in inputs if p in by_path]
+        quarantine: list[dict[str, Any]] = []
+        if quality_gate and live_inputs:
+            clean_bins, quarantine = compaction.gate_batch(
+                table, [live_inputs], gate_thresholds
+            )
+            live_inputs = clean_bins[0] if clean_bins else []
+
+        new_entries: list[FileEntry] = []
+        if live_inputs:
+            paths = [table._abs(e.path) for e in live_inputs]
+            clustered = _cluster_and_bucket(
+                table.spark,
+                paths,
+                task.get("method", method),
+                task["num_files"],
+                sum(e.rows for e in live_inputs),
+                schema=table.schema(),  # evolved columns survive rewrites
+                # pending MoR deletes are applied here (outputs take a
+                # fresh seq, so the rewrite physically sheds them; the
+                # last shard's commit then drops the dangling delete
+                # files — metadata-only)
+                df=table.read_files(
+                    [e.path for e in live_inputs], version=read_v
+                ),
+            )
+            new_entries = table.write_data_files(clustered, split_col="__pid")
+        return {
+            "added": new_entries,
+            "removed_paths": inputs,
+            "quarantine": quarantine,
+            "no_new_deletes_since": read_v,
+            "rows": sum(e.rows for e in new_entries),
+            "tokens": sum(e.token_count for e in new_entries),
+        }
+
+    out = run_job(
+        table, JobLog(table.root, job_id), "rewrite-sorted", plan, execute,
+        max_concurrent_shards,
     )
+    ran = [rec for _, rec in out if not rec["skipped"]]
+    return {
+        "job_id": job_id,
+        "tasks": len(ran),
+        "skipped": len(out) - len(ran),
+        "new_files": sum(len(rec["output_files"]) for rec in ran),
+        "quarantined_files": sum(len(rec["quarantined"]) for rec in ran),
+    }
 
 
 def cluster_table(
@@ -296,22 +247,14 @@ def cluster_table(
     max_shard_rows: int | None = None,
     max_concurrent_shards: int = 4,
 ) -> dict[str, Any]:
-    """Space-curve clustering rewrite (no gate) — same sharded,
-    per-shard-resumable, concurrency-bounded executor as
-    ``rewrite_sorted``."""
-    job_id = job_id or f"cluster-{uuid.uuid4().hex[:12]}"
-    log = JobLog(table.root, job_id)
-    max_shard_rows = max_shard_rows or 64 * target_rows_per_file
-
-    tasks = log.load_plan()
-    if tasks is None:
-        tasks = _plan_shards(
-            table.live_entries(), target_rows_per_file, max_shard_rows, method
-        )
-        log.write_plan(tasks)
-    out = _run_shards(
-        table, log, job_id, tasks, "cluster", method, False, None,
-        max_concurrent_shards,
+    """Space-curve clustering rewrite (no gate): ``rewrite_sorted`` with
+    ``quality_gate=False`` — the same sharded, per-shard-resumable,
+    concurrency-bounded job."""
+    return rewrite_sorted(
+        table,
+        method=method,
+        target_rows_per_file=target_rows_per_file,
+        job_id=job_id or f"cluster-{uuid.uuid4().hex[:12]}",
+        max_shard_rows=max_shard_rows,
+        max_concurrent_shards=max_concurrent_shards,
     )
-    out.pop("quarantined_files", None)
-    return out

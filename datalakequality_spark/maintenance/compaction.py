@@ -28,7 +28,7 @@ from typing import Any
 from pyspark.sql import functions as F
 
 from ..sources.icemini import FileEntry, IceMiniTable
-from .lineage import JobLog
+from .lineage import JobLog, run_job, run_tasks
 
 
 def plan_bins(
@@ -93,8 +93,6 @@ def rewrite_bins(
     without applying pending equality deletes — keeping the oldest seq
     means those deletes still apply to the compacted file at scan time,
     so no MoR-deleted row is ever resurrected by a pure bin-pack."""
-    from concurrent.futures import ThreadPoolExecutor
-
     spark = table.spark
     prefix = uuid.uuid4().hex
     sc_cores = spark.sparkContext.defaultParallelism
@@ -111,8 +109,7 @@ def rewrite_bins(
         entry.seq = min((e.seq or 0) for e in members)
         return entry
 
-    with ThreadPoolExecutor(max_workers=workers) as ex:
-        return list(ex.map(lambda ib: one(*ib), enumerate(bins)))
+    return run_tasks(list(enumerate(bins)), lambda ib: one(*ib), workers)
 
 
 def gate_batch(
@@ -189,74 +186,49 @@ def compact_table(
     set, and listed in the commit's quarantine metadata (north_star M5).
     """
     job_id = job_id or f"compact-{uuid.uuid4().hex[:12]}"
-    log = JobLog(table.root, job_id)
 
-    tasks = log.load_plan()
-    if tasks is None:
+    def plan() -> list[dict[str, Any]]:
         bins = plan_bins(
             table.live_entries(),
             target_bytes,
             small_file_bytes,
             delete_entries=table.live_delete_entries(),
         )
-        tasks = []
-        for i in range(0, len(bins), bins_per_batch):
-            batch = bins[i : i + bins_per_batch]
-            tasks.append(
-                {
-                    "task_id": f"batch-{i // bins_per_batch:05d}",
-                    "bins": [[e.to_dict() for e in b] for b in batch],
-                }
-            )
-        log.write_plan(tasks)
+        return [
+            {
+                "task_id": f"batch-{i // bins_per_batch:05d}",
+                "bins": [[e.to_dict() for e in b] for b in bins[i : i + bins_per_batch]],
+            }
+            for i in range(0, len(bins), bins_per_batch)
+        ]
 
-    result = {
-        "job_id": job_id,
-        "batches": 0,
-        "skipped": 0,
-        "rewritten_files": 0,
-        "new_files": 0,
-        "quarantined_files": 0,
-    }
-    for task in tasks:
-        tid = task["task_id"]
+    def execute(task: dict[str, Any], read_v: int) -> dict[str, Any]:
         bins = [[FileEntry.from_dict(d) for d in b] for b in task["bins"]]
         inputs = [e.path for b in bins for e in b]
-        if log.is_done(tid):
-            result["skipped"] += 1
-            continue
-        intent = log.intent(tid)
-        if intent is not None and not (set(inputs) & table.live_paths()):
-            # crashed between commit and ack — the commit landed
-            log.mark_done(tid, intent)
-            result["skipped"] += 1
-            continue
         quarantine: list[dict[str, Any]] = []
         if quality_gate:
             bins, quarantine = gate_batch(table, bins, gate_thresholds)
         new_entries = rewrite_bins(table, bins) if bins else []
-        record = {
-            "task_id": tid,
-            "input_files": inputs,
-            "output_files": [e.path for e in new_entries],
+        # no no_new_deletes_since: outputs keep the inputs' min seq, so
+        # pending and future deletes still apply to them
+        return {
+            "added": new_entries,
+            "removed_paths": inputs,
+            "quarantine": quarantine,
             "rows": sum(e.rows for e in new_entries),
             "tokens": sum(e.token_count for e in new_entries),
-            "quarantined": [q["path"] for q in quarantine],
         }
-        log.mark_intent(tid, record)
-        table.commit(
-            "compact",
-            added=new_entries,
-            removed_paths=inputs,
-            required_paths=inputs,
-            quarantine=quarantine,
-        )
-        log.mark_done(tid, record)
-        result["batches"] += 1
-        result["rewritten_files"] += len(inputs)
-        result["new_files"] += len(new_entries)
-        result["quarantined_files"] += len(quarantine)
-    return result
+
+    out = run_job(table, JobLog(table.root, job_id), "compact", plan, execute)
+    ran = [rec for _, rec in out if not rec["skipped"]]
+    return {
+        "job_id": job_id,
+        "batches": len(ran),
+        "skipped": len(out) - len(ran),
+        "rewritten_files": sum(len(rec["removed_files"]) for rec in ran),
+        "new_files": sum(len(rec["output_files"]) for rec in ran),
+        "quarantined_files": sum(len(rec["quarantined"]) for rec in ran),
+    }
 
 
 def compact_delete_files(
@@ -324,17 +296,15 @@ def compact_delete_files(
     groups empty out — and the clustering rewrite remains the full
     physical shed.
 
-    Resumable under the same ``job_id`` (plan → intent → tagged commit
-    → done)."""
+    Resumable under the same ``job_id``: one lineage task (plan →
+    intent → tagged commit → done, ``lineage.run_job``)."""
     import numpy as np
     import pandas as pd
 
     from ..sources import keybloom as kb
-    from .lineage import commit_landed
 
     spark = table.spark
     job_id = job_id or f"compact-deletes-{uuid.uuid4().hex[:12]}"
-    log = JobLog(table.root, job_id)
 
     result: dict[str, Any] = {
         "job_id": job_id,
@@ -349,162 +319,133 @@ def compact_delete_files(
         "analysis": "bloom",
     }
 
-    tid = "rewrite-deletes"
-    intent = log.intent(tid)
-    if log.is_done(tid) or (
-        intent is not None
-        and (
-            commit_landed(table, job_id, tid)
-            or set(intent["output_files"]) <= table.live_delete_paths()
+    def execute(task: dict[str, Any], read_v: int) -> dict[str, Any]:
+        """Analyze the live backlog into ``result``; commit kwargs only
+        when the rewrite is a win (nothing to commit otherwise)."""
+        dels = table.live_delete_entries()
+        if len(dels) < min_files:
+            return {}
+        result["input_delete_files"] = len(dels)
+        result["input_delete_rows"] = sum(d.rows for d in dels)
+        top_seq = max((d.seq or 0) for d in dels)
+
+        # one scan of the backlog; file → seq via a broadcast relpath join
+        key_schema = "doc_id string"
+        seq_map = spark.createDataFrame(
+            [(table._abs(d.path), int(d.seq or 0)) for d in dels],
+            "____file string, __dseq long",
         )
-    ):
-        if not log.is_done(tid):
-            log.mark_done(tid, intent)
-        result["skipped"] = 1
-        if intent is not None:
-            result.update(intent.get("counts", {}))
-        return result
-
-    dels = table.live_delete_entries()
-    if len(dels) < min_files:
-        result["skipped"] = 1
-        return result
-    result["input_delete_files"] = len(dels)
-    result["input_delete_rows"] = sum(d.rows for d in dels)
-    top_seq = max((d.seq or 0) for d in dels)
-
-    # one scan of the backlog; file → seq via a broadcast relpath join
-    key_schema = "doc_id string"
-    seq_map = spark.createDataFrame(
-        [(table._abs(d.path), int(d.seq or 0)) for d in dels],
-        "____file string, __dseq long",
-    )
-    raw = (
-        spark.read.schema(key_schema)
-        .parquet(*[table._abs(d.path) for d in dels])
-        .select(
-            "doc_id",
-            F.expr(
-                "replace(replace(input_file_name(), 'file://', ''), 'file:', '')"
-            ).alias("____file"),
-        )
-        .join(F.broadcast(seq_map), "____file")
-    )
-    # subsumption: keep each key only at its max delete seq
-    keys = raw.groupBy("doc_id").agg(F.max("__dseq").alias("sk"))
-
-    n_keys = keys.count()
-    groups: list[tuple[int, Any]] = []  # (preset_seq, keys DataFrame/pdf)
-    if n_keys <= max_analysis_keys:
-        kp = keys.select(
-            "doc_id", "sk", F.xxhash64("doc_id").alias("h")
-        ).toPandas()
-        h = kp["h"].to_numpy(dtype=np.int64)
-        sk = kp["sk"].to_numpy(dtype=np.int64)
-        bc = spark.sparkContext.broadcast((h, sk, int(top_seq)))
-        root = table.root
-        live = table.live_entries()
-
-        def _probe(batches):
-            hh, skk, top = bc.value
-            below = np.zeros(len(hh), dtype=bool)
-            window = np.zeros(len(hh), dtype=bool)
-            for pdf in batches:
-                for bp, fseq in zip(pdf["bloom"], pdf["fseq"]):
-                    words = kb.load(os.path.join(root, bp)) if bp else None
-                    mask = (
-                        kb.probe(words, hh)
-                        if words is not None
-                        else np.ones(len(hh), dtype=bool)
-                    )
-                    below |= mask & (fseq < skk)
-                    window |= mask & (fseq >= skk) & (fseq < top)
-            yield pd.DataFrame(
-                {
-                    "below": [np.packbits(below).tobytes()],
-                    "window": [np.packbits(window).tobytes()],
-                }
+        raw = (
+            spark.read.schema(key_schema)
+            .parquet(*[table._abs(d.path) for d in dels])
+            .select(
+                "doc_id",
+                F.expr(
+                    "replace(replace(input_file_name(), 'file://', ''), 'file:', '')"
+                ).alias("____file"),
             )
-
-        files_df = spark.createDataFrame(
-            [(e.key_bloom or "", int(e.seq or 0)) for e in live],
-            "bloom string, fseq long",
-        ).repartition(min(max(len(live), 1), 64))
-        below = np.zeros(len(h), dtype=bool)
-        window = np.zeros(len(h), dtype=bool)
-        for r in files_df.mapInPandas(
-            _probe, "below binary, window binary"
-        ).collect():
-            below |= np.unpackbits(
-                np.frombuffer(r["below"], dtype=np.uint8), count=len(h)
-            ).astype(bool)
-            window |= np.unpackbits(
-                np.frombuffer(r["window"], dtype=np.uint8), count=len(h)
-            ).astype(bool)
-        bc.unpersist()
-
-        dead = ~below
-        lift = below & ~window
-        keep = below & window
-        result["dead_keys_dropped"] = int(dead.sum())
-        result["lifted_keys"] = int(lift.sum())
-        result["kept_keys"] = int(keep.sum())
-        if lift.any():
-            groups.append((top_seq, kp.loc[lift, ["doc_id"]]))
-        if keep.any():
-            for s, sub in kp.loc[keep].groupby("sk"):
-                groups.append((int(s), sub[["doc_id"]]))
-    else:
-        # subsumption-only: one group per surviving distinct seq
-        result["analysis"] = "subsumption-only"
-        result["kept_keys"] = n_keys
-        for row in keys.select("sk").distinct().collect():
-            s = int(row["sk"])
-            groups.append((s, keys.where(F.col("sk") == s).select("doc_id")))
-
-    new_entries: list[FileEntry] = []
-    for preset_seq, g in groups:
-        gdf = (
-            spark.createDataFrame(g, schema=key_schema)
-            if not hasattr(g, "sparkSession")
-            else g
+            .join(F.broadcast(seq_map), "____file")
         )
-        entries = table.write_delete_files(gdf, max_rows_per_file)
-        for e in entries:
-            e.seq = preset_seq  # PRESET — commit must not bump it
-        new_entries.extend(entries)
+        # subsumption: keep each key only at its max delete seq
+        keys = raw.groupBy("doc_id").agg(F.max("__dseq").alias("sk"))
 
-    out_rows = sum(e.rows for e in new_entries)
-    if len(new_entries) >= len(dels) and out_rows >= result["input_delete_rows"]:
-        result["skipped"] = 1  # no win — leave the backlog untouched
-        return result
-    result["output_delete_files"] = len(new_entries)
-    result["output_delete_rows"] = out_rows
+        n_keys = keys.count()
+        groups: list[tuple[int, Any]] = []  # (preset_seq, keys DataFrame/pdf)
+        if n_keys <= max_analysis_keys:
+            kp = keys.select(
+                "doc_id", "sk", F.xxhash64("doc_id").alias("h")
+            ).toPandas()
+            h = kp["h"].to_numpy(dtype=np.int64)
+            sk = kp["sk"].to_numpy(dtype=np.int64)
+            bc = spark.sparkContext.broadcast((h, sk, int(top_seq)))
+            root = table.root
+            live = table.live_entries()
 
-    record = {
-        "task_id": tid,
-        "output_files": [e.path for e in new_entries],
-        "counts": {
-            k: result[k]
-            for k in (
-                "input_delete_files",
-                "output_delete_files",
-                "input_delete_rows",
-                "output_delete_rows",
-                "dead_keys_dropped",
-                "lifted_keys",
-                "kept_keys",
-                "analysis",
+            def _probe(batches):
+                hh, skk, top = bc.value
+                below = np.zeros(len(hh), dtype=bool)
+                window = np.zeros(len(hh), dtype=bool)
+                for pdf in batches:
+                    for bp, fseq in zip(pdf["bloom"], pdf["fseq"]):
+                        words = kb.load(os.path.join(root, bp)) if bp else None
+                        mask = (
+                            kb.probe(words, hh)
+                            if words is not None
+                            else np.ones(len(hh), dtype=bool)
+                        )
+                        below |= mask & (fseq < skk)
+                        window |= mask & (fseq >= skk) & (fseq < top)
+                yield pd.DataFrame(
+                    {
+                        "below": [np.packbits(below).tobytes()],
+                        "window": [np.packbits(window).tobytes()],
+                    }
+                )
+
+            files_df = spark.createDataFrame(
+                [(e.key_bloom or "", int(e.seq or 0)) for e in live],
+                "bloom string, fseq long",
+            ).repartition(min(max(len(live), 1), 64))
+            below = np.zeros(len(h), dtype=bool)
+            window = np.zeros(len(h), dtype=bool)
+            for r in files_df.mapInPandas(
+                _probe, "below binary, window binary"
+            ).collect():
+                below |= np.unpackbits(
+                    np.frombuffer(r["below"], dtype=np.uint8), count=len(h)
+                ).astype(bool)
+                window |= np.unpackbits(
+                    np.frombuffer(r["window"], dtype=np.uint8), count=len(h)
+                ).astype(bool)
+            bc.unpersist()
+
+            dead = ~below
+            lift = below & ~window
+            keep = below & window
+            result["dead_keys_dropped"] = int(dead.sum())
+            result["lifted_keys"] = int(lift.sum())
+            result["kept_keys"] = int(keep.sum())
+            if lift.any():
+                groups.append((top_seq, kp.loc[lift, ["doc_id"]]))
+            if keep.any():
+                for s, sub in kp.loc[keep].groupby("sk"):
+                    groups.append((int(s), sub[["doc_id"]]))
+        else:
+            # subsumption-only: one group per surviving distinct seq
+            result["analysis"] = "subsumption-only"
+            result["kept_keys"] = n_keys
+            for row in keys.select("sk").distinct().collect():
+                s = int(row["sk"])
+                groups.append((s, keys.where(F.col("sk") == s).select("doc_id")))
+
+        new_entries: list[FileEntry] = []
+        for preset_seq, g in groups:
+            gdf = (
+                spark.createDataFrame(g, schema=key_schema)
+                if not hasattr(g, "sparkSession")
+                else g
             )
-        },
-    }
-    log.mark_intent(tid, record)
-    table.commit(
-        "rewrite-deletes",
-        added=[],
-        added_deletes=new_entries,
-        removed_delete_paths=[d.path for d in dels],
-        summary_extra={"maint_job_id": job_id, "maint_task_id": tid},
+            entries = table.write_delete_files(gdf, max_rows_per_file)
+            for e in entries:
+                e.seq = preset_seq  # PRESET — commit must not bump it
+            new_entries.extend(entries)
+
+        out_rows = sum(e.rows for e in new_entries)
+        if len(new_entries) >= len(dels) and out_rows >= result["input_delete_rows"]:
+            return {}  # no win — leave the backlog untouched
+        result["output_delete_files"] = len(new_entries)
+        result["output_delete_rows"] = out_rows
+        return {
+            "added_deletes": new_entries,
+            "removed_delete_paths": [d.path for d in dels],
+            "counts": {k: v for k, v in result.items() if k not in ("job_id", "skipped")},
+        }
+
+    [(_, rec)] = run_job(
+        table, JobLog(table.root, job_id), "rewrite-deletes",
+        lambda: [{"task_id": "rewrite-deletes"}], execute,
     )
-    log.mark_done(tid, record)
+    result.update(rec.get("counts", {}))
+    # skipped: done before this run, or nothing worth committing
+    result["skipped"] = int(rec["skipped"] or not rec["removed_files"])
     return result

@@ -43,7 +43,7 @@ from pyspark.sql import functions as F
 
 from ..sources import keybloom
 from ..sources.icemini import FileEntry, IceMiniTable
-from .lineage import JobLog, commit_landed, run_tasks
+from .lineage import JobLog, run_job
 
 
 def broadcast_threshold_bytes(spark: SparkSession) -> int:
@@ -228,72 +228,20 @@ def merge_into(
     if 0 < est_bytes <= thr_bytes:
         src_keys = F.broadcast(src_keys)
 
-    discovery: dict[str, int] = {}
-    tasks = log.load_plan()
-    if tasks is None:
-        tasks = _plan_merge(
+    discovery: dict[str, int] = {}  # stays empty on a resumed job
+
+    def plan() -> list[dict[str, Any]]:
+        return _plan_merge(
             table, src_keys, kstats, keys_dir, max_batch_files,
             key=key, discovery=discovery, probe_keys=source.select(key),
         )
-        log.write_plan(tasks)
 
-    result: dict[str, Any] = {
-        "job_id": job_id,
-        "discovery": discovery,  # empty on a resumed (pre-planned) job
-        "tasks": 0,
-        "skipped": 0,
-        "input_files": [],
-        "output_files": [],
-        "rows": 0,
-        "tokens": 0,
-        "matched_files": sum(len(t["input_files"]) for t in tasks),
-    }
-    def _inserts_landed(intent: dict[str, Any]) -> bool:
-        """Landed-commit detection for the EMPTY-INPUT insert task, where
-        the inputs-no-longer-live fallback has nothing to check. Snapshot
-        tags can be expired between crash and resume, and re-applying an
-        insert-only commit would DUPLICATE rows, so two further probes:
-        (a) the intent's output files are all still live (the common
-        crash window — commit landed, ack didn't); (b) any inserted key
-        is already present in the table (survives later rewrites that
-        replaced the output files — commits are atomic, so one present
-        key ⇒ the whole insert landed; insert keys were unmatched at
-        plan time, so presence can only come from this commit)."""
-        outs = set(intent.get("output_files", []))
-        if outs and outs <= table.live_paths():
-            return True
-        ins = source
-        if os.path.isdir(keys_dir):
-            matched = spark.read.parquet(keys_dir).select(key)
-            ins = source.join(matched, key, "left_anti")
-        return (
-            ins.select(key)
-            .join(table.scan().select(key), key, "left_semi")
-            .limit(1)
-            .count()
-            > 0
-        )
-
-    def _exec(task: dict[str, Any]) -> dict[str, Any] | None:
-        tid = task["task_id"]
-        inputs: list[str] = task["input_files"]
-        if log.is_done(tid):
-            return None
-        intent = log.intent(tid)
-        if intent is not None and (
-            commit_landed(table, job_id, tid)
-            or (inputs and not (set(inputs) & table.live_paths()))
-            or (not inputs and _inserts_landed(intent))
-        ):
-            log.mark_done(tid, intent)
-            return None
-
-        # pin the read snapshot; the commit aborts if a newer equality
-        # delete applicable to this task's inputs lands in between —
-        # the rewrite's fresh-seq outputs would resurrect its rows
-        # (commit()'s no_new_deletes_since, Iceberg
+    def execute(task: dict[str, Any], read_v: int) -> dict[str, Any]:
+        # the read is pinned at read_v; the commit aborts if a newer
+        # equality delete applicable to this task's inputs lands in
+        # between — the rewrite's fresh-seq outputs would resurrect its
+        # rows (commit()'s no_new_deletes_since, Iceberg
         # validateNoNewDeleteFiles)
-        read_v = table.current_version()
         rewritten = _task_output(
             spark, table, task, source, src_keys, key, keys_dir,
             matched=matched, not_matched_condition=not_matched_condition,
@@ -302,45 +250,60 @@ def merge_into(
         new_entries: list[FileEntry] = (
             table.write_data_files(rewritten) if rewritten is not None else []
         )
-        record = {
-            "task_id": tid,
-            "input_files": inputs,
-            "output_files": [e.path for e in new_entries],
+        # nothing to add and nothing to remove (a source with zero
+        # unmatched keys) commits nothing — no junk empty snapshot
+        return {
+            "added": new_entries,
+            "removed_paths": task["input_files"],
+            "no_new_deletes_since": read_v,
             "rows": sum(e.rows for e in new_entries),
             "tokens": sum(e.token_count for e in new_entries),
         }
-        log.mark_intent(tid, record)
-        if new_entries or inputs:
-            table.commit(
-                "merge",
-                added=new_entries,
-                removed_paths=inputs,
-                required_paths=inputs,
-                summary_extra={"maint_job_id": job_id, "maint_task_id": tid},
-                no_new_deletes_since=read_v,
-            )
-        # else: nothing to add, nothing to remove (a source with zero
-        # unmatched keys) — marking done without a junk empty snapshot
-        log.mark_done(tid, record)
-        return record
+
+    def inserts_landed(task: dict[str, Any], intent: dict[str, Any]) -> bool:
+        """Landed-commit probe for the EMPTY-INPUT insert task, whose
+        snapshot tags can be expired and whose output files rewritten
+        away between crash and resume — re-applying an insert-only
+        commit would DUPLICATE rows. Any inserted key already present in
+        the table proves the insert landed: commits are atomic, and the
+        insert keys were unmatched at plan time, so presence can only
+        come from this commit."""
+        if task["input_files"]:
+            return False
+        ins = source
+        if os.path.isdir(keys_dir):
+            seen = spark.read.parquet(keys_dir).select(key)
+            ins = source.join(seen, key, "left_anti")
+        return (
+            ins.select(key)
+            .join(table.scan().select(key), key, "left_semi")
+            .limit(1)
+            .count()
+            > 0
+        )
 
     # batches + the trailing insert task are mutually independent (the
     # key→batch side-table is pinned at plan time), so they run from a
     # bounded pool — each batch's write tail and commit overlap other
     # batches' joins instead of idling the cluster (lineage.run_tasks)
-    for record in run_tasks(tasks, _exec, max_concurrent_batches):
-        if record is None:
-            result["skipped"] += 1
-            continue
-        result["tasks"] += 1
-        result["input_files"].extend(record["input_files"])
-        result["output_files"].extend(record["output_files"])
-        result["rows"] += record["rows"]
-        result["tokens"] += record["tokens"]
-
+    out = run_job(
+        table, log, "merge", plan, execute, max_concurrent_batches,
+        landed=inserts_landed,
+    )
     source.unpersist()
-    result["snapshot_id"] = table.current_version()
-    return result
+    ran = [rec for _, rec in out if not rec["skipped"]]
+    return {
+        "job_id": job_id,
+        "discovery": discovery,
+        "tasks": len(ran),
+        "skipped": len(out) - len(ran),
+        "input_files": [p for rec in ran for p in rec["removed_files"]],
+        "output_files": [p for rec in ran for p in rec["output_files"]],
+        "rows": sum(rec["rows"] for rec in ran),
+        "tokens": sum(rec["tokens"] for rec in ran),
+        "matched_files": sum(len(task["input_files"]) for task, _ in out),
+        "snapshot_id": table.current_version(),
+    }
 
 
 def _merge_mor(
@@ -377,77 +340,41 @@ def _merge_mor(
 
     Idempotent on crash-resume by construction: re-applying the same
     source writes deletes that supersede the earlier application's
-    rows, leaving exactly one live row per key — the lineage probes
-    below only avoid junk snapshots, they are not load-bearing."""
-    log = JobLog(table.root, job_id)
-
+    rows, leaving exactly one live row per key — the landed-commit
+    detection of ``lineage.run_job`` only avoids junk snapshots, it is
+    not load-bearing."""
     source = table.align_to_schema(source).dropDuplicates([key])
     if salt_partitions:
         source = source.repartition(salt_partitions, F.xxhash64(key, F.lit(42)))
 
-    tasks = log.load_plan()
-    if tasks is None:
-        tasks = [{"task_id": "upsert", "kind": "mor"}]
-        log.write_plan(tasks)
-
-    result: dict[str, Any] = {
-        "job_id": job_id,
-        "mode": "merge_on_read",
-        "skipped": 0,
-        "delete_files": 0,
-        "appended_files": 0,
-        "rows": 0,
-        "tokens": 0,
-        "rewritten_files": 0,  # the point of merge-on-read
-    }
-    for task in tasks:  # exactly one: the commit is O(source) bytes
-        tid = task["task_id"]
-        intent = log.intent(tid)
-        if log.is_done(tid) or (
-            intent is not None
-            and (
-                commit_landed(table, job_id, tid)
-                or (
-                    set(intent["output_files"]) <= table.live_paths()
-                    and set(intent["delete_files"])
-                    <= table.live_delete_paths()
-                )
-            )
-        ):
-            rec = log.intent(tid) or intent
-            if not log.is_done(tid):
-                log.mark_done(tid, rec)
-            result["skipped"] += 1
-            result["delete_files"] += len(rec["delete_files"])
-            result["appended_files"] += len(rec["output_files"])
-            result["rows"] += rec["rows"]
-            result["tokens"] += rec["tokens"]
-            continue
+    def execute(task: dict[str, Any], read_v: int) -> dict[str, Any]:
+        # no required_paths / no_new_deletes_since — see above; an
+        # empty source commits nothing
         data_entries, del_entries = table.write_upsert_files(source)
-        record = {
-            "task_id": tid,
-            "output_files": [e.path for e in data_entries],
-            "delete_files": [e.path for e in del_entries],
+        return {
+            "added": data_entries,
+            "added_deletes": del_entries,
             "rows": sum(e.rows for e in data_entries),
             "tokens": sum(e.token_count for e in data_entries),
         }
-        if data_entries:  # an empty source commits nothing
-            log.mark_intent(tid, record)
-            table.commit(
-                "merge-mor",
-                added=data_entries,
-                added_deletes=del_entries,
-                summary_extra={"maint_job_id": job_id, "maint_task_id": tid},
-            )
-        log.mark_done(tid, record)
-        result["delete_files"] += len(del_entries)
-        result["appended_files"] += len(data_entries)
-        result["rows"] += record["rows"]
-        result["tokens"] += record["tokens"]
 
-    result["source_keys"] = result["rows"]  # one row per deduplicated key
-    result["snapshot_id"] = table.current_version()
-    return result
+    # exactly one task: the commit is O(source) bytes
+    [(_, rec)] = run_job(
+        table, JobLog(table.root, job_id), "merge-mor",
+        lambda: [{"task_id": "upsert", "kind": "mor"}], execute,
+    )
+    return {
+        "job_id": job_id,
+        "mode": "merge_on_read",
+        "skipped": int(rec["skipped"]),
+        "delete_files": len(rec.get("delete_files", [])),
+        "appended_files": len(rec.get("output_files", [])),
+        "rows": rec.get("rows", 0),
+        "tokens": rec.get("tokens", 0),
+        "rewritten_files": 0,  # the point of merge-on-read
+        "source_keys": rec.get("rows", 0),  # one row per deduplicated key
+        "snapshot_id": table.current_version(),
+    }
 
 
 # above this many affected files, task input lists are spilled to a
@@ -515,6 +442,33 @@ def _task_input_count(task: dict[str, Any]) -> int:
     return len(task["input_files"])
 
 
+def _affected_files(
+    table: IceMiniTable,
+    cond,
+    min_n_tok: int | None,
+    max_n_tok: int | None,
+    sources: list[str] | None,
+) -> list[str]:
+    """Sorted relative paths of the live files holding >=1 row matching
+    ``cond``: manifest pruning on the optional ``min_n_tok``/``max_n_tok``/
+    ``sources`` envelope, then ONE distributed job over the surviving
+    candidates via input_file_name()."""
+    candidates = table.prune_entries(
+        table.live_entries(), min_n_tok, max_n_tok, sources
+    )
+    if not candidates:
+        return []
+    hits = (
+        table.spark.read.schema(table.schema())
+        .parquet(*[table._abs(e.path) for e in candidates])
+        .where(cond)
+        .select(F.expr(_FILE_NORM).alias("____file"))
+        .distinct()
+        .collect()
+    )
+    return sorted(os.path.relpath(r["____file"], table.root) for r in hits)
+
+
 def _predicate_rewrite(
     table: IceMiniTable,
     cond,
@@ -543,108 +497,57 @@ def _predicate_rewrite(
        result), each its own conflict-checked, lineage-logged snapshot
        commit — at 10^11-file scale a takedown keeps partial progress
        instead of one all-or-nothing commit, exactly like batched MERGE.
-    4. Batches run from the bounded concurrent pool (lineage.run_tasks);
-       a crashed job resumes idempotently under the same job_id, landed
-       batches skipped.
+    4. Batches run through ``lineage.run_job`` from its bounded
+       concurrent pool; a crashed job resumes idempotently under the
+       same job_id, landed batches skipped.
 
     Returns generic counts (rows_before/rows_after/rewritten_files/
     new_files); the public wrappers rename them.
     """
-    spark = table.spark
     log = JobLog(table.root, job_id)
-    sch = table.schema()
 
-    tasks = log.load_plan()
-    if tasks is None:
-        candidates = table.prune_entries(
-            table.live_entries(), min_n_tok, max_n_tok, sources
-        )
-        affected_rel: list[str] = []
-        if candidates:
-            cand_abs = [table._abs(e.path) for e in candidates]
-            hits = (
-                spark.read.schema(sch)
-                .parquet(*cand_abs)
-                .where(cond)
-                .select(F.expr(_FILE_NORM).alias("____file"))
-                .distinct()
-                .collect()
-            )
-            affected_rel = sorted(
-                os.path.relpath(r["____file"], table.root) for r in hits
-            )
+    def plan() -> list[dict[str, Any]]:
         # zero affected files ⇒ zero tasks: the plan is still pinned (so
         # a resume sees the same no-op), but no empty commit churns a
         # junk snapshot/manifest for every no-match DELETE/UPDATE
-        tasks = _pin_task_inputs(log, affected_rel, max_batch_files, operation)
-        log.write_plan(tasks)
+        affected = _affected_files(table, cond, min_n_tok, max_n_tok, sources)
+        return _pin_task_inputs(log, affected, max_batch_files, operation)
 
     spill_cache: dict[str, list[str]] = {}
 
-    def _exec(task: dict[str, Any]) -> dict[str, Any]:
-        tid = task["task_id"]
-        inputs: list[str] = _task_inputs(log, task, spill_cache)
-        if log.is_done(tid):
-            return {"skipped": 1, **log.intent(tid)["counts"]}
-        intent = log.intent(tid)
-        if intent is not None and (
-            commit_landed(table, job_id, tid)
-            or (inputs and not (set(inputs) & table.live_paths()))
-        ):
-            log.mark_done(tid, intent)
-            return {"skipped": 1, **intent["counts"]}
-
-        new_entries: list[FileEntry] = []
-        read_v = table.current_version()
-        if inputs:
-            # read_files applies pending MoR deletes: the rewrite's
-            # output takes a fresh seq, so a raw read would resurrect
-            # already-deleted rows into the new files; the read is
-            # pinned at read_v and the commit below aborts if a newer
-            # applicable delete lands in between
-            src = table.read_files(inputs, version=read_v)
-            new_entries = table.write_data_files(rewrite(src))
-        by_path = {e.path: e for e in table.live_entries()}
-        counts = {
-            "rewritten_files": len(inputs),
-            "new_files": len(new_entries),
-            "rows_before": sum(by_path[p].rows for p in inputs if p in by_path),
-            "rows_after": sum(e.rows for e in new_entries),
-        }
-        record = {
-            "task_id": tid,
-            # spilled plans keep the range, not the list — intents stay
-            # O(batch outputs) regardless of total affected count
-            **{k: task[k] for k in ("input_files", "file_range") if k in task},
-            "output_files": [e.path for e in new_entries],
-            "counts": counts,
-        }
-        log.mark_intent(tid, record)
-        table.commit(
-            operation,
-            added=new_entries,
-            removed_paths=inputs,
-            required_paths=inputs,
-            summary_extra={"maint_job_id": job_id, "maint_task_id": tid},
-            no_new_deletes_since=read_v,
+    def execute(task: dict[str, Any], read_v: int) -> dict[str, Any]:
+        inputs = _task_inputs(log, task, spill_cache)
+        # read_files applies pending MoR deletes: the rewrite's output
+        # takes a fresh seq, so a raw read would resurrect already-
+        # deleted rows into the new files; the read is pinned at read_v
+        # and the commit aborts if a newer applicable delete lands in
+        # between
+        new_entries = table.write_data_files(
+            rewrite(table.read_files(inputs, version=read_v))
         )
-        log.mark_done(tid, record)
-        return {"skipped": 0, **counts}
+        by_path = {e.path: e for e in table.live_entries(read_v)}
+        return {
+            "added": new_entries,
+            "removed_paths": inputs,
+            "no_new_deletes_since": read_v,
+            "counts": {
+                "rewritten_files": len(inputs),
+                "new_files": len(new_entries),
+                "rows_before": sum(by_path[p].rows for p in inputs if p in by_path),
+                "rows_after": sum(e.rows for e in new_entries),
+            },
+        }
 
-    result = {
+    out = run_job(table, log, operation, plan, execute, max_concurrent)
+    return {
         "job_id": job_id,
-        "affected_files": sum(_task_input_count(t) for t in tasks),
-        "skipped": 0,
-        "rewritten_files": 0,
-        "new_files": 0,
-        "rows_before": 0,
-        "rows_after": 0,
+        "affected_files": sum(_task_input_count(task) for task, _ in out),
+        "skipped": sum(rec["skipped"] for _, rec in out),
+        **{
+            k: sum(rec["counts"][k] for _, rec in out)
+            for k in ("rewritten_files", "new_files", "rows_before", "rows_after")
+        },
     }
-    for out in run_tasks(tasks, _exec, max_concurrent):
-        result["skipped"] += out.get("skipped", 0)
-        for k in ("rewritten_files", "new_files", "rows_before", "rows_after"):
-            result[k] += out.get(k, 0)
-    return result
 
 
 def delete_where(
@@ -726,91 +629,47 @@ def _delete_mor(
     the same validation Iceberg applies to row-delta commits. Resumable
     under the same job_id via the lineage intent/done records; a landed
     commit is re-detected by its snapshot tags or its delete files
-    being live."""
-    spark = table.spark
+    being live, and a re-run whose affected files were rewritten in the
+    meantime raises CommitConflict (re-plan under a new job_id)."""
     log = JobLog(table.root, job_id)
-    sch = table.schema()
 
-    tasks = log.load_plan()
-    if tasks is None:
-        candidates = table.prune_entries(
-            table.live_entries(), min_n_tok, max_n_tok, sources
-        )
-        affected_rel: list[str] = []
-        if candidates:
-            cand_abs = [table._abs(e.path) for e in candidates]
-            hits = (
-                spark.read.schema(sch)
-                .parquet(*cand_abs)
-                .where(cond)
-                .select(F.expr(_FILE_NORM).alias("____file"))
-                .distinct()
-                .collect()
-            )
-            affected_rel = sorted(
-                os.path.relpath(r["____file"], table.root) for r in hits
-            )
-        tasks = (
-            _pin_task_inputs(
-                log, affected_rel, max(1, len(affected_rel)), "delete-mor"
-            )
-            if affected_rel
-            else []
-        )
-        log.write_plan(tasks)
+    def plan() -> list[dict[str, Any]]:
+        affected = _affected_files(table, cond, min_n_tok, max_n_tok, sources)
+        if not affected:
+            return []
+        return _pin_task_inputs(log, affected, len(affected), "delete-mor")
 
-    result: dict[str, Any] = {
-        "job_id": job_id,
-        "mode": "merge_on_read",
-        "affected_files": sum(_task_input_count(t) for t in tasks),
-        "skipped": 0,
-        "rewritten_files": 0,
-        "delete_files": 0,
-        "deleted_rows": 0,
-    }
     spill_cache: dict[str, list[str]] = {}
-    for task in tasks:  # at most one task: the commit is O(keys) bytes
-        tid = task["task_id"]
-        inputs: list[str] = _task_inputs(log, task, spill_cache)
-        intent = log.intent(tid)
-        if log.is_done(tid) or (
-            intent is not None
-            and (
-                commit_landed(table, job_id, tid)
-                or set(intent["output_files"]) <= table.live_delete_paths()
-            )
-        ):
-            rec = log.intent(tid) or intent
-            if not log.is_done(tid):
-                log.mark_done(tid, rec)
-            result["skipped"] += 1
-            result["delete_files"] += len(rec["output_files"])
-            result["deleted_rows"] += rec["deleted_rows"]
-            continue
+
+    def execute(task: dict[str, Any], read_v: int) -> dict[str, Any]:
+        inputs = _task_inputs(log, task, spill_cache)
         # matched keys from affected files only, pending deletes applied
         keys = (
-            table.read_files(inputs).where(cond).select("doc_id").distinct()
+            table.read_files(inputs, version=read_v)
+            .where(cond)
+            .select("doc_id")
+            .distinct()
         )
         entries = table.write_delete_files(keys)
-        record = {
-            "task_id": tid,
-            **{k: task[k] for k in ("input_files", "file_range") if k in task},
-            "output_files": [e.path for e in entries],
+        # the affected files are read, not removed: no removed_paths, and
+        # their liveness says nothing about whether this commit landed
+        return {
+            "added_deletes": entries,
+            "required_paths": inputs,
             "deleted_rows": sum(e.rows for e in entries),
         }
-        log.mark_intent(tid, record)
-        if entries:
-            table.commit(
-                "delete-mor",
-                added=[],
-                added_deletes=entries,
-                required_paths=inputs,
-                summary_extra={"maint_job_id": job_id, "maint_task_id": tid},
-            )
-        log.mark_done(tid, record)
-        result["delete_files"] += len(entries)
-        result["deleted_rows"] += record["deleted_rows"]
-    return result
+
+    # at most one task: the commit is O(keys) bytes
+    out = run_job(table, log, "delete-mor", plan, execute)
+    return {
+        "job_id": job_id,
+        "mode": "merge_on_read",
+        "affected_files": sum(_task_input_count(task) for task, _ in out),
+        "skipped": sum(rec["skipped"] for _, rec in out),
+        "rewritten_files": 0,
+        "delete_files": sum(len(rec["delete_files"]) for _, rec in out),
+        "deleted_rows": sum(rec["deleted_rows"] for _, rec in out),
+    }
 
 
 def update_where(
@@ -1016,14 +875,11 @@ def _plan_merge(
     )
     affected_rel = [os.path.relpath(p, table.root) for p in affected_abs]
 
-    if not affected_abs:
+    if not affected_abs or single or len(affected_abs) <= max_batch_files:
         if not single:
             hits.unpersist()
-        return [{"task_id": "inserts", "input_files": [], "kind": "inserts"}]
-
-    if single or len(affected_abs) <= max_batch_files:
-        if not single:
-            hits.unpersist()
+        if not affected_abs:
+            return [{"task_id": "inserts", "input_files": [], "kind": "inserts"}]
         return [{"task_id": "merge", "input_files": affected_rel, "kind": "single"}]
 
     batches_abs = _chunk(affected_abs, max_batch_files)

@@ -13,8 +13,8 @@ table, not a one-shot layout):
 
     <root>/
       data/<uuid>-c<cell>-<i>.parquet   (immutable; cell in the manifest)
-      v<N>.manifest.json                (codebook + file list + parent)
-      version-hint.text                 (advisory; readers take max vN)
+      v<N>.manifest.json                (codebook + file list + parent;
+                                         readers take max vN)
 
 - ``build``  — train a spherical k-means codebook on a seeded UNBIASED
   Bernoulli sample (not ``limit()`` — that was partition-biased on
@@ -28,8 +28,9 @@ table, not a one-shot layout):
   (and ``max_rows_per_file`` splits hot cells at build time — the
   one-file-per-cell hot-spot nit is gone); per-file cell stats stay
   exact because every file holds exactly one cell.
-- commits are optimistic: version N+1 claimed with O_CREAT|O_EXCL (the
-  filesystem arbitrates); an append validates that the parent snapshot
+- commits are optimistic: version N+1 claimed with ``claim_json`` (temp
+  + hard link: the filesystem arbitrates, and a failed write never
+  takes the version); an append validates that the parent snapshot
   still carries ITS codebook (``codebook_id``) — losing to a concurrent
   rebuild raises CommitConflict, since cells assigned under the old
   codebook are meaningless under the new one. Concurrent appends
@@ -57,7 +58,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .icemini import CommitConflict
+from .icemini import CommitConflict, claim_json
 
 _VMANIFEST_RE = "v{n}.manifest.json"
 
@@ -156,18 +157,8 @@ class AnnIvfIndex:
             return cls(spark, root, json.load(f), v)
 
     def _try_claim(self, version: int, manifest: dict[str, Any]) -> bool:
-        path = self._manifest_path(self.root, version)
-        try:
-            fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-        except FileExistsError:
+        if not claim_json(self._manifest_path(self.root, version), manifest):
             return False
-        with os.fdopen(fd, "w") as f:
-            json.dump(manifest, f)
-        hint = os.path.join(self.root, "version-hint.text")
-        tmp = hint + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(str(version))
-        os.replace(tmp, hint)
         self.manifest, self.version = manifest, version
         return True
 

@@ -61,6 +61,29 @@ SEQUENCES_SCHEMA = T.StructType(
 )
 
 
+def claim_json(path: str, payload: dict[str, Any]) -> bool:
+    """Atomically create ``path`` holding ``payload``: the JSON goes to
+    a temp in the same directory first, then the temp is hard-linked to
+    ``path`` — ``link`` fails if the name exists, so the filesystem
+    arbitrates racing writers, and the name appears only with its full
+    content (a failed write leaves it free). True if this call created
+    it; the temp is always removed."""
+    d, name = os.path.split(path)
+    tmp = os.path.join(d, f".tmp-{name}-{uuid.uuid4().hex}")
+    try:
+        with open(tmp, "w") as f:
+            json.dump(payload, f)
+        os.link(tmp, path)
+    except FileExistsError:
+        return False
+    finally:
+        try:
+            os.unlink(tmp)
+        except FileNotFoundError:
+            pass
+    return True
+
+
 class CommitConflict(Exception):
     """A concurrent commit invalidated this writer's input files."""
 
@@ -418,10 +441,8 @@ class IceMiniTable:
     # ---------------------------------------------------------------- commits
 
     def _try_claim_version(self, version: int, snap: Snapshot) -> bool:
-        """Atomically claim v<version>: write the snapshot to a temp,
-        then hard-link it to its final name — ``link`` fails if the name
-        exists, so the filesystem arbitrates racing committers and the
-        version appears with its full content. True if won."""
+        """Atomically claim v<version> with its full snapshot content
+        (``claim_json``). True if won."""
         path = os.path.join(self.meta_dir, f"v{version}.metadata.json")
         payload = {
             "format_version": 1,
@@ -435,20 +456,8 @@ class IceMiniTable:
             "schema": snap.schema_ddl,
             "delete_manifests": snap.delete_manifests,
         }
-        # the full payload lands in a temp first: a reader (or a crash)
-        # can never see a partially written claimed version
-        tmp = os.path.join(self.meta_dir, f".tmp-v{version}-{uuid.uuid4().hex}")
-        try:
-            with open(tmp, "w") as f:
-                json.dump(payload, f)
-            os.link(tmp, path)
-        except FileExistsError:
+        if not claim_json(path, payload):
             return False
-        finally:
-            try:
-                os.unlink(tmp)
-            except FileNotFoundError:
-                pass
         # advisory hint, atomically replaced
         tmp = os.path.join(self.meta_dir, f".tmp-hint-{uuid.uuid4().hex}")
         with open(tmp, "w") as f:
@@ -1472,20 +1481,17 @@ class IceMiniTable:
         tagged version survives ``expire_snapshots`` until the tag is
         dropped — a training run pins its exact input ("dataset-v3")
         and stays reproducible through table maintenance. One file per
-        tag, O_CREAT|O_EXCL — same atomicity as the commit claim; tags
-        are immutable (drop and re-create to move one)."""
+        tag, created by ``claim_json`` — the same atomic claim as a
+        commit, so a failed create leaves the name free; tags are
+        immutable (drop and re-create to move one)."""
         if not re.fullmatch(r"[A-Za-z0-9._-]+", name):
             raise ValueError(f"invalid tag name {name!r}")
         v = version if version is not None else self.current_version()
         # must reference a retained snapshot
         self.snapshot(v)
         path = os.path.join(self.meta_dir, f"ref-{name}.json")
-        try:
-            fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-        except FileExistsError:
-            raise ValueError(f"tag {name!r} already exists") from None
-        with os.fdopen(fd, "w") as f:
-            json.dump({"name": name, "version": v, "type": "tag"}, f)
+        if not claim_json(path, {"name": name, "version": v, "type": "tag"}):
+            raise ValueError(f"tag {name!r} already exists")
         return v
 
     def tags(self) -> dict[str, int]:
@@ -1495,7 +1501,7 @@ class IceMiniTable:
                 d = json.load(open(p))
                 out[d["name"]] = d["version"]
             except (OSError, ValueError, KeyError):
-                continue  # partially written ref from a crashed create
+                continue  # unreadable ref (dropped concurrently, or torn)
         return out
 
     def drop_tag(self, name: str) -> None:

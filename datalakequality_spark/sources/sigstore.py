@@ -25,12 +25,11 @@ Store layout (the same versioned-manifest lifecycle as the ANN index):
     <root>/
       data/<uuid>-*.parquet     (doc_id, sh, sig) — immutable
       v<N>.manifest.json        file list + MinHash params + parent
-      version-hint.text
 
 MinHash parameters (num_perm, k, bands) are pinned at create time and
 validated on every batch — mixing signature generations would silently
-break banding. Appends commit optimistically (O_CREAT|O_EXCL claim)
-and commute; ``expire`` GCs unreferenced files.
+break banding. Appends commit optimistically (``claim_json``: temp +
+hard link, so a failed write never takes the version) and commute; ``expire`` GCs unreferenced files.
 """
 
 from __future__ import annotations
@@ -43,6 +42,8 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .icemini import claim_json
 
 SIG_SCHEMA = "doc_id string, sh array<long>, sig array<long>"
 
@@ -116,18 +117,8 @@ class MinHashStore:
             return cls(spark, root, json.load(f), v)
 
     def _try_claim(self, version: int, manifest: dict[str, Any]) -> bool:
-        path = self._mpath(self.root, version)
-        try:
-            fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-        except FileExistsError:
+        if not claim_json(self._mpath(self.root, version), manifest):
             return False
-        with os.fdopen(fd, "w") as f:
-            json.dump(manifest, f)
-        hint = os.path.join(self.root, "version-hint.text")
-        tmp = hint + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(str(version))
-        os.replace(tmp, hint)
         self.manifest, self.version = manifest, version
         return True
 

@@ -156,3 +156,38 @@ def test_ann_string_id_append_and_empty_probe(spark, tmp_path):
     nonempty = idx.scan_cells([0, 1, 2])
     assert empty.schema == nonempty.schema
     assert nonempty.count() == 64
+
+
+def test_ann_failed_manifest_write_keeps_index_loadable(spark, tmp_path, monkeypatch):
+    """A fault while an append's manifest is being written never leaves
+    a torn version: the index still loads at its previous version and
+    the next append commits."""
+    import json
+
+    rng = np.random.default_rng(19)
+    root = str(tmp_path / "torn")
+    AnnIvfIndex.build(
+        spark, _vec_df(spark, rng.standard_normal((100, 6))), "id", "v", root,
+        n_centroids=3,
+    )
+    v = AnnIvfIndex.current_version(root)
+    real_dump = json.dump
+
+    def failing_dump(obj, fp, *a, **k):
+        if isinstance(obj, dict) and "codebook_id" in obj:
+            fp.write('{"files": ')
+            raise OSError("simulated fault while writing the manifest")
+        return real_dump(obj, fp, *a, **k)
+
+    idx = AnnIvfIndex.load(spark, root)
+    monkeypatch.setattr(json, "dump", failing_dump)
+    with pytest.raises(OSError, match="simulated"):
+        idx.append(_vec_df(spark, rng.standard_normal((5, 6)), start_id=500))
+    monkeypatch.setattr(json, "dump", real_dump)
+
+    assert AnnIvfIndex.current_version(root) == v
+    again = AnnIvfIndex.load(spark, root)
+    assert sum(f["rows"] for f in again.manifest["files"]) == 100
+    again.append(_vec_df(spark, rng.standard_normal((5, 6)), start_id=500))
+    assert AnnIvfIndex.current_version(root) == v + 1
+    assert sum(f["rows"] for f in AnnIvfIndex.load(spark, root).manifest["files"]) == 105

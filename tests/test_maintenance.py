@@ -190,6 +190,8 @@ def test_crash_resume_idempotent(spark, table, monkeypatch):
         compact_table(table, target_bytes=8 * 1024 * 1024, job_id=job)
     v_after_crash = table.current_version()
     h = _content_hash(table)
+    # the landed compaction snapshot is tagged with its job
+    assert table.snapshot(v_after_crash).summary.get("maint_job_id") == job
 
     monkeypatch.setattr(JobLog, "mark_done", real_mark_done)
     r = compact_table(table, target_bytes=8 * 1024 * 1024, job_id=job)
@@ -1664,3 +1666,71 @@ def _content_hash_at(t: IceMiniTable, v: int) -> int:
         .agg(F.sum(F.pmod(F.xxhash64("doc_id", "tokens", "n_tok", "source"), F.lit(2**31))))
         .collect()[0][0]
     )
+
+
+@pytest.mark.parametrize("mode", ["copy_on_write", "merge_on_read"])
+def test_delete_resume_after_compaction_never_acks_unlanded_commit(
+    spark, tmp_path, monkeypatch, mode
+):
+    """A DELETE that crashed between its intent and its commit, whose
+    input files a compaction then rewrote, must not be acknowledged as
+    landed on resume: the resumed job either raises CommitConflict or
+    leaves no matching row. Input files that are no longer live prove
+    nothing about this job's commit — another job removed them."""
+    from datalakequality_spark.maintenance.merge import delete_where
+
+    t = IceMiniTable.create(spark, str(tmp_path / "dres"))
+    t.append(generate_sequences(spark, 2000), target_file_rows=250)
+    op = "delete" if mode == "copy_on_write" else "delete-mor"
+    real_commit = IceMiniTable.commit
+
+    def crashing_commit(self, operation, *a, **k):
+        if operation == op:
+            raise RuntimeError("simulated crash before commit")
+        return real_commit(self, operation, *a, **k)
+
+    monkeypatch.setattr(IceMiniTable, "commit", crashing_commit)
+    with pytest.raises(RuntimeError, match="before commit"):
+        delete_where(t, "n_tok % 3 = 0", mode=mode, job_id="dres-job")
+    monkeypatch.setattr(IceMiniTable, "commit", real_commit)
+    n_match = t.scan().where("n_tok % 3 = 0").count()
+    assert n_match > 0  # the delete never landed
+
+    compact_table(t, target_bytes=64 * 1024 * 1024)
+    assert t.snapshot().operation == "compact"
+    try:
+        delete_where(t, "n_tok % 3 = 0", mode=mode, job_id="dres-job")
+    except CommitConflict:
+        # refused: the matching rows are untouched, and a new job_id
+        # re-plans against the compacted files
+        assert t.scan().where("n_tok % 3 = 0").count() == n_match
+        delete_where(t, "n_tok % 3 = 0", mode=mode)
+    assert t.scan().where("n_tok % 3 = 0").count() == 0
+    assert t.scan().count() == 2000 - n_match
+
+
+def test_failed_tag_write_leaves_name_free(spark, tmp_path, monkeypatch):
+    """A fault while a tag ref is being written leaves no ref behind:
+    the name is still free and a retry creates the tag."""
+    import json
+
+    t = IceMiniTable.create(spark, str(tmp_path / "tagfail"))
+    t.append(generate_sequences(spark, 200))
+    v = t.current_version()
+    real_dump = json.dump
+
+    def failing_dump(obj, fp, *a, **k):
+        if isinstance(obj, dict) and obj.get("type") == "tag":
+            fp.write('{"name": ')
+            raise OSError("simulated fault while writing the tag")
+        return real_dump(obj, fp, *a, **k)
+
+    monkeypatch.setattr(json, "dump", failing_dump)
+    with pytest.raises(OSError, match="simulated"):
+        t.create_tag("v1")
+    monkeypatch.setattr(json, "dump", real_dump)
+
+    assert t.tags() == {}
+    assert t.create_tag("v1") == v
+    assert t.tags() == {"v1": v}
+    assert not [p for p in os.listdir(t.meta_dir) if p.startswith(".tmp-")]

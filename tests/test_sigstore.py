@@ -121,3 +121,36 @@ def test_store_lifecycle(spark, tmp_path, batches):
         for p in __import__("glob").glob(os.path.join(store.root, "data", "*.parquet"))
     }
     assert on_disk == live
+
+
+def test_store_failed_manifest_write_keeps_store_loadable(
+    spark, tmp_path, batches, monkeypatch
+):
+    """A fault while an append's manifest is being written never leaves
+    a torn version: the store still loads at its previous version and
+    the next append commits."""
+    import json
+
+    a, b = batches
+    store = MinHashStore.create(spark, str(tmp_path / "torn"))
+    store.add_batch(a, "doc_id", "text")
+    v = store.version
+    real_dump = json.dump
+
+    def failing_dump(obj, fp, *a_, **k):
+        if isinstance(obj, dict) and "num_perm" in obj:
+            fp.write('{"files": ')
+            raise OSError("simulated fault while writing the manifest")
+        return real_dump(obj, fp, *a_, **k)
+
+    monkeypatch.setattr(json, "dump", failing_dump)
+    with pytest.raises(OSError, match="simulated"):
+        store.add_batch(b, "doc_id", "text")
+    monkeypatch.setattr(json, "dump", real_dump)
+
+    again = MinHashStore.load(spark, store.root)
+    assert again.version == v
+    assert again.scan().count() == a.count()
+    again.add_batch(b, "doc_id", "text")
+    assert MinHashStore.load(spark, store.root).version == v + 1
+    assert again.scan().count() == a.count() + b.count()
