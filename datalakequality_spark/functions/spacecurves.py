@@ -3,8 +3,11 @@
 OSS Spark SQL has no space-filling-curve expression, so the keys are
 computed in ONE Arrow-vectorized pandas UDF over pure numpy uint64 bit
 ops (no per-row Python, per BASELINE.json input_hint). Inputs are
-prepared JVM-side (xxhash64 of source/doc_id, n_tok scaling), so the
-UDF sees only three integer Series per Arrow batch.
+prepared JVM-side (``curve_inputs``: xxhash64 of source/doc_id, n_tok
+scaling), so the UDF sees only three integer Series per Arrow batch.
+``curve_key`` is the one numpy key of those raw inputs: the UDFs call
+it per batch, and the clustering rewrite calls it on the driver over
+its collected key sample to place the range-bucket bounds.
 
 Dimension encoding for the (source, n_tok, doc_id) clustering required
 by the north_star, 16 bits per dimension:
@@ -23,7 +26,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -99,20 +102,42 @@ def hilbert3(x: np.ndarray, y: np.ndarray, z: np.ndarray, bits: int = BITS) -> n
     return morton3(X[:, 0], X[:, 1], X[:, 2])
 
 
-def _mask16(s: pd.Series) -> np.ndarray:
-    return (s.to_numpy(dtype=np.int64).view(np.uint64)) & np.uint64(0xFFFF)
+def _mask16(x) -> np.ndarray:
+    """Low 16 bits of an int64 Series or array, as uint64."""
+    a = x.to_numpy(dtype=np.int64) if isinstance(x, pd.Series) else np.asarray(x, dtype=np.int64)
+    return a.view(np.uint64) & np.uint64(0xFFFF)
+
+
+_KERNELS = {"zorder": morton3, "hilbert": hilbert3}
+
+
+def curve_inputs(n_tok_clip: int = 8192) -> list[Column]:
+    """The three JVM-computed curve inputs, in key order: xxhash64 of
+    source, n_tok scaled to [0, 65535] over [0, ``n_tok_clip``], and
+    xxhash64 of doc_id. ``curve_key`` turns them into the key."""
+    return [
+        F.xxhash64("source"),
+        (F.least(F.col("n_tok").cast("long"), F.lit(n_tok_clip)) * 65535 / n_tok_clip).cast("long"),
+        F.xxhash64("doc_id"),
+    ]
+
+
+def curve_key(method: str, src_h, ntok16, doc_h) -> np.ndarray:
+    """The int64 curve key of raw ``curve_inputs`` values (Series or
+    int64 arrays): the low 16 bits of each through ``morton3``
+    (``"zorder"``) or ``hilbert3`` (``"hilbert"``). The Arrow UDFs and
+    the rewrite's driver-side bucket sample both call this."""
+    return _KERNELS[method](_mask16(src_h), _mask16(ntok16), _mask16(doc_h)).astype(np.int64)
 
 
 @F.pandas_udf(T.LongType())
 def _zorder_key_udf(src_h: pd.Series, ntok16: pd.Series, doc_h: pd.Series) -> pd.Series:
-    k = morton3(_mask16(src_h), _mask16(ntok16), _mask16(doc_h))
-    return pd.Series(k.astype(np.int64))
+    return pd.Series(curve_key("zorder", src_h, ntok16, doc_h))
 
 
 @F.pandas_udf(T.LongType())
 def _hilbert_key_udf(src_h: pd.Series, ntok16: pd.Series, doc_h: pd.Series) -> pd.Series:
-    k = hilbert3(_mask16(src_h), _mask16(ntok16), _mask16(doc_h))
-    return pd.Series(k.astype(np.int64))
+    return pd.Series(curve_key("hilbert", src_h, ntok16, doc_h))
 
 
 def with_cluster_key(
@@ -123,11 +148,8 @@ def with_cluster_key(
 ) -> DataFrame:
     """Add the clustering key column. JVM prepares the three int dims;
     one pandas UDF interleaves them."""
-    src_h = F.xxhash64("source")
-    ntok16 = F.least(F.col("n_tok").cast("long"), F.lit(n_tok_clip)) * 65535 / n_tok_clip
-    doc_h = F.xxhash64("doc_id")
     udf = {"zorder": _zorder_key_udf, "hilbert": _hilbert_key_udf}[method]
-    return df.withColumn(key_col, udf(src_h, ntok16.cast("long"), doc_h))
+    return df.withColumn(key_col, udf(*curve_inputs(n_tok_clip)))
 
 
 def with_cluster_bucket(
@@ -150,23 +172,21 @@ def with_cluster_bucket(
     the UDF (one broadcast-sized numpy array per python worker, ~8 B per
     output file).
     """
-    kernel = {"zorder": morton3, "hilbert": hilbert3}[method]
+    if method not in _KERNELS:  # fail here, not inside a task
+        raise KeyError(method)
     b = np.asarray(sorted(bounds), dtype=np.int64)
 
     @F.pandas_udf("key long, pid int")
     def _key_and_bucket(
         src_h: pd.Series, ntok16: pd.Series, doc_h: pd.Series
     ) -> pd.DataFrame:
-        k = kernel(_mask16(src_h), _mask16(ntok16), _mask16(doc_h)).astype(np.int64)
+        k = curve_key(method, src_h, ntok16, doc_h)
         pid = np.searchsorted(b, k, side="left").astype(np.int32)
         return pd.DataFrame({"key": k, "pid": pid})
 
-    src_h = F.xxhash64("source")
-    ntok16 = F.least(F.col("n_tok").cast("long"), F.lit(n_tok_clip)) * 65535 / n_tok_clip
-    doc_h = F.xxhash64("doc_id")
     tmp = "__kb"
     return (
-        df.withColumn(tmp, _key_and_bucket(src_h, ntok16.cast("long"), doc_h))
+        df.withColumn(tmp, _key_and_bucket(*curve_inputs(n_tok_clip)))
         .withColumn(key_col, F.col(f"{tmp}.key"))
         .withColumn(pid_col, F.col(f"{tmp}.pid"))
         .drop(tmp)

@@ -9,13 +9,21 @@ Output files are range-ordered on the curve key with tight per-file
 (source, n_tok, doc_id) min/max stats, which is exactly what
 manifest-level pruning (IceMiniTable.prune_entries) needs.
 
+Each shard runs ONE light planning job, then ONE heavy pass. The
+planning job scans only ``doc_id``, ``n_tok`` and ``source`` of the
+shard's raw input files, grouped by ``input_file_name()``: per file it
+computes the quality gate's aggregates (``plans/quality_gate``, when
+gated) and collects a hash-sampled list of the three JVM-computed
+curve inputs (``spacecurves.curve_inputs``). The driver turns the rows
+into gate verdicts, drops the samples of quarantined files and takes
+the bucket bounds as quantiles of the surviving samples' keys, from
+the same numpy kernel the Arrow UDF runs (``spacecurves.curve_key``) —
+no Python UDF and no second scan before the heavy pass.
+
 Why not ``repartitionByRange`` directly: Spark's range exchange runs a
 separate sampling job over the FULL child plan — here that means
 decoding every token array and evaluating the curve UDF over all rows
-twice. Sampling the three light key dims first (column pruning keeps
-the tokens column untouched) and bucketing by the sampled quantile
-bounds gets the same layout for one heavy pass plus one ~1% sample
-pass. Bucket sizes stay balanced because bounds come from quantiles of
+twice. Bucket sizes stay balanced because bounds come from quantiles of
 the key itself (skew-resistant by construction), and AQE is free to
 coalesce the hash exchange into fewer, fuller write tasks without
 changing the file count.
@@ -38,45 +46,92 @@ from __future__ import annotations
 import uuid
 from typing import Any
 
-from pyspark.sql import DataFrame
+import numpy as np
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.spacecurves import with_cluster_bucket, with_cluster_key
-from ..sources.icemini import FileEntry, IceMiniTable, SEQUENCES_SCHEMA
+from ..functions.spacecurves import curve_inputs, curve_key, with_cluster_bucket
+from ..plans.quality_gate import gate_aggregates, gate_verdicts
+from ..sources.icemini import FileEntry, IceMiniTable, local_path
 from . import compaction
 from .lineage import JobLog, run_job
 
+# ~500 sampled keys per output file bound the bucket-size error well
+# below the parquet row-group size
+_SAMPLE_ROWS_PER_FILE = 500
+_SAMPLE_BITS = 20
 
-def _cluster_and_bucket(
-    spark,
-    paths: list[str],
+
+def _sampled(frac: float) -> Column:
+    """Deterministic ~``frac`` row sample: ``pmod(xxhash64(doc_id, 42),
+    2^20) < frac·2^20``. The seed decorrelates it from the curve key's
+    own doc_id hash, so the sample is not skewed along that dimension."""
+    return F.pmod(F.xxhash64(F.col("doc_id"), F.lit(42)), F.lit(1 << _SAMPLE_BITS)) < F.lit(
+        int(frac * (1 << _SAMPLE_BITS))
+    )
+
+
+def _plan_shard(
+    table: IceMiniTable,
+    entries: list[FileEntry],
     method: str,
     num_files: int,
-    total_rows: int,
-    schema=None,
-    df: DataFrame | None = None,
-) -> DataFrame:
-    """Add the curve key to ``df`` (or a raw read of ``paths``) and
-    return a DataFrame hash-partitioned on a ``__pid`` range-bucket
-    column and sorted by (``__pid``, key) within partitions — ready for
-    the fanout writer (``write_data_files(..., split_col="__pid")``).
+    quality_gate: bool,
+    gate_thresholds: dict[str, Any] | None,
+) -> tuple[list[dict[str, Any]], list[int]]:
+    """The shard's planning job: (quarantine records, bucket bounds).
 
-    Bucket bounds are ``num_files``-quantiles of the curve key over a
-    seeded sample of the three key dims only (pruned scan: token arrays
-    are never decoded in the sample pass).
-    """
-    if df is None:
-        df = spark.read.schema(schema or SEQUENCES_SCHEMA).parquet(*paths)
+    ONE grouped aggregation over the light columns of the RAW input
+    files (merge-on-read deletes are not applied — the gate judges
+    files as written, and a few deleted rows in the key sample do not
+    move the bounds). Per file it computes the gate aggregates (when
+    ``quality_gate``) and collects the curve inputs of a hash-sampled
+    ~``_SAMPLE_ROWS_PER_FILE`` rows per output file (the whole shard
+    when it is that small). Bounds are the ``num_files``-quantiles of
+    the clean files' sampled keys; no job runs when there is neither a
+    gate nor more than one bucket."""
+    if not (quality_gate or num_files > 1):
+        return [], []
+    if quality_gate:
+        paths, tokens_nulls, global_stats = compaction.gate_setup(table, entries)
+    else:
+        paths = [table._abs(e.path) for e in entries]
+    df = (
+        table.spark.read.schema(table.schema())
+        .parquet(*paths)
+        .select("doc_id", "n_tok", "source", F.input_file_name().alias("__file"))
+    )
+    aggs = gate_aggregates(df, global_stats) if quality_gate else []
+    if num_files > 1:
+        total = sum(e.rows for e in entries)
+        frac = _SAMPLE_ROWS_PER_FILE * num_files / max(total, 1)
+        dims = F.struct(*curve_inputs())
+        # collect_list skips the nulls of unsampled rows
+        aggs.append(F.collect_list(dims if frac >= 1 else F.when(_sampled(frac), dims)).alias("__sample"))
+    rows = df.groupBy("__file").agg(*aggs).collect()
+
+    quarantine = (
+        compaction.quarantine_records(table, gate_verdicts(rows, gate_thresholds, tokens_nulls))
+        if quality_gate
+        else []
+    )
     bounds: list[int] = []
     if num_files > 1:
-        # ~500 sampled keys per bucket bounds the bucket-size error well
-        # below the parquet row-group size; cap the sample at full scan
-        frac = min(1.0, (num_files * 500) / max(total_rows, 1))
-        dims = df.select("source", "n_tok", "doc_id").sample(frac, seed=42)
-        skeys = with_cluster_key(dims, method=method)
-        qs = [i / num_files for i in range(1, num_files)]
-        raw = skeys.approxQuantile("__cluster_key", qs, 0.25 / num_files)
-        bounds = sorted({int(b) for b in raw})
+        bad = {table._abs(q["path"]) for q in quarantine}
+        sample = [d for r in rows if local_path(r["__file"]) not in bad for d in r["__sample"]]
+        if sample:
+            dims_np = np.array(sample, dtype=np.int64).reshape(-1, 3)
+            keys = curve_key(method, dims_np[:, 0], dims_np[:, 1], dims_np[:, 2])
+            qs = [i / num_files for i in range(1, num_files)]
+            bounds = sorted({int(b) for b in np.quantile(keys, qs)})
+    return quarantine, bounds
+
+
+def _cluster_and_bucket(df: DataFrame, bounds: list[int], method: str) -> DataFrame:
+    """Add the curve key and range-bucket id (by ``bounds``) to ``df``
+    and return it hash-partitioned on the ``__pid`` bucket column and
+    sorted by (``__pid``, key) within partitions — ready for the fanout
+    writer (``write_data_files(..., split_col="__pid")``)."""
     # key + bucket id in ONE Arrow pass (np.searchsorted over the
     # closure-captured bounds — O(log #buckets)/row; a Column-expression
     # linear scan over the bounds array would be O(#buckets)/row, which
@@ -153,13 +208,16 @@ def rewrite_sorted(
     dominant cost (shuffle + parquet encode + disk). This fusion keeps
     both operators' semantics — output files are ~target-sized (the
     packing) and range-ordered on the (source, n_tok, doc_id) curve key
-    with tight per-file min/max stats (the clustering) — for one read,
-    one range exchange, one sorted write per shard.
+    with tight per-file min/max stats (the clustering) — for one heavy
+    read, one range exchange, one sorted write per shard.
 
-    With ``quality_gate=True`` the per-file gate runs over each shard's
-    inputs first (same grouped aggregation as compaction's gate_batch)
-    and failing files are quarantined out of the rewrite and the live
-    set.
+    Before the heavy pass each shard runs ONE planning job over the
+    light columns of its inputs (``_plan_shard``): it yields the range
+    bucket bounds from a hash sample of curve keys and, with
+    ``quality_gate=True``, the per-file gate verdicts — the same
+    aggregates and verdicts as compaction's ``gate_batch``. Failing
+    files are quarantined out of the rewrite and the live set, and
+    their rows do not count toward the bounds.
 
     Resumable per SHARD: the plan bin-packs input files into groups of
     ≤ ``max_shard_rows`` rows (default 64 output files' worth); each
@@ -168,7 +226,7 @@ def rewrite_sorted(
 
     ``max_concurrent_shards`` shards run at once (Iceberg
     RewriteDataFiles' max-concurrent-file-group-rewrites): each shard's
-    serial barriers — quantile sample job, write tail, commit — overlap
+    serial barriers — planning job, write tail, commit — overlap
     other shards' compute instead of idling the cluster. Set 1 for
     strictly ordered execution (deterministic crash-ordering tests).
     """
@@ -181,41 +239,37 @@ def rewrite_sorted(
         )
 
     def execute(task: dict[str, Any], read_v: int) -> dict[str, Any]:
-        """Per-shard gate → cluster+sort → fanout write. The read is
+        """Per-shard planning job (gate + bucket bounds) → cluster+sort
+        → fanout write. The heavy read is
         pinned at ``read_v``: the rewrite applies the deletes live there
         and emits fresh-seq outputs, so the commit must abort if a newer
         applicable delete lands in between (otherwise the outputs would
         resurrect its rows) — commit()'s no_new_deletes_since (Iceberg
         validateNoNewDeleteFiles)."""
         inputs = task["input_files"]
+        curve = task.get("method", method)
         by_path = {e.path: e for e in table.live_entries(read_v)}
         live_inputs = [by_path[p] for p in inputs if p in by_path]
         quarantine: list[dict[str, Any]] = []
-        if quality_gate and live_inputs:
-            clean_bins, quarantine = compaction.gate_batch(
-                table, [live_inputs], gate_thresholds
+        bounds: list[int] = []
+        if live_inputs:
+            quarantine, bounds = _plan_shard(
+                table, live_inputs, curve, task["num_files"], quality_gate, gate_thresholds
             )
-            live_inputs = clean_bins[0] if clean_bins else []
+            bad = {q["path"] for q in quarantine}
+            live_inputs = [e for e in live_inputs if e.path not in bad]
 
         new_entries: list[FileEntry] = []
         if live_inputs:
-            paths = [table._abs(e.path) for e in live_inputs]
-            clustered = _cluster_and_bucket(
-                table.spark,
-                paths,
-                task.get("method", method),
-                task["num_files"],
-                sum(e.rows for e in live_inputs),
-                schema=table.schema(),  # evolved columns survive rewrites
-                # pending MoR deletes are applied here (outputs take a
-                # fresh seq, so the rewrite physically sheds them; the
-                # last shard's commit then drops the dangling delete
-                # files — metadata-only)
-                df=table.read_files(
-                    [e.path for e in live_inputs], version=read_v
-                ),
+            # pending MoR deletes are applied here (outputs take a fresh
+            # seq, so the rewrite physically sheds them; the last
+            # shard's commit then drops the dangling delete files —
+            # metadata-only)
+            df = table.read_files([e.path for e in live_inputs], version=read_v)
+            new_entries = table.write_data_files(
+                _cluster_and_bucket(df, bounds, curve),
+                split_col="__pid",
             )
-            new_entries = table.write_data_files(clustered, split_col="__pid")
         return {
             "added": new_entries,
             "removed_paths": inputs,

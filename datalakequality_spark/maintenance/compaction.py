@@ -27,7 +27,7 @@ from typing import Any
 
 from pyspark.sql import functions as F
 
-from ..sources.icemini import FileEntry, IceMiniTable
+from ..sources.icemini import FileEntry, IceMiniTable, local_path
 from .lineage import JobLog, run_job, run_tasks
 
 
@@ -112,62 +112,73 @@ def rewrite_bins(
     return run_tasks(list(enumerate(bins)), lambda ib: one(*ib), workers)
 
 
+def gate_setup(
+    table: IceMiniTable, entries: list[FileEntry]
+) -> tuple[list[str], dict[str, int], tuple[float, float] | None]:
+    """The gate's driver-side inputs for ``entries``: their absolute
+    paths, the tokens array's footer null counts by path (the array is
+    never scanned), and the global n_tok (mean, pop-std) from manifest
+    moments (Σn_tok, Σn_tok² are in the file stats — saves the gate's
+    global-agg data pass). The denominator counts non-null n_tok only
+    (Spark aggs skip nulls), so the n_tok null totals come from the same
+    footer reads; if any entry predates the moments the stats are None
+    and the gate computes them in one tiny job."""
+    import math
+
+    from ..plans.quality_gate import parquet_null_counts
+
+    paths = [table._abs(e.path) for e in entries]
+    moments = bool(entries) and all(e.sum_sq_n_tok is not None for e in entries)
+    nulls = parquet_null_counts(paths, ["tokens", "n_tok"] if moments else ["tokens"])
+    global_stats = None
+    if moments:
+        n = sum(e.rows for e in entries) - sum(nulls["n_tok"].values())
+        if n > 0:
+            mean = sum(e.token_count for e in entries) / n
+            var = sum(e.sum_sq_n_tok for e in entries) / n - mean * mean
+            global_stats = (mean, math.sqrt(max(var, 0.0)))
+    return paths, nulls["tokens"], global_stats
+
+
+def quarantine_records(
+    table: IceMiniTable, metrics: dict[str, dict[str, Any]]
+) -> list[dict[str, Any]]:
+    """Snapshot quarantine records (relative path, reasons, rows,
+    tokens) of the failing files in per-file gate ``metrics``, sorted
+    by path."""
+    bad = sorted(
+        (os.path.relpath(p, table.root), m) for p, m in metrics.items() if m["quarantined"]
+    )
+    return [
+        {"path": rel, "reasons": m["reasons"], "rows": m["rows"], "tokens": m["tokens"]}
+        for rel, m in bad
+    ]
+
+
 def gate_batch(
     table: IceMiniTable, bins: list[list[FileEntry]], thresholds: dict[str, Any] | None
 ) -> tuple[list[list[FileEntry]], list[dict[str, Any]]]:
     """Run the per-file quality gate (plans/quality_gate.gate_files) over
     one batch's input files — ONE grouped aggregation — and split out
     quarantined files. Returns (clean bins, quarantine records)."""
-    import math
+    from ..plans.quality_gate import gate_files
 
-    from ..plans.quality_gate import gate_files, parquet_null_counts
-
-    entries = [e for b in bins for e in b]
-    paths = [table._abs(e.path) for b in bins for e in b]
-    tokens_nulls = parquet_null_counts(paths, "tokens")
-    # global z-score stats from manifest moments (Σn_tok, Σn_tok² are in
-    # the file stats) — saves the gate's global-agg data pass. The
-    # denominator must count non-null n_tok only (Spark aggs skip
-    # nulls), so the n_tok null totals come from parquet footers; any
-    # entry from a pre-moments manifest falls back to the in-pass agg.
-    global_stats = None
-    if entries and all(e.sum_sq_n_tok is not None for e in entries):
-        ntok_nulls = parquet_null_counts(paths, "n_tok")
-        n = sum(e.rows for e in entries) - sum(ntok_nulls.values())
-        if n > 0:
-            mean = sum(e.token_count for e in entries) / n
-            var = sum(e.sum_sq_n_tok for e in entries) / n - mean * mean
-            global_stats = (mean, math.sqrt(max(var, 0.0)))
+    paths, tokens_nulls, global_stats = gate_setup(table, [e for b in bins for e in b])
     # scan only the light columns (doc_id for PII, n_tok for outliers);
     # the tokens array's null counts come from parquet footer stats
     df = (
         table.spark.read.schema(table.schema())
         .parquet(*paths)
-        .select(
-            "doc_id",
-            "n_tok",
-            F.expr(
-                "replace(replace(input_file_name(), 'file://', ''), 'file:', '')"
-            ).alias("__file"),
-        )
+        .select("doc_id", "n_tok", F.input_file_name().alias("__file"))
     )
-    metrics = gate_files(df, thresholds, tokens_nulls, global_stats)
-    bad = {
-        os.path.relpath(p, table.root): m
-        for p, m in metrics.items()
-        if m["quarantined"]
-    }
-    if not bad:
+    records = quarantine_records(
+        table, gate_files(df, thresholds, tokens_nulls, global_stats)
+    )
+    if not records:
         return bins, []
-    clean_bins = [
-        [e for e in b if e.path not in bad] for b in bins
-    ]
-    clean_bins = [b for b in clean_bins if b]
-    records = [
-        {"path": rel, "reasons": m["reasons"], "rows": m["rows"], "tokens": m["tokens"]}
-        for rel, m in sorted(bad.items())
-    ]
-    return clean_bins, records
+    bad = {r["path"] for r in records}
+    clean_bins = [[e for e in b if e.path not in bad] for b in bins]
+    return [b for b in clean_bins if b], records
 
 
 def compact_table(
@@ -329,23 +340,20 @@ def compact_delete_files(
         result["input_delete_rows"] = sum(d.rows for d in dels)
         top_seq = max((d.seq or 0) for d in dels)
 
-        # one scan of the backlog; file → seq via a broadcast relpath join
+        # one scan of the backlog; file → seq via a broadcast join on
+        # the file URI exactly as input_file_name() spells it
         key_schema = "doc_id string"
+        scan = spark.read.schema(key_schema).parquet(
+            *[table._abs(d.path) for d in dels]
+        )
+        uri = {local_path(u): u for u in scan.inputFiles()}
         seq_map = spark.createDataFrame(
-            [(table._abs(d.path), int(d.seq or 0)) for d in dels],
+            [(uri[table._abs(d.path)], int(d.seq or 0)) for d in dels],
             "____file string, __dseq long",
         )
-        raw = (
-            spark.read.schema(key_schema)
-            .parquet(*[table._abs(d.path) for d in dels])
-            .select(
-                "doc_id",
-                F.expr(
-                    "replace(replace(input_file_name(), 'file://', ''), 'file:', '')"
-                ).alias("____file"),
-            )
-            .join(F.broadcast(seq_map), "____file")
-        )
+        raw = scan.select(
+            "doc_id", F.input_file_name().alias("____file")
+        ).join(F.broadcast(seq_map), "____file")
         # subsumption: keep each key only at its max delete seq
         keys = raw.groupBy("doc_id").agg(F.max("__dseq").alias("sk"))
 

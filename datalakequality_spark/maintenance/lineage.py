@@ -110,7 +110,7 @@ def run_tasks(
     Tasks are independent by construction (disjoint input-file groups,
     per-task lineage records, optimistic snapshot commits that retry on
     lost races), so concurrent submission only overlaps their Spark
-    jobs' barriers — per-shard sample pass, write tail, commit — which
+    jobs' barriers — per-shard planning job, write tail, commit — which
     otherwise leave the cluster idle between serial shards. Results come
     back in task order; on failure every in-flight task settles first
     (landed commits stand — resume skips them) and the first error, in

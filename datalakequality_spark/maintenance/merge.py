@@ -42,7 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources import keybloom
-from ..sources.icemini import FileEntry, IceMiniTable
+from ..sources.icemini import FileEntry, IceMiniTable, local_path
 from .lineage import JobLog, run_job
 
 
@@ -80,9 +80,6 @@ def _max_partition_bytes(spark: SparkSession) -> int:
 
 def _chunk(items: list, size: int) -> list[list]:
     return [items[i : i + size] for i in range(0, len(items), size)]
-
-
-_FILE_NORM = "replace(replace(input_file_name(), 'file://', ''), 'file:', '')"
 
 
 def _validate_clauses(
@@ -462,11 +459,13 @@ def _affected_files(
         table.spark.read.schema(table.schema())
         .parquet(*[table._abs(e.path) for e in candidates])
         .where(cond)
-        .select(F.expr(_FILE_NORM).alias("____file"))
+        .select(F.input_file_name().alias("____file"))
         .distinct()
         .collect()
     )
-    return sorted(os.path.relpath(r["____file"], table.root) for r in hits)
+    return sorted(
+        os.path.relpath(local_path(r["____file"]), table.root) for r in hits
+    )
 
 
 def _predicate_rewrite(
@@ -864,16 +863,20 @@ def _plan_merge(
     tgt = (
         spark.read.schema(table.schema())
         .parquet(*cand_abs)
-        .select(key, F.expr(_FILE_NORM).alias("____file"))
+        .select(key, F.input_file_name().alias("____file"))
     )
     hits = tgt.join(src_keys, key, "inner")
     single = max_batch_files is None
     if not single:
         hits = hits.persist()  # feeds both the distinct and the min-file agg
+    # file URIs as Spark spells them: the batch join below matches on
+    # these strings; only the manifest paths are decoded
     affected_abs = sorted(
         r["____file"] for r in hits.select("____file").distinct().collect()
     )
-    affected_rel = [os.path.relpath(p, table.root) for p in affected_abs]
+    affected_rel = [
+        os.path.relpath(local_path(p), table.root) for p in affected_abs
+    ]
 
     if not affected_abs or single or len(affected_abs) <= max_batch_files:
         if not single:

@@ -15,7 +15,9 @@ history persist. The engine flavor:
   aggregation over ``input_file_name()`` and returns quarantine
   decisions — this is what compaction calls inside each pass
   (north_star: "quality gates that run inside each compaction pass and
-  quarantine failing files").
+  quarantine failing files"). Its two halves, ``gate_aggregates`` and
+  ``gate_verdicts``, also run inside the sorted rewrite's planning job,
+  next to the curve-key sample.
 """
 
 from __future__ import annotations
@@ -24,7 +26,7 @@ import math
 from datetime import datetime, timezone
 from typing import Any
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.narration import build_alerts, build_explanations, generate_insights
@@ -36,6 +38,7 @@ from ..operators.profiling import numeric_columns, profile_dataset, string_colum
 from ..operators.schema_change import detect_schema_changes
 from ..operators.scoring import compute_quality_score
 from ..operators.autofix import build_autofix
+from ..sources.icemini import local_path
 from ..sources.state import StateStore
 
 
@@ -221,71 +224,65 @@ def run_quality_gate(
 # ------------------------------------------------------- per-file gate (M5)
 
 
-def parquet_null_counts(paths: list[str], column: str) -> dict[str, int]:
-    """Exact per-file null counts for one column, read from the parquet
-    FOOTER statistics only — the column's data pages are never touched.
-    This is how the gate checks the (large) tokens array for nulls
-    without scanning it. O(#files) metadata reads, driver-side; at very
-    large file counts distribute with sc.parallelize over the path list.
+def parquet_null_counts(
+    paths: list[str], columns: list[str]
+) -> dict[str, dict[str, int]]:
+    """Exact per-file null counts of ``columns`` as ``{column: {path:
+    nulls}}``, read from the parquet FOOTER statistics only — the
+    columns' data pages are never touched, and each footer is read once
+    for all columns. This is how the gate checks the (large) tokens
+    array for nulls without scanning it. O(#files) metadata reads,
+    driver-side; at very large file counts distribute with
+    sc.parallelize over the path list.
     """
     from concurrent.futures import ThreadPoolExecutor
 
     import pyarrow.parquet as pq
 
-    def one(p: str) -> int:
+    def one(p: str) -> dict[str, int]:
         md = pq.ParquetFile(p).metadata
-        idx = md.schema.names.index(column) if column in md.schema.names else None
-        total = 0
-        if idx is not None:
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(idx).statistics
-                if st is None or st.null_count is None:
-                    total = None
-                    break
-                total += st.null_count
-        if total is None:
+        out: dict[str, int] = {}
+        for column in columns:
+            idx = md.schema.names.index(column) if column in md.schema.names else None
+            total = 0
+            if idx is not None:
+                for rg in range(md.num_row_groups):
+                    st = md.row_group(rg).column(idx).statistics
+                    if st is None or st.null_count is None:
+                        total = None
+                        break
+                    total += st.null_count
+            out[column] = total
+        unknown = [c for c, n in out.items() if n is None]
+        if unknown:
             # a file without row-group stats (rare — Spark always writes
             # them) must NOT silently pass the null gate: fall back to an
-            # exact count by reading just this column of this file
-            total = pq.read_table(p, columns=[column]).column(0).null_count
-        return total
+            # exact count by reading just those columns of this file
+            t = pq.read_table(p, columns=unknown)
+            out.update({c: t.column(c).null_count for c in unknown})
+        return out
 
     # footer reads release the GIL in Arrow — a thread pool turns this
     # serial driver loop into parallel metadata I/O
-    out: dict[str, int] = {}
+    out: dict[str, dict[str, int]] = {c: {} for c in columns}
     with ThreadPoolExecutor(max_workers=min(16, max(1, len(paths)))) as ex:
-        for p, total in zip(paths, ex.map(one, paths)):
-            out[p] = total
+        for p, counts in zip(paths, ex.map(one, paths)):
+            for c, n in counts.items():
+                out[c][p] = n
     return out
 
 
-def gate_files(
-    df_with_file: DataFrame,
-    thresholds: dict[str, Any] | None = None,
-    extra_null_counts: dict[str, int] | None = None,
-    global_stats: tuple[float, float] | None = None,
-) -> dict[str, dict[str, Any]]:
-    """Per-FILE quality metrics in ONE grouped aggregation over
-    ``__file`` (populated from input_file_name() by the caller), plus
-    quarantine decisions.
-
-    Metrics per file over the sequences schema: row count, null
-    n_tok/tokens (tokens nulls come from ``extra_null_counts`` — footer
-    stats — so the array column is never scanned), n_tok z-outliers vs
-    the GLOBAL distribution, doc_id PII regex hits. A file is
-    quarantined when any threshold is exceeded — failing files are
-    excluded from the maintenance commit and listed in the snapshot's
-    quarantine metadata.
-    """
-    thr = {
-        "max_null_ratio": 0.0,  # sequences contract: tokens/n_tok required
-        "max_outlier_ratio": 0.10,
-        "max_pii_ratio": 0.05,
-        **(thresholds or {}),
-    }
-    # global n_tok mean/pop-std for the z-outlier term: from the
-    # caller's manifest moments when available (zero data passes —
-    # Σn_tok and Σn_tok² live in the file stats), else one tiny job
+def gate_aggregates(
+    df_with_file: DataFrame, global_stats: tuple[float, float] | None = None
+) -> list[Column]:
+    """The gate's per-file aggregate columns — ``rows``, ``nulls``
+    (n_tok), ``outliers`` (n_tok z > 3 against the GLOBAL distribution),
+    ``pii_rows`` (doc_id PII regex hits) and ``tokens`` — to run in a
+    ``groupBy("__file")`` over the light columns ``doc_id`` and
+    ``n_tok``. The global n_tok mean/pop-std come from ``global_stats``
+    (the caller's manifest moments: zero data passes — Σn_tok and
+    Σn_tok² live in the file stats), else from one tiny job over
+    ``df_with_file``."""
     if global_stats is not None:
         gmean, gstd = global_stats
     else:
@@ -303,22 +300,37 @@ def gate_files(
     pii_hit = sum(
         (F.col("doc_id").rlike(p).cast("int") for _, p in PII_TYPES), F.lit(0)
     ) > 0
-    rows = (
-        df_with_file.groupBy("__file")
-        .agg(
-            F.count(F.lit(1)).alias("rows"),
-            F.sum(F.col("n_tok").isNull().cast("long")).alias("nulls"),
-            F.sum(z_out.cast("long")).alias("outliers"),
-            F.sum(pii_hit.cast("long")).alias("pii_rows"),
-            F.sum("n_tok").alias("tokens"),
-        )
-        .collect()
-    )
+    return [
+        F.count(F.lit(1)).alias("rows"),
+        F.sum(F.col("n_tok").isNull().cast("long")).alias("nulls"),
+        F.sum(z_out.cast("long")).alias("outliers"),
+        F.sum(pii_hit.cast("long")).alias("pii_rows"),
+        F.sum("n_tok").alias("tokens"),
+    ]
+
+
+def gate_verdicts(
+    rows: list,
+    thresholds: dict[str, Any] | None = None,
+    extra_null_counts: dict[str, int] | None = None,
+) -> dict[str, dict[str, Any]]:
+    """Quarantine decisions from collected ``gate_aggregates`` rows,
+    keyed by file path (``__file`` holds ``input_file_name()`` URIs and
+    is decoded here). ``extra_null_counts`` — footer null counts of the
+    tokens array, by path — count toward the null ratio. A file is
+    quarantined when any threshold is exceeded."""
+    thr = {
+        "max_null_ratio": 0.0,  # sequences contract: tokens/n_tok required
+        "max_outlier_ratio": 0.10,
+        "max_pii_ratio": 0.05,
+        **(thresholds or {}),
+    }
     extra = extra_null_counts or {}
     out: dict[str, dict[str, Any]] = {}
     for r in rows:
+        path = local_path(r["__file"])
         n = max(int(r["rows"]), 1)
-        null_ratio = max(int(r["nulls"] or 0), extra.get(r["__file"], 0)) / n
+        null_ratio = max(int(r["nulls"] or 0), extra.get(path, 0)) / n
         outlier_ratio = int(r["outliers"] or 0) / n
         pii_ratio = int(r["pii_rows"] or 0) / n
         reasons = []
@@ -330,7 +342,7 @@ def gate_files(
             )
         if pii_ratio > thr["max_pii_ratio"]:
             reasons.append(f"pii_ratio {pii_ratio:.4f} > {thr['max_pii_ratio']}")
-        out[r["__file"]] = {
+        out[path] = {
             "rows": int(r["rows"]),
             "tokens": int(r["tokens"] or 0),
             "null_ratio": null_ratio,
@@ -340,3 +352,29 @@ def gate_files(
             "reasons": reasons,
         }
     return out
+
+
+def gate_files(
+    df_with_file: DataFrame,
+    thresholds: dict[str, Any] | None = None,
+    extra_null_counts: dict[str, int] | None = None,
+    global_stats: tuple[float, float] | None = None,
+) -> dict[str, dict[str, Any]]:
+    """Per-FILE quality metrics in ONE grouped aggregation over
+    ``__file`` (``input_file_name()``, set by the caller), plus
+    quarantine decisions, keyed by file path.
+
+    Metrics per file over the sequences schema: row count, null
+    n_tok/tokens (tokens nulls come from ``extra_null_counts`` — footer
+    stats — so the array column is never scanned), n_tok z-outliers vs
+    the GLOBAL distribution, doc_id PII regex hits. A file is
+    quarantined when any threshold is exceeded — failing files are
+    excluded from the maintenance commit and listed in the snapshot's
+    quarantine metadata.
+    """
+    rows = (
+        df_with_file.groupBy("__file")
+        .agg(*gate_aggregates(df_with_file, global_stats))
+        .collect()
+    )
+    return gate_verdicts(rows, thresholds, extra_null_counts)

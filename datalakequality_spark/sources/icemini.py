@@ -44,6 +44,7 @@ import time
 import uuid
 from dataclasses import asdict, dataclass, field
 from typing import Any, Iterable
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -59,6 +60,15 @@ SEQUENCES_SCHEMA = T.StructType(
         T.StructField("source", T.StringType(), True),
     ]
 )
+
+
+def local_path(uri: str) -> str:
+    """The filesystem path behind an ``input_file_name()`` URI:
+    ``file:///a%20b/x.parquet`` → ``/a b/x.parquet``. Spark percent-
+    encodes the path, so a table root holding a space or ``%`` only
+    matches its manifest paths once decoded; ``unquote`` keeps a literal
+    ``+`` (Spark's ``url_decode`` would turn it into a space)."""
+    return unquote(urlparse(uri).path)
 
 
 def claim_json(path: str, payload: dict[str, Any]) -> bool:
@@ -216,7 +226,8 @@ class IceMiniTable:
         hint_path = os.path.join(self.meta_dir, "version-hint.text")
         best = 0
         try:
-            best = int(open(hint_path).read().strip())
+            with open(hint_path) as f:
+                best = int(f.read().strip())
         except (OSError, ValueError):
             best = 0
         # hint may lag (crash between snapshot write and hint update): scan up.
@@ -236,7 +247,8 @@ class IceMiniTable:
     def snapshot(self, version: int | None = None) -> Snapshot:
         v = version if version is not None else self.current_version()
         path = os.path.join(self.meta_dir, f"v{v}.metadata.json")
-        d = json.load(open(path))
+        with open(path) as f:
+            d = json.load(f)
         return Snapshot(
             snapshot_id=d["snapshot_id"],
             parent_snapshot_id=d.get("parent_snapshot_id"),
@@ -406,7 +418,8 @@ class IceMiniTable:
         return df.select(*cols)
 
     def _read_manifest(self, name: str) -> list[FileEntry]:
-        d = json.load(open(os.path.join(self.meta_dir, name)))
+        with open(os.path.join(self.meta_dir, name)) as f:
+            d = json.load(f)
         return [FileEntry.from_dict(e) for e in d["entries"]]
 
     def _write_manifest(self, entries: list[FileEntry]) -> str:
@@ -658,9 +671,7 @@ class IceMiniTable:
         )
         out = []
         for r in rows:
-            # input_file_name returns a URI (file:///...)
-            p = r["file"]
-            p = p[7:] if p.startswith("file://") else p
+            p = local_path(r["file"])
             rel = os.path.relpath(p, self.root)
             out.append(
                 FileEntry(
@@ -1498,7 +1509,8 @@ class IceMiniTable:
         out = {}
         for p in glob.glob(os.path.join(self.meta_dir, "ref-*.json")):
             try:
-                d = json.load(open(p))
+                with open(p) as f:
+                    d = json.load(f)
                 out[d["name"]] = d["version"]
             except (OSError, ValueError, KeyError):
                 continue  # unreadable ref (dropped concurrently, or torn)

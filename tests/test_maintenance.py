@@ -1734,3 +1734,140 @@ def test_failed_tag_write_leaves_name_free(spark, tmp_path, monkeypatch):
     assert t.create_tag("v1") == v
     assert t.tags() == {"v1": v}
     assert not [p for p in os.listdir(t.meta_dir) if p.startswith(".tmp-")]
+
+
+def _planted_table(spark, root: str) -> tuple[IceMiniTable, dict[str, str]]:
+    """4,000 clean rows in 500-row files, plus one file each with null
+    token arrays, PII doc_ids and n_tok outliers. Returns the table and
+    the path of each planted file by kind."""
+    t = IceMiniTable.create(spark, root)
+    t.append(generate_sequences(spark, 4000), target_file_rows=500)
+    planted = {
+        "null_tokens": generate_sequences(
+            spark, 300, start_id=10**9, with_tokens=False
+        ),
+        "pii": generate_sequences(spark, 300, start_id=2 * 10**9).withColumn(
+            "doc_id", F.concat(F.col("doc_id"), F.lit("+leak@example.com"))
+        ),
+        "outliers": generate_sequences(spark, 200, start_id=3 * 10**9).withColumn(
+            "n_tok", F.lit(50_000)
+        ),
+    }
+    paths = {}
+    for kind, df in planted.items():
+        before = set(t.live_paths())
+        t.append(df.coalesce(1), target_file_rows=None)
+        [paths[kind]] = set(t.live_paths()) - before
+    return t, paths
+
+
+def test_gated_rewrite_quarantines_what_gate_batch_names(spark, tmp_path):
+    """The rewrite's planning job and ``gate_batch`` run the same gate:
+    a gated rewrite_sorted quarantines exactly the files gate_batch
+    names, with the same reasons, and the rewritten table holds exactly
+    the clean files' rows."""
+    from datalakequality_spark.maintenance.compaction import gate_batch
+
+    t, planted = _planted_table(spark, str(tmp_path / "parity"))
+    _, want = gate_batch(t, [t.live_entries()], None)
+    bad = {q["path"] for q in want}
+    # the null-tokens file is judged by footer null counts alone; the
+    # rewrite must agree with gate_batch on it either way
+    assert {planted["pii"], planted["outliers"]} <= bad
+    clean = [p for p in t.live_paths() if p not in bad]
+    h_clean = (
+        t.read_files(clean)
+        .agg(F.sum(F.pmod(F.xxhash64("doc_id", "tokens", "n_tok", "source"), F.lit(2**31))))
+        .collect()[0][0]
+    )
+
+    r = rewrite_sorted(t, target_rows_per_file=1000, quality_gate=True)
+    got = sorted((q for s in t.snapshots() for q in s.quarantine), key=lambda q: q["path"])
+    assert r["tasks"] == 1 and r["new_files"] > 1
+    assert got == want
+    assert _content_hash(t) == h_clean
+
+
+def test_gated_rewrite_shard_runs_at_most_four_jobs(spark, tmp_path):
+    """A gated single-shard rewrite runs one planning job (gate
+    aggregates and the curve-key sample, one scan of the light
+    columns) before its key+bucket pass and sorted write: at most four
+    Spark jobs, where a separate gate job and sample job made six."""
+    t, _ = _planted_table(spark, str(tmp_path / "jobs"))
+    sc = spark.sparkContext
+    group = "gated-rewrite-job-count"
+    sc.setJobGroup(group, "gated rewrite_sorted")
+    try:
+        r = rewrite_sorted(t, target_rows_per_file=1000, quality_gate=True)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert r["tasks"] == 1 and r["quarantined_files"] >= 2
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= 4, jobs
+
+
+def test_maintenance_under_a_root_that_needs_uri_escaping(spark, tmp_path):
+    """input_file_name() percent-encodes file paths (``sp%20ace``), so a
+    table whose root holds a space and a ``%`` must decode them before
+    matching manifest paths: the gated compaction and the gated rewrite
+    each drop the planted file's rows, MERGE finds its target files,
+    and the delete-backlog consolidation keeps the scan content."""
+    from datalakequality_spark.maintenance.compaction import (
+        compact_delete_files,
+    )
+    from datalakequality_spark.maintenance.merge import delete_where
+
+    root = tmp_path / "sp ace%20+x"
+    bad = generate_sequences(spark, 400, start_id=10**9).withColumn(
+        "doc_id", F.concat(F.col("doc_id"), F.lit("+leak@example.com"))
+    )
+
+    def build(name: str) -> IceMiniTable:
+        t = IceMiniTable.create(spark, str(root / name))
+        t.append(generate_sequences(spark, 4000), target_file_rows=500)
+        t.append(bad.coalesce(1), target_file_rows=None)
+        return t
+
+    t = build("compact")
+    r = compact_table(t, target_bytes=8 * 1024 * 1024, quality_gate=True)
+    assert r["quarantined_files"] == 1
+    assert t.scan().count() == 4000
+
+    t = build("rewrite")
+    r = rewrite_sorted(t, target_rows_per_file=1000, quality_gate=True)
+    assert r["quarantined_files"] == 1
+    assert t.scan().count() == 4000
+
+    merge_into(t, generate_merge_batch(spark, 4000, insert_rows=400))
+    assert t.scan().count() == 4400
+    assert t.scan().select("doc_id").distinct().count() == 4400
+
+    delete_where(t, "n_tok % 5 = 0", mode="merge_on_read")
+    delete_where(t, "n_tok % 7 = 0", mode="merge_on_read")
+    n, h = t.scan().count(), _content_hash(t)
+    assert n < 4400
+    r = compact_delete_files(t)
+    assert r["output_delete_rows"] > 0
+    assert t.scan().count() == n and _content_hash(t) == h
+
+
+def test_metadata_reads_close_their_files(spark, tmp_path):
+    """Metadata reads leave no file handle to the garbage collector."""
+    import gc
+    import warnings
+
+    t = IceMiniTable.create(spark, str(tmp_path / "handles"))
+    t.append(generate_sequences(spark, 200, with_tokens=False))
+    t.create_tag("v1")
+    gc.collect()
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always", ResourceWarning)
+        t.current_version()
+        snap = t.snapshot()
+        t._read_manifest(snap.manifests[0])
+        t.tags()
+        t.live_entries()
+        gc.collect()
+    leaks = [w for w in caught if issubclass(w.category, ResourceWarning)]
+    assert not leaks, [str(w.message) for w in leaks]

@@ -139,7 +139,8 @@ def test_cluster_and_bucket_one_exchange_one_udf(spark, tmp_path):
 
     path = str(tmp_path / "seq")
     generate_sequences(spark, 2000).write.parquet(path)
-    out = _cluster_and_bucket(spark, [path], "zorder", num_files=8, total_rows=2000)
+    bounds = [i << 45 for i in range(1, 8)]  # 8 buckets over the 48-bit key
+    out = _cluster_and_bucket(spark.read.parquet(path), bounds, "zorder")
     plan = _plan(out)
     assert plan.count("ArrowEvalPython") == 1
     assert plan.count("Exchange") == 1
