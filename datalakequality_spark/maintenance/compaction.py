@@ -27,7 +27,7 @@ from typing import Any
 
 from pyspark.sql import functions as F
 
-from ..sources.icemini import FileEntry, IceMiniTable, local_path
+from ..sources.icemini import FileEntry, IceMiniTable
 from .lineage import JobLog, run_job, run_tasks
 
 
@@ -112,32 +112,41 @@ def rewrite_bins(
     return run_tasks(list(enumerate(bins)), lambda ib: one(*ib), workers)
 
 
+def _null_rows(table: IceMiniTable, e: FileEntry, column: str) -> int:
+    """Null rows of ``column`` in one data file: the writer's manifest
+    stat, else (files written before it) an exact count of that one
+    column of that one file."""
+    n = getattr(e, f"null_{column}")
+    if n is None:
+        import pyarrow.parquet as pq
+
+        n = pq.read_table(table._abs(e.path), columns=[column]).column(column).null_count
+    return n
+
+
 def gate_setup(
     table: IceMiniTable, entries: list[FileEntry]
 ) -> tuple[list[str], dict[str, int], tuple[float, float] | None]:
     """The gate's driver-side inputs for ``entries``: their absolute
-    paths, the tokens array's footer null counts by path (the array is
-    never scanned), and the global n_tok (mean, pop-std) from manifest
-    moments (Σn_tok, Σn_tok² are in the file stats — saves the gate's
-    global-agg data pass). The denominator counts non-null n_tok only
-    (Spark aggs skip nulls), so the n_tok null totals come from the same
-    footer reads; if any entry predates the moments the stats are None
-    and the gate computes them in one tiny job."""
+    paths, the tokens array's null rows by path (from the manifest —
+    the array is never scanned), and the global n_tok (mean, pop-std)
+    from manifest moments (Σn_tok, Σn_tok² are in the file stats —
+    saves the gate's global-agg data pass). The denominator counts
+    non-null n_tok only (Spark aggs skip nulls), so the n_tok null
+    rows come from the manifest too; if any entry predates the moments
+    the stats are None and the gate computes them in one tiny job."""
     import math
 
-    from ..plans.quality_gate import parquet_null_counts
-
     paths = [table._abs(e.path) for e in entries]
-    moments = bool(entries) and all(e.sum_sq_n_tok is not None for e in entries)
-    nulls = parquet_null_counts(paths, ["tokens", "n_tok"] if moments else ["tokens"])
+    tokens_nulls = {p: _null_rows(table, e, "tokens") for p, e in zip(paths, entries)}
     global_stats = None
-    if moments:
-        n = sum(e.rows for e in entries) - sum(nulls["n_tok"].values())
+    if entries and all(e.sum_sq_n_tok is not None for e in entries):
+        n = sum(e.rows - _null_rows(table, e, "n_tok") for e in entries)
         if n > 0:
             mean = sum(e.token_count for e in entries) / n
             var = sum(e.sum_sq_n_tok for e in entries) / n - mean * mean
             global_stats = (mean, math.sqrt(max(var, 0.0)))
-    return paths, nulls["tokens"], global_stats
+    return paths, tokens_nulls, global_stats
 
 
 def quarantine_records(
@@ -165,7 +174,7 @@ def gate_batch(
 
     paths, tokens_nulls, global_stats = gate_setup(table, [e for b in bins for e in b])
     # scan only the light columns (doc_id for PII, n_tok for outliers);
-    # the tokens array's null counts come from parquet footer stats
+    # the tokens array's null rows come from the manifest
     df = (
         table.spark.read.schema(table.schema())
         .parquet(*paths)
@@ -253,9 +262,9 @@ def compact_delete_files(
     ``rewrite_position_delete_files`` maintenance action re-expressed
     for equality deletes. Trickle merge-on-read upserts append one or
     more small delete files per commit; every scan's anti-join then
-    fans in over the whole backlog, and the applicable-delete grouping
-    in ``_read_with_deletes`` fragments into more (scan, anti-join)
-    pairs. This action rewrites the backlog into the fewest delete
+    builds its delete side from the whole backlog, so the broadcast
+    grows with it until it no longer fits the threshold and the read
+    shuffles. This action rewrites the backlog into the fewest delete
     files that preserve scan semantics EXACTLY, in three steps:
 
     1. **Subsumption** (always, fully distributed): a delete at seq S
@@ -340,22 +349,18 @@ def compact_delete_files(
         result["input_delete_rows"] = sum(d.rows for d in dels)
         top_seq = max((d.seq or 0) for d in dels)
 
-        # one scan of the backlog; file → seq via a broadcast join on
-        # the file URI exactly as input_file_name() spells it
+        # one scan of the backlog, each key with its file's seq
+        # (``file_seq``: an expression, no joined file→seq relation);
+        # subsumption: keep each key only at its max delete seq
         key_schema = "doc_id string"
         scan = spark.read.schema(key_schema).parquet(
             *[table._abs(d.path) for d in dels]
         )
-        uri = {local_path(u): u for u in scan.inputFiles()}
-        seq_map = spark.createDataFrame(
-            [(uri[table._abs(d.path)], int(d.seq or 0)) for d in dels],
-            "____file string, __dseq long",
+        keys = (
+            scan.select("doc_id", table.file_seq(scan, dels).alias("sk"))
+            .groupBy("doc_id")
+            .agg(F.max("sk").alias("sk"))
         )
-        raw = scan.select(
-            "doc_id", F.input_file_name().alias("____file")
-        ).join(F.broadcast(seq_map), "____file")
-        # subsumption: keep each key only at its max delete seq
-        keys = raw.groupBy("doc_id").agg(F.max("__dseq").alias("sk"))
 
         n_keys = keys.count()
         groups: list[tuple[int, Any]] = []  # (preset_seq, keys DataFrame/pdf)

@@ -224,54 +224,6 @@ def run_quality_gate(
 # ------------------------------------------------------- per-file gate (M5)
 
 
-def parquet_null_counts(
-    paths: list[str], columns: list[str]
-) -> dict[str, dict[str, int]]:
-    """Exact per-file null counts of ``columns`` as ``{column: {path:
-    nulls}}``, read from the parquet FOOTER statistics only — the
-    columns' data pages are never touched, and each footer is read once
-    for all columns. This is how the gate checks the (large) tokens
-    array for nulls without scanning it. O(#files) metadata reads,
-    driver-side; at very large file counts distribute with
-    sc.parallelize over the path list.
-    """
-    from concurrent.futures import ThreadPoolExecutor
-
-    import pyarrow.parquet as pq
-
-    def one(p: str) -> dict[str, int]:
-        md = pq.ParquetFile(p).metadata
-        out: dict[str, int] = {}
-        for column in columns:
-            idx = md.schema.names.index(column) if column in md.schema.names else None
-            total = 0
-            if idx is not None:
-                for rg in range(md.num_row_groups):
-                    st = md.row_group(rg).column(idx).statistics
-                    if st is None or st.null_count is None:
-                        total = None
-                        break
-                    total += st.null_count
-            out[column] = total
-        unknown = [c for c, n in out.items() if n is None]
-        if unknown:
-            # a file without row-group stats (rare — Spark always writes
-            # them) must NOT silently pass the null gate: fall back to an
-            # exact count by reading just those columns of this file
-            t = pq.read_table(p, columns=unknown)
-            out.update({c: t.column(c).null_count for c in unknown})
-        return out
-
-    # footer reads release the GIL in Arrow — a thread pool turns this
-    # serial driver loop into parallel metadata I/O
-    out: dict[str, dict[str, int]] = {c: {} for c in columns}
-    with ThreadPoolExecutor(max_workers=min(16, max(1, len(paths)))) as ex:
-        for p, counts in zip(paths, ex.map(one, paths)):
-            for c, n in counts.items():
-                out[c][p] = n
-    return out
-
-
 def gate_aggregates(
     df_with_file: DataFrame, global_stats: tuple[float, float] | None = None
 ) -> list[Column]:
@@ -316,8 +268,8 @@ def gate_verdicts(
 ) -> dict[str, dict[str, Any]]:
     """Quarantine decisions from collected ``gate_aggregates`` rows,
     keyed by file path (``__file`` holds ``input_file_name()`` URIs and
-    is decoded here). ``extra_null_counts`` — footer null counts of the
-    tokens array, by path — count toward the null ratio. A file is
+    is decoded here). ``extra_null_counts`` — null rows of the tokens
+    array, by path, from the manifest — count toward the null ratio. A file is
     quarantined when any threshold is exceeded."""
     thr = {
         "max_null_ratio": 0.0,  # sequences contract: tokens/n_tok required
@@ -365,8 +317,8 @@ def gate_files(
     quarantine decisions, keyed by file path.
 
     Metrics per file over the sequences schema: row count, null
-    n_tok/tokens (tokens nulls come from ``extra_null_counts`` — footer
-    stats — so the array column is never scanned), n_tok z-outliers vs
+    n_tok/tokens (tokens nulls come from ``extra_null_counts`` — the
+    writer's manifest stats — so the array column is never scanned), n_tok z-outliers vs
     the GLOBAL distribution, doc_id PII regex hits. A file is
     quarantined when any threshold is exceeded — failing files are
     excluded from the maintenance commit and listed in the snapshot's

@@ -30,8 +30,8 @@ hint update is harmless — readers take ``max(vN present)``).
 
 Scale notes: all metadata ops are O(#files) driver-side, the same cost
 class as Iceberg's own planning. Data ops are single Spark jobs; per-file
-stats are computed distributed via one ``groupBy(input_file_name())``
-aggregation, never by reading files on the driver.
+stats are computed by the writer tasks from the Arrow batches they
+write, never by reading files on the driver.
 """
 
 from __future__ import annotations
@@ -46,7 +46,7 @@ from dataclasses import asdict, dataclass, field
 from typing import Any, Iterable
 from urllib.parse import unquote, urlparse
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -101,8 +101,10 @@ class CommitConflict(Exception):
 def applicable_delete_paths(entry, deletes) -> frozenset:
     """The equality-delete files that apply to a data file: delete seq
     strictly greater than the file's seq (rows older than the delete)
-    AND overlapping doc_id range. Shared by the scan-side anti-join
-    grouping and compaction's bin classes (files may only be bin-packed
+    AND overlapping doc_id range. The scan reads only the delete files
+    that apply to some data file it reads (``_read_with_deletes``), the
+    changelog finds the files whose visibility a commit can change, and
+    compaction's bin classes use it (files may only be bin-packed
     together when this set is identical — then preserving the min
     member seq cannot change which deletes apply)."""
     eseq = entry.seq or 0
@@ -152,6 +154,13 @@ class FileEntry:
     # written before the sketch existed or by external writers; probes
     # treat missing sidecars as "maybe" so pruning stays conservative
     key_bloom: str | None = None
+    # null ROWS of the tokens array and of n_tok, counted by the writer
+    # from its Arrow batches (``ListArray.null_count`` counts null
+    # lists, not empty lists or null elements — a parquet footer's
+    # list-leaf null count mixes all three). The quality gate reads
+    # them from here; None on files written before these stats existed
+    null_tokens: int | None = None
+    null_n_tok: int | None = None
 
     def to_dict(self) -> dict[str, Any]:
         return asdict(self)
@@ -646,50 +655,6 @@ class IceMiniTable:
     def _abs(self, rel: str) -> str:
         return os.path.join(self.root, rel)
 
-    def compute_file_stats(self, abs_paths: list[str]) -> list[FileEntry]:
-        """Per-file stats via ONE distributed aggregation over
-        input_file_name() — never reads data on the driver."""
-        if not abs_paths:
-            return []
-        df = self.spark.read.schema(self.schema()).parquet(*abs_paths)
-        rows = (
-            df.groupBy(F.input_file_name().alias("file"))
-            .agg(
-                F.count(F.lit(1)).alias("rows"),
-                F.sum("n_tok").cast("long").alias("token_count"),
-                F.sum(F.col("n_tok").cast("long") * F.col("n_tok").cast("long")).alias(
-                    "sum_sq_n_tok"
-                ),
-                F.min("n_tok").alias("min_n_tok"),
-                F.max("n_tok").alias("max_n_tok"),
-                F.min("source").alias("min_source"),
-                F.max("source").alias("max_source"),
-                F.min("doc_id").alias("min_doc_id"),
-                F.max("doc_id").alias("max_doc_id"),
-            )
-            .collect()
-        )
-        out = []
-        for r in rows:
-            p = local_path(r["file"])
-            rel = os.path.relpath(p, self.root)
-            out.append(
-                FileEntry(
-                    path=rel,
-                    rows=int(r["rows"]),
-                    token_count=int(r["token_count"] or 0),
-                    size_bytes=os.path.getsize(p),
-                    min_n_tok=r["min_n_tok"],
-                    max_n_tok=r["max_n_tok"],
-                    min_source=r["min_source"],
-                    max_source=r["max_source"],
-                    min_doc_id=r["min_doc_id"],
-                    max_doc_id=r["max_doc_id"],
-                    sum_sq_n_tok=int(r["sum_sq_n_tok"] or 0),
-                )
-            )
-        return out
-
     def write_data_files(
         self,
         df: DataFrame,
@@ -723,8 +688,9 @@ class IceMiniTable:
         ONE distributed job — the Iceberg writer-task model (Spark's
         SparkWrite/DataWriter returns DataFile structs with stats): each
         task streams its Arrow batches through pyarrow ParquetWriters and
-        emits one stats row per file (rows, token sum, min/max of the
-        pruning columns) accumulated from the batches it wrote. Within-
+        emits one stats row per file (rows, token sum, null rows of
+        tokens and n_tok, min/max of the pruning columns) accumulated
+        from the batches it wrote. Within-
         partition row order (the clustering sort) is preserved because
         Arrow batches arrive and are written in order.
 
@@ -753,7 +719,7 @@ class IceMiniTable:
         data_names = list(self.schema().fieldNames())
         stats_schema = (
             "path string, rows long, token_count long, sum_sq_n_tok long, "
-            "size_bytes long, "
+            "null_tokens long, null_n_tok long, size_bytes long, "
             "min_n_tok int, max_n_tok int, min_source string, max_source string, "
             "min_doc_id string, max_doc_id string, key_bloom string, "
             "delete_path string, delete_size_bytes long"
@@ -778,6 +744,8 @@ class IceMiniTable:
                     ("rows", pa.int64()),
                     ("token_count", pa.int64()),
                     ("sum_sq_n_tok", pa.int64()),
+                    ("null_tokens", pa.int64()),
+                    ("null_n_tok", pa.int64()),
                     ("size_bytes", pa.int64()),
                     ("min_n_tok", pa.int32()),
                     ("max_n_tok", pa.int32()),
@@ -810,6 +778,8 @@ class IceMiniTable:
                     "rows": 0,
                     "token_count": 0,
                     "sum_sq": 0,
+                    "null_tokens": 0,
+                    "null_n_tok": 0,
                     "hashes": [],
                     "mins": {"n_tok": None, "source": None, "doc_id": None},
                     "maxs": {"n_tok": None, "source": None, "doc_id": None},
@@ -841,6 +811,8 @@ class IceMiniTable:
                 st["token_count"] += pc.sum(batch.column("n_tok")).as_py() or 0
                 nt64 = pc.cast(batch.column("n_tok"), pa.int64())
                 st["sum_sq"] += pc.sum(pc.multiply(nt64, nt64)).as_py() or 0
+                st["null_tokens"] += batch.column("tokens").null_count
+                st["null_n_tok"] += batch.column("n_tok").null_count
                 for name in ("n_tok", "source", "doc_id"):
                     mm = pc.min_max(batch.column(name))
                     lo, hi = mm["min"].as_py(), mm["max"].as_py()
@@ -885,6 +857,8 @@ class IceMiniTable:
                         "rows": st["rows"],
                         "token_count": st["token_count"],
                         "sum_sq_n_tok": st["sum_sq"],
+                        "null_tokens": st["null_tokens"],
+                        "null_n_tok": st["null_n_tok"],
                         "size_bytes": _os.path.getsize(st["final"]),
                         "min_n_tok": st["mins"]["n_tok"],
                         "max_n_tok": st["maxs"]["n_tok"],
@@ -947,6 +921,8 @@ class IceMiniTable:
                 min_doc_id=r["min_doc_id"],
                 max_doc_id=r["max_doc_id"],
                 sum_sq_n_tok=int(r["sum_sq_n_tok"] or 0),
+                null_tokens=int(r["null_tokens"]),
+                null_n_tok=int(r["null_n_tok"]),
                 key_bloom=os.path.relpath(r["key_bloom"], root),
             )
             for r in stat_rows
@@ -1064,52 +1040,85 @@ class IceMiniTable:
             out.append(e)
         return out
 
+    def file_seq(self, df: DataFrame, entries: list[FileEntry]) -> Column:
+        """Each row's sequence number in ``df`` — a scan of exactly the
+        files of ``entries`` — as an expression over
+        ``input_file_name()``, not a joined relation: a ``CASE`` over
+        the entries' distinct seqs, each an ``isin`` of that seq's file
+        URIs as ``df.inputFiles()`` spells them (percent-encoded, the
+        way ``input_file_name()`` does), most files first; a literal
+        when there is one seq. A row from any other file raises: a NULL
+        seq would make ``seq < del_seq`` unknown and silently resurrect
+        deleted rows."""
+        by_seq: dict[int, list[str]] = {}
+        for e in entries:
+            by_seq.setdefault(int(e.seq or 0), []).append(e.path)
+        if len(by_seq) == 1:
+            return F.lit(next(iter(by_seq))).cast("long")
+        uri = {local_path(u): u for u in df.inputFiles()}
+        f = F.input_file_name()
+        seq = None
+        for s, paths in sorted(by_seq.items(), key=lambda kv: -len(kv[1])):
+            hit, val = f.isin([uri[self._abs(p)] for p in paths]), F.lit(s).cast("long")
+            seq = F.when(hit, val) if seq is None else seq.when(hit, val)
+        return seq.otherwise(F.raise_error(F.concat(F.lit("no sequence number for "), f)))
+
+    def _delete_keys(
+        self, dels: list[FileEntry], version: int | None = None
+    ) -> DataFrame:
+        """ONE scan of the equality-delete files ``dels`` as
+        (``__del_doc_id``, ``__del_seq``), broadcast-hinted when their
+        manifest-known size fits the session threshold — at 10^12-row
+        scale a takedown's key set is tiny, so joining it adds no
+        shuffle to the data scan."""
+        from ..maintenance.merge import broadcast_threshold_bytes
+
+        key_schema = T.StructType([self.schema(version)["doc_id"]])
+        scan = self.spark.read.schema(key_schema).parquet(
+            *[self._abs(d.path) for d in dels]
+        )
+        keys = scan.select(
+            F.col("doc_id").alias("__del_doc_id"),
+            self.file_seq(scan, dels).alias("__del_seq"),
+        )
+        if 0 < sum(d.size_bytes for d in dels) * 4 <= broadcast_threshold_bytes(
+            self.spark
+        ):
+            keys = F.broadcast(keys)
+        return keys
+
     def _read_with_deletes(
         self, entries: list[FileEntry], version: int | None = None
     ) -> DataFrame:
         """Read the given data-file entries, applying live equality
-        deletes (merge-on-read). A delete applies to a data file iff the
-        delete's seq is strictly greater than the file's seq AND their
-        doc_id ranges can overlap; files are grouped by their applicable
-        delete set so each group is ONE scan + ONE anti-join (group
-        count = distinct delete-generation combos, typically 1–2). The
-        delete side is broadcast when its manifest-known size fits the
-        session threshold — at 10^12-row scale a takedown's key set is
-        tiny, so the anti-join adds no shuffle to the scan."""
+        deletes (merge-on-read) in ONE parquet scan and ONE left-anti
+        join, however many delete generations are pending: each row
+        carries its file's data seq (``file_seq``), and a row is dropped
+        iff a delete holding its ``doc_id`` has a strictly greater seq
+        (Iceberg's sequence-number rule). Equal keys imply overlapping
+        doc_id ranges, so the range test (``applicable_delete_paths``)
+        only selects which delete files are read; the delete side is one
+        scan (``_delete_keys``), broadcast when small. No second leaf
+        relation sits under the join — a broadcast build costs one Spark
+        job per leaf — so a read runs a fixed number of jobs."""
         sch = self.schema(version)
         if not entries:
             return self.spark.createDataFrame([], sch)
-        dels = {d.path: d for d in self.live_delete_entries(version)}
-        if not dels:
-            paths = [self._abs(e.path) for e in entries]
-            return self.spark.read.schema(sch).parquet(*paths)
-
-        groups: dict[frozenset, list[FileEntry]] = {}
+        df = self.spark.read.schema(sch).parquet(*[self._abs(e.path) for e in entries])
+        live_dels = self.live_delete_entries(version)
+        app: set[str] = set()
         for e in entries:
-            app = applicable_delete_paths(e, list(dels.values()))
-            groups.setdefault(app, []).append(e)
-
-        from ..maintenance.merge import broadcast_threshold_bytes
-
-        thr = broadcast_threshold_bytes(self.spark)
-        key_schema = T.StructType([sch["doc_id"]])
-        parts: list[DataFrame] = []
-        for app, es in groups.items():
-            df = self.spark.read.schema(sch).parquet(
-                *[self._abs(e.path) for e in es]
-            )
-            if app:
-                keys = self.spark.read.schema(key_schema).parquet(
-                    *[self._abs(p) for p in sorted(app)]
-                )
-                if 0 < sum(dels[p].size_bytes for p in app) * 4 <= thr:
-                    keys = F.broadcast(keys)
-                df = df.join(keys, "doc_id", "left_anti")
-            parts.append(df)
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+            app |= applicable_delete_paths(e, live_dels)
+        if not app:
+            return df
+        keys = self._delete_keys([d for d in live_dels if d.path in app], version)
+        data = df.withColumn("__data_seq", self.file_seq(df, entries))
+        return data.join(
+            keys,
+            (F.col("doc_id") == F.col("__del_doc_id"))
+            & (F.col("__data_seq") < F.col("__del_seq")),
+            "left_anti",
+        ).drop("__data_seq")
 
     def read_files(
         self, rel_paths: list[str], version: int | None = None
@@ -1306,22 +1315,11 @@ class IceMiniTable:
                         _tag(self._read_with_deletes(added, v), "INSERT", v)
                     )
                 if common_changed and new_del_paths:
-                    from ..maintenance.merge import broadcast_threshold_bytes
-
-                    key_schema = T.StructType([self.schema(v)["doc_id"]])
-                    keys = self.spark.read.schema(key_schema).parquet(
-                        *[self._abs(p) for p in sorted(new_del_paths)]
+                    keys = self._delete_keys(
+                        [d for d in cur_dels if d.path in new_del_paths], v
                     )
-                    by_path = {d.path: d for d in cur_dels}
-                    del_bytes = sum(
-                        by_path[p].size_bytes for p in new_del_paths
-                    )
-                    if 0 < del_bytes * 4 <= broadcast_threshold_bytes(
-                        self.spark
-                    ):
-                        keys = F.broadcast(keys)
                     gone = self._read_with_deletes(common_changed, v - 1).join(
-                        keys, "doc_id", "semi"
+                        keys, F.col("doc_id") == F.col("__del_doc_id"), "semi"
                     )
                     parts.append(_tag(gone, "DELETE", v))
                 continue

@@ -1771,9 +1771,7 @@ def test_gated_rewrite_quarantines_what_gate_batch_names(spark, tmp_path):
     t, planted = _planted_table(spark, str(tmp_path / "parity"))
     _, want = gate_batch(t, [t.live_entries()], None)
     bad = {q["path"] for q in want}
-    # the null-tokens file is judged by footer null counts alone; the
-    # rewrite must agree with gate_batch on it either way
-    assert {planted["pii"], planted["outliers"]} <= bad
+    assert bad == set(planted.values())
     clean = [p for p in t.live_paths() if p not in bad]
     h_clean = (
         t.read_files(clean)
@@ -1786,6 +1784,48 @@ def test_gated_rewrite_quarantines_what_gate_batch_names(spark, tmp_path):
     assert r["tasks"] == 1 and r["new_files"] > 1
     assert got == want
     assert _content_hash(t) == h_clean
+
+
+def test_gate_quarantines_null_token_rows_not_empty_or_null_elements(spark, tmp_path):
+    """The gate counts null ROWS of the tokens array: gate_batch and a
+    gated rewrite_sorted both quarantine exactly the file whose token
+    arrays are all null, and neither quarantines a file holding only
+    empty or partly-null arrays. The writer records the null rows in the
+    manifest; an entry without them gets the same exact count."""
+    from datalakequality_spark.maintenance.compaction import gate_batch, gate_setup
+
+    t = IceMiniTable.create(spark, str(tmp_path / "nulltok"))
+    t.append(generate_sequences(spark, 4000, mean_tokens=8), target_file_rows=500)
+    odd = generate_sequences(spark, 300, start_id=2 * 10**9, mean_tokens=8).withColumn(
+        "tokens",
+        F.when(F.col("n_tok") % 2 == 0, F.array().cast("array<int>")).otherwise(
+            F.concat("tokens", F.array(F.lit(None).cast("int")))
+        ),
+    )
+    planted = {}
+    for kind, df in {
+        "null": generate_sequences(spark, 300, start_id=10**9, mean_tokens=8, with_tokens=False),
+        "empty_or_partly_null": odd,
+    }.items():
+        before = set(t.live_paths())
+        t.append(df.coalesce(1), target_file_rows=None)
+        [planted[kind]] = set(t.live_paths()) - before
+    by_path = {e.path: e for e in t.live_entries()}
+    assert by_path[planted["null"]].null_tokens == 300
+    assert by_path[planted["empty_or_partly_null"]].null_tokens == 0
+
+    entries = t.live_entries()
+    want = gate_setup(t, entries)
+    for e in entries:
+        e.null_tokens = e.null_n_tok = None
+    assert gate_setup(t, entries) == want
+
+    _, q = gate_batch(t, [t.live_entries()], None)
+    assert [r["path"] for r in q] == [planted["null"]]
+    r = rewrite_sorted(t, target_rows_per_file=1000, quality_gate=True)
+    assert r["quarantined_files"] == 1
+    assert [q["path"] for s in t.snapshots() for q in s.quarantine] == [planted["null"]]
+    assert t.scan().count() == 4300
 
 
 def test_gated_rewrite_shard_runs_at_most_four_jobs(spark, tmp_path):
