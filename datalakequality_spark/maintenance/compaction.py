@@ -256,7 +256,6 @@ def compact_delete_files(
     job_id: str | None = None,
     min_files: int = 2,
     max_analysis_keys: int = 4_000_000,
-    max_rows_per_file: int = 4_000_000,
 ) -> dict[str, Any]:
     """Consolidate the equality-delete backlog — the Iceberg
     ``rewrite_position_delete_files`` maintenance action re-expressed
@@ -303,6 +302,12 @@ def compact_delete_files(
     vector broadcast to one probe task per data file) is skipped and
     subsumption-only consolidation runs: one output group per surviving
     distinct seq, all distributed, no driver key materialization.
+
+    Each output group is written by ``IceMiniTable.write_delete_files``
+    (the table's one file writer), one file per partition of the
+    group's keys: an analysed group (at most ``max_analysis_keys``
+    driver-side keys) is one partition, so one file; a
+    subsumption-only group keeps its aggregation's partitions.
 
     Boundary (shared with Iceberg's equality deletes): an upsert key's
     delete can never lift past its own commit's data file — that file
@@ -434,11 +439,11 @@ def compact_delete_files(
         new_entries: list[FileEntry] = []
         for preset_seq, g in groups:
             gdf = (
-                spark.createDataFrame(g, schema=key_schema)
+                spark.createDataFrame(g, schema=key_schema).coalesce(1)
                 if not hasattr(g, "sparkSession")
                 else g
             )
-            entries = table.write_delete_files(gdf, max_rows_per_file)
+            entries = table.write_delete_files(gdf)
             for e in entries:
                 e.seq = preset_seq  # PRESET — commit must not bump it
             new_entries.extend(entries)

@@ -58,7 +58,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .icemini import CommitConflict, claim_json
+from .icemini import ORPHAN_TEMP_AGE_S, CommitConflict, claim_json, remove_stale
 
 _VMANIFEST_RE = "v{n}.manifest.json"
 
@@ -137,10 +137,7 @@ class AnnIvfIndex:
             int(os.path.basename(p)[1:].split(".", 1)[0])
             for p in glob.glob(os.path.join(root, "v*.manifest.json"))
         ]
-        if vs:
-            return max(vs)
-        # pre-lifecycle layout: a bare manifest.json is version 1
-        return 1 if os.path.exists(os.path.join(root, "manifest.json")) else 0
+        return max(vs, default=0)
 
     @classmethod
     def load(
@@ -150,10 +147,7 @@ class AnnIvfIndex:
         v = version if version is not None else cls.current_version(root)
         if v == 0:
             raise FileNotFoundError(f"no ANN index at {root}")
-        path = cls._manifest_path(root, v)
-        if not os.path.exists(path) and v == 1:
-            path = os.path.join(root, "manifest.json")  # legacy layout
-        with open(path) as f:
+        with open(cls._manifest_path(root, v)) as f:
             return cls(spark, root, json.load(f), v)
 
     def _try_claim(self, version: int, manifest: dict[str, Any]) -> bool:
@@ -180,7 +174,9 @@ class AnnIvfIndex:
         one task, so ``partitionBy`` emits per-cell files and per-file
         cell stats are exact (``maxRecordsPerFile`` splits hot cells
         into multiple files). At 10^12 scale the exchange moves each
-        vector once; probes then skip whole files."""
+        vector once; probes then skip whole files. The stage directory
+        is removed even when the write fails; ``expire`` sweeps one a
+        killed driver left behind."""
         import pyarrow.parquet as pq
 
         data_dir = os.path.join(root, "data")
@@ -195,23 +191,25 @@ class AnnIvfIndex:
         writer = assigned.repartition(len(cents), "__cell").write.mode("overwrite")
         if max_rows_per_file:
             writer = writer.option("maxRecordsPerFile", max_rows_per_file)
-        writer.partitionBy("__cell").parquet(stage)
         files: list[dict[str, Any]] = []
-        for p in sorted(glob.glob(os.path.join(stage, "__cell=*", "*.parquet"))):
-            cell = int(os.path.basename(os.path.dirname(p)).split("=", 1)[1])
-            final = os.path.join(
-                data_dir, f"{prefix}-c{cell}-{len(files):05d}.parquet"
-            )
-            os.rename(p, final)
-            files.append(
-                {
-                    "path": os.path.relpath(final, root),
-                    "cell": cell,
-                    "rows": pq.read_metadata(final).num_rows,
-                    "size_bytes": os.path.getsize(final),
-                }
-            )
-        shutil.rmtree(stage, ignore_errors=True)
+        try:
+            writer.partitionBy("__cell").parquet(stage)
+            for p in sorted(glob.glob(os.path.join(stage, "__cell=*", "*.parquet"))):
+                cell = int(os.path.basename(os.path.dirname(p)).split("=", 1)[1])
+                final = os.path.join(
+                    data_dir, f"{prefix}-c{cell}-{len(files):05d}.parquet"
+                )
+                os.rename(p, final)
+                files.append(
+                    {
+                        "path": os.path.relpath(final, root),
+                        "cell": cell,
+                        "rows": pq.read_metadata(final).num_rows,
+                        "size_bytes": os.path.getsize(final),
+                    }
+                )
+        finally:
+            shutil.rmtree(stage, ignore_errors=True)
         return files
 
     @classmethod
@@ -302,17 +300,16 @@ class AnnIvfIndex:
                 return self
 
     def expire(self, keep_last: int = 1) -> dict[str, Any]:
-        """Drop all but the last ``keep_last`` manifests and GC data
-        files no retained version references (O(#files) driver-side,
-        metadata-scale — the IceMini expire shape)."""
+        """Drop all but the last ``keep_last`` manifests, GC data files
+        no retained version references (O(#files) driver-side,
+        metadata-scale — the IceMini expire shape), and sweep stage
+        directories older than IceMini's orphan-temp age."""
+        remove_stale(os.path.join(self.root, "data", ".stage-*"), ORPHAN_TEMP_AGE_S)
         current = self.current_version(self.root)
         keep = set(range(max(1, current - keep_last + 1), current + 1))
         retained: set[str] = set()
         for v in keep:
-            path = self._manifest_path(self.root, v)
-            if not os.path.exists(path) and v == 1:
-                path = os.path.join(self.root, "manifest.json")
-            with open(path) as f:
+            with open(self._manifest_path(self.root, v)) as f:
                 retained.update(e["path"] for e in json.load(f)["files"])
         deleted = []
         for p in glob.glob(os.path.join(self.root, "data", "*.parquet")):

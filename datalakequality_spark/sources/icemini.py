@@ -28,10 +28,17 @@ validation semantics for conflicting rewrites); otherwise it retries on
 top. ``version-hint.text`` is advisory (crash between snapshot write and
 hint update is harmless — readers take ``max(vN present)``).
 
+Every snapshot after v1 is claimed by one bounded loop
+(``IceMiniTable._claim_next``): commits, schema changes and rollbacks
+differ only in how they build the snapshot from its parent.
+
 Scale notes: all metadata ops are O(#files) driver-side, the same cost
-class as Iceberg's own planning. Data ops are single Spark jobs; per-file
-stats are computed by the writer tasks from the Arrow batches they
-write, never by reading files on the driver.
+class as Iceberg's own planning. Every file under data/ — data files,
+their paired upsert deletes and standalone equality-delete files — is
+written by ONE writer (``IceMiniTable._write_files``): a single Spark
+job whose tasks write ``.inprogress-*`` temps, rename them into place
+and compute per-file stats from the Arrow batches they write, never by
+reading files on the driver.
 """
 
 from __future__ import annotations
@@ -40,15 +47,17 @@ import glob
 import json
 import os
 import re
+import shutil
 import time
 import uuid
-from dataclasses import asdict, dataclass, field
+from dataclasses import asdict, dataclass, field, fields
 from typing import Any, Iterable
 from urllib.parse import unquote, urlparse
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from . import keybloom
 
@@ -71,6 +80,30 @@ def local_path(uri: str) -> str:
     return unquote(urlparse(uri).path)
 
 
+# age (s) past which an orphaned writer temp or stage directory is
+# assumed dead and swept: younger ones may belong to a live writer
+ORPHAN_TEMP_AGE_S = 3600.0
+
+# lost claim races after which a snapshot claim gives up
+_MAX_LOST_CLAIMS = 20
+
+
+def remove_stale(pattern: str, age_s: float) -> None:
+    """Remove the files and directories matching ``pattern`` whose
+    mtime is at least ``age_s`` old — the orphan-file-cleanup pattern
+    for temps a crashed writer left behind."""
+    now = time.time()
+    for p in glob.glob(pattern):
+        try:
+            if now - os.path.getmtime(p) >= age_s:
+                if os.path.isdir(p):
+                    shutil.rmtree(p)
+                else:
+                    os.remove(p)
+        except OSError:
+            pass
+
+
 def claim_json(path: str, payload: dict[str, Any]) -> bool:
     """Atomically create ``path`` holding ``payload``: the JSON goes to
     a temp in the same directory first, then the temp is hard-linked to
@@ -82,7 +115,7 @@ def claim_json(path: str, payload: dict[str, Any]) -> bool:
     tmp = os.path.join(d, f".tmp-{name}-{uuid.uuid4().hex}")
     try:
         with open(tmp, "w") as f:
-            json.dump(payload, f)
+            json.dump(payload, f, separators=(",", ":"))
         os.link(tmp, path)
     except FileExistsError:
         return False
@@ -189,6 +222,33 @@ class Snapshot:
     # (Iceberg's schema-id-per-snapshot model, add-column-only here).
     schema_ddl: list[list] | None = None
 
+    def to_dict(self) -> dict[str, Any]:
+        """The on-disk snapshot JSON (``schema_ddl`` is stored as
+        ``schema``)."""
+        d = asdict(self)
+        d["schema"] = d.pop("schema_ddl")
+        return {"format_version": 1, **d}
+
+    @staticmethod
+    def from_dict(d: dict[str, Any]) -> "Snapshot":
+        known = {f.name for f in fields(Snapshot)}
+        kw = {k: v for k, v in d.items() if k in known}
+        return Snapshot(**kw, schema_ddl=d.get("schema"))
+
+
+def _struct(ddl: list[list] | None) -> T.StructType:
+    """A snapshot's ``schema_ddl`` as a StructType; None (pre-evolution
+    snapshots) is the base SEQUENCES_SCHEMA."""
+    if not ddl:
+        return SEQUENCES_SCHEMA
+    return T.StructType(
+        [T.StructField(n, T.DataType.fromDDL(t), bool(nullable)) for n, t, nullable in ddl]
+    )
+
+
+def _ddl(sch: T.StructType) -> list[list]:
+    return [[f.name, f.dataType.simpleString(), f.nullable] for f in sch.fields]
+
 
 _VMETA_RE = re.compile(r"v(\d+)\.metadata\.json$")
 
@@ -255,20 +315,8 @@ class IceMiniTable:
 
     def snapshot(self, version: int | None = None) -> Snapshot:
         v = version if version is not None else self.current_version()
-        path = os.path.join(self.meta_dir, f"v{v}.metadata.json")
-        with open(path) as f:
-            d = json.load(f)
-        return Snapshot(
-            snapshot_id=d["snapshot_id"],
-            parent_snapshot_id=d.get("parent_snapshot_id"),
-            operation=d["operation"],
-            manifests=d["manifests"],
-            summary=d.get("summary", {}),
-            quarantine=d.get("quarantine", []),
-            timestamp_ms=d.get("timestamp_ms", 0),
-            schema_ddl=d.get("schema"),
-            delete_manifests=d.get("delete_manifests", []),
-        )
+        with open(os.path.join(self.meta_dir, f"v{v}.metadata.json")) as f:
+            return Snapshot.from_dict(json.load(f))
 
     def snapshots(self) -> list[Snapshot]:
         out = []
@@ -280,15 +328,7 @@ class IceMiniTable:
     def schema(self, version: int | None = None) -> T.StructType:
         """Table schema at ``version`` (default: current). Pre-evolution
         snapshots (no tracked schema) are the base SEQUENCES_SCHEMA."""
-        ddl = self.snapshot(version).schema_ddl
-        if not ddl:
-            return SEQUENCES_SCHEMA
-        return T.StructType(
-            [
-                T.StructField(n, T.DataType.fromDDL(t), bool(nullable))
-                for n, t, nullable in ddl
-            ]
-        )
+        return _struct(self.snapshot(version).schema_ddl)
 
     def add_columns(self, cols: dict[str, str]) -> Snapshot:
         """Schema evolution, add-only (the Iceberg subset a training
@@ -301,40 +341,16 @@ class IceMiniTable:
         appends/merges write them. Renames/drops/type-changes are out of
         scope — they need Iceberg field-ids to be safe.
         """
-        for name, ddl in cols.items():
-            T.DataType.fromDDL(ddl)  # validate early, outside the CAS loop
-        base = self.current_version()
-        while True:
-            parent = self.snapshot(base)
-            have = set(self.schema(base).fieldNames())
-            dupes = sorted(set(cols) & have)
+        for ddl in cols.values():
+            T.DataType.fromDDL(ddl)  # validate early, outside the claim loop
+
+        def add(sch: T.StructType) -> list[list]:
+            dupes = sorted(set(cols) & set(sch.fieldNames()))
             if dupes:
                 raise ValueError(f"columns already exist: {dupes}")
-            new_schema = [
-                [f.name, f.dataType.simpleString(), f.nullable]
-                for f in self.schema(base).fields
-            ] + [[name, ddl, True] for name, ddl in cols.items()]
-            snap = Snapshot(
-                snapshot_id=base + 1,
-                parent_snapshot_id=parent.snapshot_id,
-                operation="set-schema",
-                manifests=list(parent.manifests),
-                summary={
-                    "added_files": 0,
-                    "removed_files": 0,
-                    "total_files": parent.summary.get("total_files", 0),
-                    "total_rows": parent.summary.get("total_rows", 0),
-                    "total_tokens": parent.summary.get("total_tokens", 0),
-                    "added_columns": sorted(cols),
-                },
-                quarantine=list(parent.quarantine),
-                timestamp_ms=int(time.time() * 1000),
-                schema_ddl=new_schema,
-                delete_manifests=list(parent.delete_manifests),
-            )
-            if self._try_claim_version(base + 1, snap):
-                return snap
-            base = self.current_version()
+            return _ddl(sch) + [[name, ddl, True] for name, ddl in cols.items()]
+
+        return self._set_schema(add, {"added_columns": sorted(cols)})
 
     def drop_columns(self, names: list[str]) -> Snapshot:
         """Schema evolution, drop — EVOLVED columns only (the base
@@ -343,43 +359,43 @@ class IceMiniTable:
         bytes, but every read's explicit schema omits it (Spark's
         by-name parquet resolution), and the next rewrite physically
         sheds it. Time travel before the drop still reads the column."""
-        base_names = set(SEQUENCES_SCHEMA.fieldNames())
-        bad = sorted(set(names) & base_names)
+        bad = sorted(set(names) & set(SEQUENCES_SCHEMA.fieldNames()))
         if bad:
             raise ValueError(f"cannot drop base sequence columns: {bad}")
-        base = self.current_version()
-        while True:
-            parent = self.snapshot(base)
-            have = set(self.schema(base).fieldNames())
-            missing = sorted(set(names) - have)
+
+        def drop(sch: T.StructType) -> list[list]:
+            missing = sorted(set(names) - set(sch.fieldNames()))
             if missing:
                 raise ValueError(f"no such columns: {missing}")
-            new_schema = [
-                [f.name, f.dataType.simpleString(), f.nullable]
-                for f in self.schema(base).fields
-                if f.name not in set(names)
-            ]
-            snap = Snapshot(
-                snapshot_id=base + 1,
-                parent_snapshot_id=parent.snapshot_id,
-                operation="set-schema",
-                manifests=list(parent.manifests),
-                summary={
+            return [c for c in _ddl(sch) if c[0] not in names]
+
+        return self._set_schema(drop, {"dropped_columns": sorted(names)})
+
+    def _set_schema(self, new_schema, summary_extra: dict[str, Any]) -> Snapshot:
+        """Claim a metadata-only ``set-schema`` snapshot: the parent's
+        files, deletes and quarantine under the schema
+        ``new_schema(parent schema)`` returns (``[[name, ddl, nullable],
+        ...]``; it raises ValueError to refuse), re-derived from the new
+        parent after a lost race."""
+
+        def build(base: int, parent: Snapshot) -> dict[str, Any]:
+            return {
+                "manifests": list(parent.manifests),
+                "summary": {
                     "added_files": 0,
                     "removed_files": 0,
-                    "total_files": parent.summary.get("total_files", 0),
-                    "total_rows": parent.summary.get("total_rows", 0),
-                    "total_tokens": parent.summary.get("total_tokens", 0),
-                    "dropped_columns": sorted(names),
+                    **{
+                        k: parent.summary.get(k, 0)
+                        for k in ("total_files", "total_rows", "total_tokens")
+                    },
+                    **summary_extra,
                 },
-                quarantine=list(parent.quarantine),
-                timestamp_ms=int(time.time() * 1000),
-                schema_ddl=new_schema,
-                delete_manifests=list(parent.delete_manifests),
-            )
-            if self._try_claim_version(base + 1, snap):
-                return snap
-            base = self.current_version()
+                "quarantine": list(parent.quarantine),
+                "schema_ddl": new_schema(_struct(parent.schema_ddl)),
+                "delete_manifests": list(parent.delete_manifests),
+            }
+
+        return self._claim_next("set-schema", build)
 
     def evolve_to_include(self, df: DataFrame) -> list[str]:
         """Schema evolution from a producer's batch (Iceberg's
@@ -432,10 +448,16 @@ class IceMiniTable:
         return [FileEntry.from_dict(e) for e in d["entries"]]
 
     def _write_manifest(self, entries: list[FileEntry]) -> str:
+        """Write an immutable manifest. ``None`` stats are omitted
+        (``FileEntry.from_dict`` restores them as defaults) and the JSON
+        is compact: manifests are most of a small table's metadata."""
         name = f"manifest-{uuid.uuid4().hex}.json"
         tmp = os.path.join(self.meta_dir, f".tmp-{name}")
+        slim = [
+            {k: v for k, v in e.to_dict().items() if v is not None} for e in entries
+        ]
         with open(tmp, "w") as f:
-            json.dump({"entries": [e.to_dict() for e in entries]}, f)
+            json.dump({"entries": slim}, f, separators=(",", ":"))
         os.rename(tmp, os.path.join(self.meta_dir, name))
         return name
 
@@ -466,19 +488,7 @@ class IceMiniTable:
         """Atomically claim v<version> with its full snapshot content
         (``claim_json``). True if won."""
         path = os.path.join(self.meta_dir, f"v{version}.metadata.json")
-        payload = {
-            "format_version": 1,
-            "snapshot_id": snap.snapshot_id,
-            "parent_snapshot_id": snap.parent_snapshot_id,
-            "operation": snap.operation,
-            "manifests": snap.manifests,
-            "summary": snap.summary,
-            "quarantine": snap.quarantine,
-            "timestamp_ms": snap.timestamp_ms,
-            "schema": snap.schema_ddl,
-            "delete_manifests": snap.delete_manifests,
-        }
-        if not claim_json(path, payload):
+        if not claim_json(path, snap.to_dict()):
             return False
         # advisory hint, atomically replaced
         tmp = os.path.join(self.meta_dir, f".tmp-hint-{uuid.uuid4().hex}")
@@ -486,6 +496,35 @@ class IceMiniTable:
             f.write(str(version))
         os.rename(tmp, os.path.join(self.meta_dir, "version-hint.text"))
         return True
+
+    def _claim_next(self, operation: str, build, base: int | None = None) -> Snapshot:
+        """The one optimistic claim loop behind every snapshot after v1.
+        Resolve the current version (or start at ``base``), build the
+        new snapshot's content from that parent — ``build(base,
+        parent)`` returns the Snapshot fields other than its ids,
+        ``operation`` and timestamp, and may raise to abort (e.g.
+        ``CommitConflict`` when the parent invalidates the operation) —
+        and claim ``base + 1``. A lost race re-resolves and rebuilds on
+        top of the winner; after ``_MAX_LOST_CLAIMS`` lost races in a
+        row it raises ``CommitConflict``."""
+        if base is None:
+            base = self.current_version()
+        for _ in range(_MAX_LOST_CLAIMS):
+            parent = self.snapshot(base)
+            content = build(base, parent)
+            snap = Snapshot(
+                snapshot_id=base + 1,
+                parent_snapshot_id=parent.snapshot_id,
+                operation=operation,
+                timestamp_ms=int(time.time() * 1000),
+                **content,
+            )
+            if self._try_claim_version(base + 1, snap):
+                return snap
+            base = self.current_version()
+        raise CommitConflict(
+            f"{operation}: lost {_MAX_LOST_CLAIMS} snapshot claims in a row"
+        )
 
     def commit(
         self,
@@ -495,13 +534,16 @@ class IceMiniTable:
         required_paths: Iterable[str] = (),
         quarantine: list[dict[str, Any]] | None = None,
         base_version: int | None = None,
-        max_retries: int = 20,
         summary_extra: dict[str, Any] | None = None,
         added_deletes: list[FileEntry] | None = None,
         removed_delete_paths: Iterable[str] = (),
         no_new_deletes_since: int | None = None,
     ) -> Snapshot:
-        """Optimistic commit: new snapshot = parent − removed + added.
+        """Optimistic commit: new snapshot = parent − removed + added,
+        claimed by ``_claim_next`` (which re-validates and rebuilds on
+        top of every winner, and raises ``CommitConflict`` once it has
+        lost ``_MAX_LOST_CLAIMS`` races). ``base_version`` is the first
+        parent to try (default: the current version).
 
         ``required_paths``: files this operation *read* (its inputs).
         If a concurrent commit removed any of them, raise CommitConflict
@@ -538,9 +580,8 @@ class IceMiniTable:
         preset_seq = {
             id(e) for e in [*added, *(added_deletes or [])] if e.seq is not None
         }
-        base = base_version if base_version is not None else self.current_version()
-        for _ in range(max_retries):
-            parent = self.snapshot(base)
+
+        def build(base: int, parent: Snapshot) -> dict[str, Any]:
             live_now = self.live_paths(base)
             if not required <= live_now:
                 missing = sorted(required - live_now)[:5]
@@ -555,9 +596,7 @@ class IceMiniTable:
                     if (d.seq or 0) > no_new_deletes_since
                 ]
                 if fresh_dels:
-                    by_path = {
-                        e.path: e for e in self.live_entries(base)
-                    }
+                    by_path = {e.path: e for e in self.live_entries(base)}
                     for p in sorted(required):
                         e = by_path.get(p)
                         if e is not None and applicable_delete_paths(
@@ -586,9 +625,7 @@ class IceMiniTable:
             if added:
                 new_manifests.append(self._write_manifest(list(added)))
 
-            live = [
-                e for m in new_manifests for e in self._read_manifest(m)
-            ]
+            live = [e for m in new_manifests for e in self._read_manifest(m)]
             # delete manifests: drop explicit removals and deletes gone
             # dangling (min live data seq >= delete seq ⇒ nothing older
             # than the delete remains — conservative, ignores key ranges)
@@ -617,12 +654,9 @@ class IceMiniTable:
             live_dels = [
                 d for m in new_del_manifests for d in self._read_manifest(m)
             ]
-            snap = Snapshot(
-                snapshot_id=base + 1,
-                parent_snapshot_id=parent.snapshot_id,
-                operation=operation,
-                manifests=new_manifests,
-                summary={
+            return {
+                "manifests": new_manifests,
+                "summary": {
                     "added_files": len(added),
                     "removed_files": len(removed),
                     "total_files": len(live),
@@ -640,15 +674,12 @@ class IceMiniTable:
                     ),
                     **(summary_extra or {}),
                 },
-                quarantine=quarantine or [],
-                timestamp_ms=int(time.time() * 1000),
-                schema_ddl=parent.schema_ddl,  # data commits keep the schema
-                delete_manifests=new_del_manifests,
-            )
-            if self._try_claim_version(base + 1, snap):
-                return snap
-            base = self.current_version()  # lost the race → revalidate + retry
-        raise CommitConflict(f"{operation}: gave up after {max_retries} retries")
+                "quarantine": quarantine or [],
+                "schema_ddl": parent.schema_ddl,  # data commits keep the schema
+                "delete_manifests": new_del_manifests,
+            }
+
+        return self._claim_next(operation, build, base_version)
 
     # ---------------------------------------------------------------- data IO
 
@@ -663,7 +694,7 @@ class IceMiniTable:
     ) -> list[FileEntry]:
         """Write a DataFrame as new (uncommitted) data files, return stats
         (see ``_write_files``)."""
-        return self._write_files(df, prefix, split_col, with_deletes=False)[0]
+        return self._write_files(df, prefix, split_col)[0]
 
     def write_upsert_files(
         self, df: DataFrame
@@ -674,33 +705,68 @@ class IceMiniTable:
         delete entries), index-aligned: ``deletes[i]`` pairs ``data[i]``,
         so a caller that quarantines a data file drops its pair and the
         replaced rows stay live. ``df`` must carry unique doc_ids."""
-        return self._write_files(df, None, None, with_deletes=True)
+        return self._write_files(df, with_deletes=True)
+
+    def write_delete_files(self, keys_df: DataFrame) -> list[FileEntry]:
+        """Write (uncommitted) EQUALITY-DELETE files holding the
+        ``doc_id`` column of ``keys_df``: ``delete-<uuid>-<n>.parquet``
+        under data/, one per non-empty partition of ``keys_df``. The
+        caller commits them via ``commit(added_deletes=...)``; at scan
+        time their keys are anti-joined out of data files with seq <
+        the delete's seq.
+
+        For key sets with no data file of their own: merge-on-read
+        DELETE (``merge._delete_mor``) and delete-file compaction
+        (``compaction.compact_delete_files``). Upserts, whose keys are
+        exactly their new rows' keys, write each delete file next to its
+        data file instead (``write_upsert_files``). Both go through the
+        one writer, ``_write_files``: one Spark job, the same temp-then-
+        rename, stats (rows, doc_id range) from the Arrow batches."""
+        return self._write_files(
+            keys_df.select("doc_id"), with_data=False, with_deletes=True
+        )[1]
 
     def _write_files(
         self,
         df: DataFrame,
-        prefix: str | None,
-        split_col: str | None,
-        with_deletes: bool,
+        prefix: str | None = None,
+        split_col: str | None = None,
+        with_data: bool = True,
+        with_deletes: bool = False,
     ) -> tuple[list[FileEntry], list[FileEntry]]:
-        """Write a DataFrame as new (uncommitted) data files, return stats.
+        """The one writer of IceMini files: write a DataFrame as new
+        (uncommitted) files, return their stats as (data entries, delete
+        entries).
 
         ONE distributed job — the Iceberg writer-task model (Spark's
         SparkWrite/DataWriter returns DataFile structs with stats): each
         task streams its Arrow batches through pyarrow ParquetWriters and
-        emits one stats row per file (rows, token sum, null rows of
-        tokens and n_tok, min/max of the pruning columns) accumulated
-        from the batches it wrote. Within-
-        partition row order (the clustering sort) is preserved because
-        Arrow batches arrive and are written in order.
+        emits one stats row per file group, accumulated from the batches
+        it wrote (rows and doc_id range always; for a data file also the
+        token sum, null rows of tokens and n_tok and min/max of the
+        other pruning columns). Within-partition row order (the
+        clustering sort) is preserved because Arrow batches arrive and
+        are written in order.
+
+        Each group ``<prefix>-<n>`` (``n`` the partition id, or the
+        bucket below) emits the files the flags select:
+
+        - ``with_data``: the data file ``<prefix>-<n>.parquet`` plus its
+          key-Bloom sidecar (written before the data file's rename, so a
+          live data file always has its sketch);
+        - ``with_deletes``: an equality-delete file
+          ``delete-<prefix>-<n>.parquet`` holding the group's doc_ids —
+          paired with the data file (an upsert), or alone when
+          ``with_data`` is False (``df`` then holds only ``doc_id``, and
+          no sidecar is written).
 
         With ``split_col`` (an int column, consumed — not written), a
-        task starts a new file every time the column's value changes, so
-        one task can emit one file per range bucket (the Iceberg fanout-
-        writer model). Rows must arrive sorted by ``split_col`` within
-        the partition and one value must not span partitions (use a hash
-        repartition on the column); file names are derived from the
-        bucket value, so they are stable across retries.
+        task starts a new group every time the column's value changes,
+        so one task can emit one file per range bucket (the Iceberg
+        fanout-writer model). Rows must arrive sorted by ``split_col``
+        within the partition and one value must not span partitions (use
+        a hash repartition on the column); file names are derived from
+        the bucket value, so they are stable across retries.
 
         Files land in data/ under a fresh uuid prefix; they become live
         only when a subsequent commit references them. Tasks write to an
@@ -708,22 +774,21 @@ class IceMiniTable:
         the deterministic final name, so retried tasks can't duplicate
         files; stale temps and never-committed orphans are swept by
         expire_snapshots' reachability GC.
-
-        With ``with_deletes`` the same task also streams each data file's
-        doc_id column into a paired equality-delete file, renamed into
-        place like the data file; its doc_id range is the data file's.
         """
         prefix = prefix or uuid.uuid4().hex
         data_dir = self.data_dir
         root = self.root
-        data_names = list(self.schema().fieldNames())
-        stats_schema = (
+        names = list(self.schema().fieldNames()) if with_data else ["doc_id"]
+        stat_names = ("n_tok", "source", "doc_id") if with_data else ("doc_id",)
+        # one row per file group: FileEntry's stats plus the key file's
+        stats_schema = T.DataType.fromDDL(
             "path string, rows long, token_count long, sum_sq_n_tok long, "
             "null_tokens long, null_n_tok long, size_bytes long, "
             "min_n_tok int, max_n_tok int, min_source string, max_source string, "
             "min_doc_id string, max_doc_id string, key_bloom string, "
             "delete_path string, delete_size_bytes long"
         )
+        out_schema = to_arrow_schema(stats_schema)
 
         def _write(batches):
             import os as _os
@@ -738,26 +803,6 @@ class IceMiniTable:
 
             ctx = TaskContext.get()
             attempt = ctx.taskAttemptId()
-            out_schema = pa.schema(
-                [
-                    ("path", pa.string()),
-                    ("rows", pa.int64()),
-                    ("token_count", pa.int64()),
-                    ("sum_sq_n_tok", pa.int64()),
-                    ("null_tokens", pa.int64()),
-                    ("null_n_tok", pa.int64()),
-                    ("size_bytes", pa.int64()),
-                    ("min_n_tok", pa.int32()),
-                    ("max_n_tok", pa.int32()),
-                    ("min_source", pa.string()),
-                    ("max_source", pa.string()),
-                    ("min_doc_id", pa.string()),
-                    ("max_doc_id", pa.string()),
-                    ("key_bloom", pa.string()),
-                    ("delete_path", pa.string()),
-                    ("delete_size_bytes", pa.int64()),
-                ]
-            )
             results: list[dict] = []
             cur: dict | None = None
 
@@ -777,7 +822,7 @@ class IceMiniTable:
                     "buffered": 0,
                     "rows": 0,
                     "token_count": 0,
-                    "sum_sq": 0,
+                    "sum_sq_n_tok": 0,
                     "null_tokens": 0,
                     "null_n_tok": 0,
                     "hashes": [],
@@ -789,16 +834,23 @@ class IceMiniTable:
                 if not st["buf"]:
                     return
                 tbl = pa.Table.from_batches(st["buf"])
-                if st["writer"] is None:
-                    st["writer"] = pq.ParquetWriter(
-                        st["tmp"], tbl.schema, compression="zstd"
-                    )
-                st["writer"].write_table(tbl)
+                if with_data:
+                    if st["writer"] is None:
+                        st["writer"] = pq.ParquetWriter(
+                            st["tmp"], tbl.schema, compression="zstd"
+                        )
+                    st["writer"].write_table(tbl)
                 if with_deletes:
                     keys = tbl.select(["doc_id"])
                     if st["del_writer"] is None:
+                        # a key file's doc_ids are unique: a dictionary
+                        # only adds bytes (+50% on 2k keys)
                         st["del_writer"] = pq.ParquetWriter(
-                            st["del_tmp"], keys.schema, compression="zstd"
+                            st["del_tmp"],
+                            keys.schema,
+                            compression="zstd",
+                            compression_level=3,
+                            use_dictionary=False,
                         )
                     st["del_writer"].write_table(keys)
                 st["buf"], st["buffered"] = [], 0
@@ -806,14 +858,15 @@ class IceMiniTable:
             def _feed(st: dict, batch, h_np) -> None:
                 if batch.num_rows == 0:
                     return
-                st["hashes"].append(h_np)
                 st["rows"] += batch.num_rows
-                st["token_count"] += pc.sum(batch.column("n_tok")).as_py() or 0
-                nt64 = pc.cast(batch.column("n_tok"), pa.int64())
-                st["sum_sq"] += pc.sum(pc.multiply(nt64, nt64)).as_py() or 0
-                st["null_tokens"] += batch.column("tokens").null_count
-                st["null_n_tok"] += batch.column("n_tok").null_count
-                for name in ("n_tok", "source", "doc_id"):
+                if with_data:
+                    st["hashes"].append(h_np)
+                    st["token_count"] += pc.sum(batch.column("n_tok")).as_py() or 0
+                    nt64 = pc.cast(batch.column("n_tok"), pa.int64())
+                    st["sum_sq_n_tok"] += pc.sum(pc.multiply(nt64, nt64)).as_py() or 0
+                    st["null_tokens"] += batch.column("tokens").null_count
+                    st["null_n_tok"] += batch.column("n_tok").null_count
+                for name in stat_names:
                     mm = pc.min_max(batch.column(name))
                     lo, hi = mm["min"].as_py(), mm["max"].as_py()
                     if lo is not None:
@@ -833,52 +886,46 @@ class IceMiniTable:
 
             def _close(st: dict) -> None:
                 _flush(st)
-                if st["writer"] is None:
+                if st["rows"] == 0:
                     return
-                st["writer"].close()
-                # sidecar lands BEFORE the data file's rename, so a
-                # live data file always has its sketch; a crash in
-                # between leaves an orphan .bloom the GC sweeps
-                bloom = keybloom.write_sidecar(
-                    st["final"],
-                    np.concatenate(st["hashes"]) if st["hashes"] else [],
-                    attempt,
-                )
-                del_path = del_size = None
+                out = {
+                    "rows": st["rows"],
+                    **{f"min_{n}": st["mins"][n] for n in stat_names},
+                    **{f"max_{n}": st["maxs"][n] for n in stat_names},
+                }
                 if with_deletes:
                     st["del_writer"].close()
                     _os.rename(st["del_tmp"], st["del_final"])
-                    del_path = st["del_final"]
-                    del_size = _os.path.getsize(del_path)
-                _os.rename(st["tmp"], st["final"])
-                results.append(
-                    {
-                        "path": st["final"],
-                        "rows": st["rows"],
-                        "token_count": st["token_count"],
-                        "sum_sq_n_tok": st["sum_sq"],
-                        "null_tokens": st["null_tokens"],
-                        "null_n_tok": st["null_n_tok"],
-                        "size_bytes": _os.path.getsize(st["final"]),
-                        "min_n_tok": st["mins"]["n_tok"],
-                        "max_n_tok": st["maxs"]["n_tok"],
-                        "min_source": st["mins"]["source"],
-                        "max_source": st["maxs"]["source"],
-                        "min_doc_id": st["mins"]["doc_id"],
-                        "max_doc_id": st["maxs"]["doc_id"],
-                        "key_bloom": bloom,
-                        "delete_path": del_path,
-                        "delete_size_bytes": del_size,
-                    }
-                )
+                    out["delete_path"] = st["del_final"]
+                    out["delete_size_bytes"] = _os.path.getsize(st["del_final"])
+                if with_data:
+                    st["writer"].close()
+                    # sidecar lands BEFORE the data file's rename, so a
+                    # live data file always has its sketch; a crash in
+                    # between leaves an orphan .bloom the GC sweeps
+                    out["key_bloom"] = keybloom.write_sidecar(
+                        st["final"],
+                        np.concatenate(st["hashes"]) if st["hashes"] else [],
+                        attempt,
+                    )
+                    _os.rename(st["tmp"], st["final"])
+                    out["path"] = st["final"]
+                    out["size_bytes"] = _os.path.getsize(st["final"])
+                    for k in ("token_count", "sum_sq_n_tok", "null_tokens", "null_n_tok"):
+                        out[k] = st[k]
+                results.append(out)
 
             for batch in batches:
                 if batch.num_rows == 0:
                     continue
                 # __keyhash feeds the sidecar sketch only — never written
-                h = batch.column("__keyhash").to_numpy(zero_copy_only=False)
+                h = (
+                    batch.column("__keyhash").to_numpy(zero_copy_only=False)
+                    if with_data
+                    else None
+                )
                 data = pa.RecordBatch.from_arrays(
-                    [batch.column(n) for n in data_names], names=data_names
+                    [batch.column(n) for n in names], names=names
                 )
                 if split_col is None:
                     if cur is None:
@@ -901,105 +948,36 @@ class IceMiniTable:
             if results:
                 yield pa.RecordBatch.from_pylist(results, schema=out_schema)
 
-        cols = [*data_names, *([split_col] if split_col else [])]
-        stat_rows = (
-            df.select(*cols, F.xxhash64("doc_id").alias("__keyhash"))
-            .mapInArrow(_write, stats_schema)
-            .collect()
-        )
-        stat_rows = sorted(stat_rows, key=lambda r: r["path"])
-        data = [
-            FileEntry(
-                path=os.path.relpath(r["path"], root),
-                rows=int(r["rows"]),
-                token_count=int(r["token_count"]),
-                size_bytes=int(r["size_bytes"]),
-                min_n_tok=r["min_n_tok"],
-                max_n_tok=r["max_n_tok"],
-                min_source=r["min_source"],
-                max_source=r["max_source"],
-                min_doc_id=r["min_doc_id"],
-                max_doc_id=r["max_doc_id"],
-                sum_sq_n_tok=int(r["sum_sq_n_tok"] or 0),
-                null_tokens=int(r["null_tokens"]),
-                null_n_tok=int(r["null_n_tok"]),
-                key_bloom=os.path.relpath(r["key_bloom"], root),
-            )
-            for r in stat_rows
+        cols = [
+            *names,
+            *([split_col] if split_col else []),
+            *([F.xxhash64("doc_id").alias("__keyhash")] if with_data else []),
         ]
-        deletes = [
-            FileEntry(
-                path=os.path.relpath(r["delete_path"], root),
-                rows=int(r["rows"]),
-                token_count=0,
-                size_bytes=int(r["delete_size_bytes"]),
-                min_doc_id=r["min_doc_id"],
-                max_doc_id=r["max_doc_id"],
-            )
-            for r in stat_rows
-            if r["delete_path"] is not None
-        ]
-        return data, deletes
-
-    def write_delete_files(
-        self, keys_df: DataFrame, max_rows_per_file: int = 4_000_000
-    ) -> list[FileEntry]:
-        """Write (uncommitted) EQUALITY-DELETE files: doc_id-keyed
-        parquet under data/ with ``delete-`` names. The caller commits
-        them via ``commit(added_deletes=...)``; at scan time their keys
-        are anti-joined out of data files with seq < the delete's seq.
-
-        For key sets with no data file of their own: merge-on-read
-        DELETE (``merge._delete_mor``) and delete-file compaction
-        (``compaction.compact_delete_files``). Upserts, whose keys are
-        exactly their new rows' keys, write each delete file next to its
-        data file in one job instead (``write_upsert_files``).
-
-        One distributed write + O(#delete files) driver-side footer
-        reads for stats (delete files are O(matched keys) — tiny next
-        to the data they suppress; that asymmetry is the whole point of
-        merge-on-read)."""
-        import shutil
-
-        import pyarrow.parquet as pq
-
-        n = keys_df.count()
-        if n == 0:
-            return []
-        prefix = f"delete-{uuid.uuid4().hex}"
-        stage = os.path.join(self.data_dir, f".stage-{prefix}")
-        parts = max(1, -(-n // max_rows_per_file))
-        (
-            keys_df.select("doc_id")
-            .repartition(parts)
-            .write.mode("overwrite")
-            .parquet(stage)
+        stat_rows = sorted(
+            df.select(*cols).mapInArrow(_write, stats_schema).collect(),
+            key=lambda r: r["path"] or r["delete_path"],
         )
-        entries: list[FileEntry] = []
-        for i, p in enumerate(
-            sorted(glob.glob(os.path.join(stage, "part-*.parquet")))
-        ):
-            final = os.path.join(self.data_dir, f"{prefix}-{i:05d}.parquet")
-            os.rename(p, final)
-            md = pq.read_metadata(final)
-            lo = hi = None
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(0).statistics
-                if st is not None and st.has_min_max:
-                    lo = st.min if lo is None else min(lo, st.min)
-                    hi = st.max if hi is None else max(hi, st.max)
-            entries.append(
-                FileEntry(
-                    path=os.path.relpath(final, self.root),
-                    rows=md.num_rows,
-                    token_count=0,
-                    size_bytes=os.path.getsize(final),
-                    min_doc_id=lo,
-                    max_doc_id=hi,
+        data: list[FileEntry] = []
+        deletes: list[FileEntry] = []
+        for r in stat_rows:
+            d = r.asDict()
+            del_path, del_size = d.pop("delete_path"), d.pop("delete_size_bytes")
+            if d["path"] is not None:
+                d["path"] = os.path.relpath(d["path"], root)
+                d["key_bloom"] = os.path.relpath(d["key_bloom"], root)
+                data.append(FileEntry(**d))
+            if del_path is not None:
+                deletes.append(
+                    FileEntry(
+                        path=os.path.relpath(del_path, root),
+                        rows=d["rows"],
+                        token_count=0,
+                        size_bytes=del_size,
+                        min_doc_id=d["min_doc_id"],
+                        max_doc_id=d["max_doc_id"],
+                    )
                 )
-            )
-        shutil.rmtree(stage, ignore_errors=True)
-        return entries
+        return data, deletes
 
     def append(
         self,
@@ -1454,16 +1432,12 @@ class IceMiniTable:
                 f"rollback target v{version} references GC'd data files: "
                 f"{missing[:5]}"
             )
-        base = current
-        while True:
-            parent = self.snapshot(base)
+
+        def build(base: int, parent: Snapshot) -> dict[str, Any]:
             parent_paths = self.live_paths(base)
-            snap = Snapshot(
-                snapshot_id=base + 1,
-                parent_snapshot_id=parent.snapshot_id,
-                operation="rollback",
-                manifests=list(target.manifests),
-                summary={
+            return {
+                "manifests": list(target.manifests),
+                "summary": {
                     "added_files": len(target_paths - parent_paths),
                     "removed_files": len(parent_paths - target_paths),
                     "total_files": target.summary.get("total_files", len(target_paths)),
@@ -1472,14 +1446,12 @@ class IceMiniTable:
                     "rollback_of": parent.snapshot_id,
                     "rollback_to": version,
                 },
-                quarantine=list(target.quarantine),
-                timestamp_ms=int(time.time() * 1000),
-                schema_ddl=target.schema_ddl,  # restore the schema too
-                delete_manifests=list(target.delete_manifests),
-            )
-            if self._try_claim_version(base + 1, snap):
-                return snap
-            base = self.current_version()
+                "quarantine": list(target.quarantine),
+                "schema_ddl": target.schema_ddl,  # restore the schema too
+                "delete_manifests": list(target.delete_manifests),
+            }
+
+        return self._claim_next("rollback", build, current)
 
     # ------------------------------------------------------------------- GC
 
@@ -1531,7 +1503,7 @@ class IceMiniTable:
         return tags[ref]
 
     def expire_snapshots(
-        self, keep_last: int = 1, orphan_temp_age_s: float = 3600.0
+        self, keep_last: int = 1, orphan_temp_age_s: float = ORPHAN_TEMP_AGE_S
     ) -> dict[str, Any]:
         """Drop all but the last ``keep_last`` snapshots and GC anything
         unreachable: data files and manifests referenced by no retained
@@ -1563,16 +1535,8 @@ class IceMiniTable:
         # stale writer temps from failed/retried tasks (never renamed)
         # and metadata temps of crashed commits — age-gated so live
         # writers' open temps survive a concurrent GC
-        now = time.time()
-        for p in [
-            *glob.glob(os.path.join(self.data_dir, ".inprogress-*")),
-            *glob.glob(os.path.join(self.meta_dir, ".tmp-*")),
-        ]:
-            try:
-                if now - os.path.getmtime(p) >= orphan_temp_age_s:
-                    os.remove(p)
-            except OSError:
-                pass
+        remove_stale(os.path.join(self.data_dir, ".inprogress-*"), orphan_temp_age_s)
+        remove_stale(os.path.join(self.meta_dir, ".tmp-*"), orphan_temp_age_s)
         for p in glob.glob(os.path.join(self.data_dir, "*.parquet")):
             rel = os.path.relpath(p, self.root)
             if rel not in retained_files:

@@ -43,7 +43,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .icemini import claim_json
+from .icemini import ORPHAN_TEMP_AGE_S, claim_json, remove_stale
 
 SIG_SCHEMA = "doc_id string, sh array<long>, sig array<long>"
 
@@ -123,6 +123,10 @@ class MinHashStore:
         return True
 
     def expire(self, keep_last: int = 1) -> dict[str, Any]:
+        """Drop all but the last ``keep_last`` manifests, GC data files
+        no retained version references, and sweep stage directories
+        older than IceMini's orphan-temp age."""
+        remove_stale(os.path.join(self.root, "data", ".stage-*"), ORPHAN_TEMP_AGE_S)
         current = self.current_version(self.root)
         keep = set(range(max(1, current - keep_last + 1), current + 1))
         retained: set[str] = set()
@@ -162,25 +166,33 @@ class MinHashStore:
         )
 
     def _write_files(self, sigs: DataFrame) -> list[dict[str, Any]]:
+        """Write (uncommitted) signature files: a Spark write into a
+        stage directory, whose part files are renamed into data/. The
+        stage is removed even when the write fails; ``expire`` sweeps
+        one a killed driver left behind."""
+        import shutil
+
         import pyarrow.parquet as pq
 
         prefix = uuid.uuid4().hex
         stage = os.path.join(self.root, "data", f".stage-{prefix}")
-        sigs.write.mode("overwrite").parquet(stage)
-        files = []
-        for i, p in enumerate(sorted(glob.glob(os.path.join(stage, "part-*.parquet")))):
-            final = os.path.join(self.root, "data", f"{prefix}-{i:05d}.parquet")
-            os.rename(p, final)
-            files.append(
-                {
-                    "path": os.path.relpath(final, self.root),
-                    "rows": pq.read_metadata(final).num_rows,
-                    "size_bytes": os.path.getsize(final),
-                }
-            )
-        import shutil
-
-        shutil.rmtree(stage, ignore_errors=True)
+        try:
+            sigs.write.mode("overwrite").parquet(stage)
+            files = []
+            for i, p in enumerate(
+                sorted(glob.glob(os.path.join(stage, "part-*.parquet")))
+            ):
+                final = os.path.join(self.root, "data", f"{prefix}-{i:05d}.parquet")
+                os.rename(p, final)
+                files.append(
+                    {
+                        "path": os.path.relpath(final, self.root),
+                        "rows": pq.read_metadata(final).num_rows,
+                        "size_bytes": os.path.getsize(final),
+                    }
+                )
+        finally:
+            shutil.rmtree(stage, ignore_errors=True)
         return files
 
     def _commit_append(self, files: list[dict[str, Any]]) -> None:
