@@ -25,10 +25,14 @@ import os
 import uuid
 from typing import Any
 
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..sources.icemini import FileEntry, IceMiniTable
 from .lineage import JobLog, run_job, run_tasks
+
+# keys per delete file written by a subsumption-only delete compaction
+DELETE_FILE_KEYS = 4_000_000
 
 
 def plan_bins(
@@ -307,7 +311,8 @@ def compact_delete_files(
     (the table's one file writer), one file per partition of the
     group's keys: an analysed group (at most ``max_analysis_keys``
     driver-side keys) is one partition, so one file; a
-    subsumption-only group keeps its aggregation's partitions.
+    subsumption-only group is coalesced to one partition per
+    ``DELETE_FILE_KEYS`` keys.
 
     Boundary (shared with Iceberg's equality deletes): an upsert key's
     delete can never lift past its own commit's data file — that file
@@ -368,7 +373,7 @@ def compact_delete_files(
         )
 
         n_keys = keys.count()
-        groups: list[tuple[int, Any]] = []  # (preset_seq, keys DataFrame/pdf)
+        groups: list[tuple[int, DataFrame]] = []  # (preset_seq, keys)
         if n_keys <= max_analysis_keys:
             kp = keys.select(
                 "doc_id", "sk", F.xxhash64("doc_id").alias("h")
@@ -423,26 +428,32 @@ def compact_delete_files(
             result["dead_keys_dropped"] = int(dead.sum())
             result["lifted_keys"] = int(lift.sum())
             result["kept_keys"] = int(keep.sum())
+
+            def _one_file(pdf) -> DataFrame:
+                return spark.createDataFrame(pdf, schema=key_schema).coalesce(1)
+
             if lift.any():
-                groups.append((top_seq, kp.loc[lift, ["doc_id"]]))
+                groups.append((top_seq, _one_file(kp.loc[lift, ["doc_id"]])))
             if keep.any():
                 for s, sub in kp.loc[keep].groupby("sk"):
-                    groups.append((int(s), sub[["doc_id"]]))
+                    groups.append((int(s), _one_file(sub[["doc_id"]])))
         else:
-            # subsumption-only: one group per surviving distinct seq
+            # subsumption-only: one group per surviving distinct seq,
+            # ceil(keys / DELETE_FILE_KEYS) files each (the group sizes
+            # come from the same job that lists the seqs)
             result["analysis"] = "subsumption-only"
             result["kept_keys"] = n_keys
-            for row in keys.select("sk").distinct().collect():
-                s = int(row["sk"])
-                groups.append((s, keys.where(F.col("sk") == s).select("doc_id")))
+            for row in keys.groupBy("sk").count().collect():
+                s, n = int(row["sk"]), int(row["count"])
+                groups.append((
+                    s,
+                    keys.where(F.col("sk") == s)
+                    .select("doc_id")
+                    .coalesce(-(-n // DELETE_FILE_KEYS)),
+                ))
 
         new_entries: list[FileEntry] = []
-        for preset_seq, g in groups:
-            gdf = (
-                spark.createDataFrame(g, schema=key_schema).coalesce(1)
-                if not hasattr(g, "sparkSession")
-                else g
-            )
+        for preset_seq, gdf in groups:
             entries = table.write_delete_files(gdf)
             for e in entries:
                 e.seq = preset_seq  # PRESET — commit must not bump it

@@ -642,12 +642,15 @@ def _delete_mor(
 
     def execute(task: dict[str, Any], read_v: int) -> dict[str, Any]:
         inputs = _task_inputs(log, task, spill_cache)
-        # matched keys from affected files only, pending deletes applied
+        # matched keys from affected files only, pending deletes applied;
+        # coalesced so the delete lands as ONE file, however many
+        # partitions AQE splits the distinct's shuffle into
         keys = (
             table.read_files(inputs, version=read_v)
             .where(cond)
             .select("doc_id")
             .distinct()
+            .coalesce(1)
         )
         entries = table.write_delete_files(keys)
         # the affected files are read, not removed: no removed_paths, and

@@ -705,12 +705,14 @@ class IceMiniTable:
         delete entries), index-aligned: ``deletes[i]`` pairs ``data[i]``,
         so a caller that quarantines a data file drops its pair and the
         replaced rows stay live. ``df`` must carry unique doc_ids."""
-        return self._write_files(df, with_deletes=True)
+        return self._write_files(df, kind="upsert")
 
     def write_delete_files(self, keys_df: DataFrame) -> list[FileEntry]:
         """Write (uncommitted) EQUALITY-DELETE files holding the
         ``doc_id`` column of ``keys_df``: ``delete-<uuid>-<n>.parquet``
-        under data/, one per non-empty partition of ``keys_df``. The
+        under data/, one per non-empty partition of ``keys_df`` (the
+        caller sets the file count: coalesce the keys first, or a
+        shuffled key frame writes one file per AQE partition). The
         caller commits them via ``commit(added_deletes=...)``; at scan
         time their keys are anti-joined out of data files with seq <
         the delete's seq.
@@ -722,17 +724,14 @@ class IceMiniTable:
         data file instead (``write_upsert_files``). Both go through the
         one writer, ``_write_files``: one Spark job, the same temp-then-
         rename, stats (rows, doc_id range) from the Arrow batches."""
-        return self._write_files(
-            keys_df.select("doc_id"), with_data=False, with_deletes=True
-        )[1]
+        return self._write_files(keys_df.select("doc_id"), kind="delete")[1]
 
     def _write_files(
         self,
         df: DataFrame,
         prefix: str | None = None,
         split_col: str | None = None,
-        with_data: bool = True,
-        with_deletes: bool = False,
+        kind: str = "data",
     ) -> tuple[list[FileEntry], list[FileEntry]]:
         """The one writer of IceMini files: write a DataFrame as new
         (uncommitted) files, return their stats as (data entries, delete
@@ -749,16 +748,16 @@ class IceMiniTable:
         are written in order.
 
         Each group ``<prefix>-<n>`` (``n`` the partition id, or the
-        bucket below) emits the files the flags select:
+        bucket below) emits the files its ``kind`` selects:
 
-        - ``with_data``: the data file ``<prefix>-<n>.parquet`` plus its
+        - ``"data"``: the data file ``<prefix>-<n>.parquet`` plus its
           key-Bloom sidecar (written before the data file's rename, so a
           live data file always has its sketch);
-        - ``with_deletes``: an equality-delete file
-          ``delete-<prefix>-<n>.parquet`` holding the group's doc_ids —
-          paired with the data file (an upsert), or alone when
-          ``with_data`` is False (``df`` then holds only ``doc_id``, and
-          no sidecar is written).
+        - ``"upsert"``: the data file and sidecar, plus the paired
+          equality-delete file ``delete-<prefix>-<n>.parquet`` holding
+          the group's doc_ids;
+        - ``"delete"``: only the equality-delete file (``df`` then holds
+          only ``doc_id``, and no sidecar is written).
 
         With ``split_col`` (an int column, consumed — not written), a
         task starts a new group every time the column's value changes,
@@ -775,6 +774,9 @@ class IceMiniTable:
         files; stale temps and never-committed orphans are swept by
         expire_snapshots' reachability GC.
         """
+        if kind not in ("data", "upsert", "delete"):
+            raise ValueError(f"unknown file kind {kind!r}")
+        with_data, with_deletes = kind != "delete", kind != "data"
         prefix = prefix or uuid.uuid4().hex
         data_dir = self.data_dir
         root = self.root
@@ -1509,8 +1511,10 @@ class IceMiniTable:
         unreachable: data files and manifests referenced by no retained
         snapshot, plus staged orphans never committed.
 
-        ``.inprogress-*`` writer temps (and ``metadata/.tmp-*`` commit
-        temps) are removed only when older than
+        ``.inprogress-*`` writer temps (plus ``metadata/.tmp-*`` commit
+        temps and the ``data/.stage-*`` directories that older versions
+        of the delete writer could leave behind) are removed only when
+        older than
         ``orphan_temp_age_s`` (Iceberg's orphan-file-cleanup mtime
         pattern): an expire running concurrently with an in-flight
         rewrite/merge must not unlink temps a writer task still holds
@@ -1537,6 +1541,7 @@ class IceMiniTable:
         # writers' open temps survive a concurrent GC
         remove_stale(os.path.join(self.data_dir, ".inprogress-*"), orphan_temp_age_s)
         remove_stale(os.path.join(self.meta_dir, ".tmp-*"), orphan_temp_age_s)
+        remove_stale(os.path.join(self.data_dir, ".stage-*"), orphan_temp_age_s)
         for p in glob.glob(os.path.join(self.data_dir, "*.parquet")):
             rel = os.path.relpath(p, self.root)
             if rel not in retained_files:

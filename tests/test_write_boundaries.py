@@ -108,24 +108,16 @@ def _live_listing(t: IceMiniTable) -> set[str]:
 
 
 def test_failed_delete_writes_leave_nothing_after_expire(spark, tmp_path, monkeypatch):
-    """A standalone delete write whose driver fails mid-call, and one
-    whose output is never committed, leave nothing in data/ that
-    ``expire_snapshots`` cannot sweep: afterwards data/ holds exactly
-    the live files and their sidecars — no hidden entry, no directory."""
+    """What a failed standalone delete write can leave in data/ is
+    swept by ``expire_snapshots``: key files whose commit never
+    happened (an uncommitted write, a MoR delete whose commit crashes),
+    a task's ``.inprogress-*`` temp that never reached its rename, and
+    a ``.stage-*`` directory that older versions of the delete writer
+    left behind. Temps and stages are age-gated like any writer temp;
+    at age 0, data/ holds exactly the live files and their sidecars —
+    no hidden entry, no directory."""
     t = _table(spark, tmp_path, "leak", rows=2000)
-    keys = t.scan().where("n_tok % 3 = 0").select("doc_id")
-
-    real_rename = os.rename
-
-    def failing_rename(src, dst):
-        raise OSError("injected driver-side rename failure")
-
-    monkeypatch.setattr(os, "rename", failing_rename)
-    try:
-        t.write_delete_files(keys)
-    except OSError:
-        pass
-    monkeypatch.setattr(os, "rename", real_rename)
+    t.write_delete_files(t.scan().where("n_tok % 3 = 0").select("doc_id"))
 
     def failing_commit(self, *a, **k):
         raise RuntimeError("injected crash before commit")
@@ -135,12 +127,52 @@ def test_failed_delete_writes_leave_nothing_after_expire(spark, tmp_path, monkey
         delete_where(t, "n_tok % 5 = 0", mode="merge_on_read")
     monkeypatch.undo()
 
+    with open(os.path.join(t.data_dir, ".inprogress-delete-x-00000-7"), "wb") as f:
+        f.write(b"PAR1")
+    stage = os.path.join(t.data_dir, ".stage-delete-x")
+    os.makedirs(stage)
+    for name in ("_SUCCESS", "._SUCCESS.crc", "part-00000.parquet"):
+        open(os.path.join(stage, name), "w").close()
+
     assert _data_listing(t) > _live_listing(t)  # orphans are there
+    t.expire_snapshots()  # young temps and stages may be a live writer's
+    assert os.path.isdir(stage)
     t.expire_snapshots(orphan_temp_age_s=0)
     left = _data_listing(t)
     assert left == _live_listing(t)
     assert not [n for n in left if n.startswith(".")]
     assert not [n for n in left if os.path.isdir(os.path.join(t.data_dir, n))]
+
+
+def test_standalone_delete_writes_one_file_per_group_above_a_shuffle_partition(spark, tmp_path):
+    """A key frame above AQE's 1 MB minimum partition size splits into
+    several shuffle partitions on the 8-partition test session, so a
+    writer fed the raw distinct writes several files. A merge-on-read
+    DELETE still writes one delete file, and a subsumption-only
+    compaction one file per seq group."""
+    t = IceMiniTable.create(spark, str(tmp_path / "wide"))
+    t.append(generate_sequences(spark, 400_000, with_tokens=False), target_file_rows=100_000)
+    cond = "n_tok % 16 != 0"
+    split = t.write_delete_files(t.scan().where(cond).select("doc_id").distinct())
+    assert len(split) > 1  # uncommitted, swept by the expire below
+
+    r = delete_where(t, cond, mode="merge_on_read")
+    [first] = t.live_delete_entries()
+    assert r["delete_files"] == 1 and first.rows == r["deleted_rows"] > 300_000
+    n_live = t.scan().count()
+    # the same keys again at a later seq: subsumption keeps each once
+    again = t.write_delete_files(spark.read.parquet(t._abs(first.path)))
+    t.commit("delete", added=[], added_deletes=again)
+    top = max(d.seq for d in t.live_delete_entries())
+    r = compact_delete_files(t, max_analysis_keys=0)
+    assert r["analysis"] == "subsumption-only" and r["skipped"] == 0
+    assert r["output_delete_files"] == 1
+    [out] = t.live_delete_entries()
+    assert out.rows == first.rows and out.seq == top
+    assert t.scan().count() == n_live
+    _assert_delete_stats_match_files(t)
+    t.expire_snapshots(orphan_temp_age_s=0)
+    assert _data_listing(t) == _live_listing(t)
 
 
 def test_manifests_are_slim_and_parent_format_still_loads(spark, tmp_path):
