@@ -1511,11 +1511,10 @@ class IceMiniTable:
         unreachable: data files and manifests referenced by no retained
         snapshot, plus staged orphans never committed.
 
-        ``.inprogress-*`` writer temps (plus ``metadata/.tmp-*`` commit
-        temps and the ``data/.stage-*`` directories that older versions
-        of the delete writer could leave behind) are removed only when
-        older than
-        ``orphan_temp_age_s`` (Iceberg's orphan-file-cleanup mtime
+        Hidden entries of data/ — ``.inprogress-*`` writer temps, and
+        the stage directories older versions of the delete writer could
+        leave behind — and ``metadata/.tmp-*`` commit temps are removed
+        only when older than ``orphan_temp_age_s`` (Iceberg's orphan-file-cleanup mtime
         pattern): an expire running concurrently with an in-flight
         rewrite/merge must not unlink temps a writer task still holds
         open — its rename-to-final would fail and kill the job."""
@@ -1536,12 +1535,12 @@ class IceMiniTable:
             retained_files.update(q["path"] for q in snap.quarantine if "path" in q)
 
         deleted_files, deleted_manifests, deleted_snapshots = [], [], []
-        # stale writer temps from failed/retried tasks (never renamed)
-        # and metadata temps of crashed commits — age-gated so live
-        # writers' open temps survive a concurrent GC
-        remove_stale(os.path.join(self.data_dir, ".inprogress-*"), orphan_temp_age_s)
+        # stale writer temps from failed/retried tasks (never renamed;
+        # every hidden entry of data/ is one) and metadata temps of
+        # crashed commits — age-gated so live writers' open temps
+        # survive a concurrent GC
+        remove_stale(os.path.join(self.data_dir, ".*"), orphan_temp_age_s)
         remove_stale(os.path.join(self.meta_dir, ".tmp-*"), orphan_temp_age_s)
-        remove_stale(os.path.join(self.data_dir, ".stage-*"), orphan_temp_age_s)
         for p in glob.glob(os.path.join(self.data_dir, "*.parquet")):
             rel = os.path.relpath(p, self.root)
             if rel not in retained_files:
