@@ -28,7 +28,7 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..sources.icemini import FileEntry, IceMiniTable
+from ..sources.icemini import FileEntry, IceMiniTable, sidecar_probe_tasks
 from .lineage import JobLog, run_job, run_tasks
 
 # keys per delete file written by a subsumption-only delete compaction
@@ -303,9 +303,12 @@ def compact_delete_files(
     compaction collapses them.
 
     Above ``max_analysis_keys`` the Bloom analysis (a driver-side key
-    vector broadcast to one probe task per data file) is skipped and
+    vector broadcast to one probe task per ``maxPartitionBytes`` of
+    sidecars, ``icemini.sidecar_probe_tasks``) is skipped and
     subsumption-only consolidation runs: one output group per surviving
-    distinct seq, all distributed, no driver key materialization.
+    distinct seq, all distributed, no driver key materialization. One
+    evaluation of the backlog's keys both picks the path and collects
+    the analysed keys (no separate count).
 
     Each output group is written by ``IceMiniTable.write_delete_files``
     (the table's one file writer), one file per partition of the
@@ -363,21 +366,24 @@ def compact_delete_files(
         # (``file_seq``: an expression, no joined file→seq relation);
         # subsumption: keep each key only at its max delete seq
         key_schema = "doc_id string"
-        scan = spark.read.schema(key_schema).parquet(
-            *[table._abs(d.path) for d in dels]
-        )
+        scan = table._key_scan(dels)
         keys = (
             scan.select("doc_id", table.file_seq(scan, dels).alias("sk"))
             .groupBy("doc_id")
             .agg(F.max("sk").alias("sk"))
         )
 
-        n_keys = keys.count()
+        # one evaluation decides the path and, under the cutoff,
+        # collects the analysed keys: a collect of up to
+        # max_analysis_keys + 1 keys is the whole set iff it holds at
+        # most max_analysis_keys
+        kp = (
+            keys.limit(max_analysis_keys + 1)
+            .select("doc_id", "sk", F.xxhash64("doc_id").alias("h"))
+            .toPandas()
+        )
         groups: list[tuple[int, DataFrame]] = []  # (preset_seq, keys)
-        if n_keys <= max_analysis_keys:
-            kp = keys.select(
-                "doc_id", "sk", F.xxhash64("doc_id").alias("h")
-            ).toPandas()
+        if len(kp) <= max_analysis_keys:
             h = kp["h"].to_numpy(dtype=np.int64)
             sk = kp["sk"].to_numpy(dtype=np.int64)
             bc = spark.sparkContext.broadcast((h, sk, int(top_seq)))
@@ -405,10 +411,14 @@ def compact_delete_files(
                     }
                 )
 
+            # one task per maxPartitionBytes of sidecar; coalesce keeps
+            # a one-task probe a single narrow stage (no shuffle)
+            parts = sidecar_probe_tasks(spark, live)
             files_df = spark.createDataFrame(
                 [(e.key_bloom or "", int(e.seq or 0)) for e in live],
                 "bloom string, fseq long",
-            ).repartition(min(max(len(live), 1), 64))
+            )
+            files_df = files_df.coalesce(1) if parts == 1 else files_df.repartition(parts)
             below = np.zeros(len(h), dtype=bool)
             window = np.zeros(len(h), dtype=bool)
             for r in files_df.mapInPandas(
@@ -442,9 +452,9 @@ def compact_delete_files(
             # ceil(keys / DELETE_FILE_KEYS) files each (the group sizes
             # come from the same job that lists the seqs)
             result["analysis"] = "subsumption-only"
-            result["kept_keys"] = n_keys
             for row in keys.groupBy("sk").count().collect():
                 s, n = int(row["sk"]), int(row["count"])
+                result["kept_keys"] += n
                 groups.append((
                     s,
                     keys.where(F.col("sk") == s)

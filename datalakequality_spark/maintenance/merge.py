@@ -42,7 +42,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources import keybloom
-from ..sources.icemini import FileEntry, IceMiniTable, local_path
+from ..sources.icemini import (
+    FileEntry,
+    IceMiniTable,
+    key_hashes,
+    local_path,
+    max_partition_bytes,
+)
 from .lineage import JobLog, run_job
 
 
@@ -67,15 +73,6 @@ def broadcast_threshold_bytes(spark: SparkSession) -> int:
         )
     except Exception:
         return -1
-
-
-def _max_partition_bytes(spark: SparkSession) -> int:
-    """Session ``spark.sql.files.maxPartitionBytes`` in bytes (the
-    bytes one scan task reads), 128 MB if it cannot be read."""
-    try:
-        return int(spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes())
-    except Exception:
-        return 128 * 1024 * 1024
 
 
 def _chunk(items: list, size: int) -> list[list]:
@@ -244,6 +241,13 @@ def merge_into(
             matched=matched, not_matched_condition=not_matched_condition,
             version=read_v,
         )
+        if rewritten is not None and n_src <= keybloom.MAX_PROBE_KEYS:
+            # a small source's rewrite is a few files: write it through
+            # as many Python tasks as its bytes need, not one per
+            # partition of its plan (each costs ~0.3 core-s to start)
+            rewritten = rewritten.coalesce(
+                _writer_tasks(table, task["input_files"], n_src, read_v)
+            )
         new_entries: list[FileEntry] = (
             table.write_data_files(rewritten) if rewritten is not None else []
         )
@@ -301,6 +305,23 @@ def merge_into(
         "matched_files": sum(len(task["input_files"]) for task, _ in out),
         "snapshot_id": table.current_version(),
     }
+
+
+def _writer_tasks(
+    table: IceMiniTable, inputs: list[str], n_src: int, version: int
+) -> int:
+    """Writer tasks for a merge task's rewrite: ceil(estimated bytes /
+    ``maxPartitionBytes``), the estimate being the manifest bytes of
+    the input files plus the source rows at the inputs' bytes per row
+    (the table's, for an insert-only task). Sized by bytes, not keys:
+    a 20-key source can hit 20 large files."""
+    live = table.live_entries(version)
+    by_path = {e.path: e for e in live}
+    files = [by_path[p] for p in inputs if p in by_path]
+    ref = files or live
+    per_row = sum(e.size_bytes for e in ref) / max(1, sum(e.rows for e in ref))
+    est = sum(e.size_bytes for e in files) + n_src * per_row
+    return max(1, -(-int(est) // max_partition_bytes(table.spark)))
 
 
 def _merge_mor(
@@ -456,8 +477,7 @@ def _affected_files(
     if not candidates:
         return []
     hits = (
-        table.spark.read.schema(table.schema())
-        .parquet(*[table._abs(e.path) for e in candidates])
+        table.read_parquet(table.schema(), [e.path for e in candidates])
         .where(cond)
         .select(F.input_file_name().alias("____file"))
         .distinct()
@@ -740,7 +760,7 @@ def bloom_prune_candidates(
     src_keys: DataFrame,
     key: str,
     n_src: int,
-    max_probe_keys: int = 4096,
+    max_probe_keys: int = keybloom.MAX_PROBE_KEYS,
 ) -> list[FileEntry]:
     """Key-existence pruning over the per-file Bloom sidecars
     (``sources/keybloom.py``): drop candidate files none of whose keys
@@ -749,73 +769,26 @@ def bloom_prune_candidates(
     nothing (uniform-random keys ⇒ every file spans the full range):
     the probe reads the file's sidecar (3 bytes per key, at least 272
     bytes) instead of the file's key column, and the exact discovery
-    scan then runs on the survivors only. Conservative on every axis: files without a sidecar (pre-bloom
-    manifests, external writers, corrupt sidecar) are kept; Bloom false
-    positives are re-verified by the discovery scan; sources beyond
-    ``max_probe_keys`` skip the probe — the cutoff is where the sketch
-    stops paying, not a safety limit: at 24 bits/key (per-key fpp
-    ≈ 4.2e-5) a K-key probe falsely admits a file with probability
-    ≈ 1-(1-4.2e-5)^K, i.e. ~16% at K=4096 but ~81% at K=40k, and a
-    bulk merge touches most files regardless, so probing it is pure
-    overhead (measured ~1-2 s on the bench's 40k-key merge).
+    scan then runs on the survivors only. Conservative on every axis:
+    files without a sidecar (pre-bloom manifests, external writers,
+    corrupt sidecar) are kept; Bloom false positives are re-verified
+    by the discovery scan; sources beyond ``max_probe_keys`` skip the
+    probe — the cutoff (``keybloom.MAX_PROBE_KEYS``) is where the
+    sketch stops paying, not a safety limit, and a bulk merge touches
+    most files regardless, so probing it is pure overhead (measured
+    ~1-2 s on the bench's 40k-key merge).
 
     Hashing is Spark's ``xxhash64`` on BOTH sides (the writer feeds the
     sidecar from a JVM-computed ``__keyhash`` column), so Python never
-    hashes a key. The probe itself is one Spark job over the sidecar
-    paths, with one task per ``spark.sql.files.maxPartitionBytes`` of
-    sidecar bytes (sizes known from the manifest's row counts, at most
-    64 tasks): a few hundred small sidecars are one task, not one Python
-    task per file."""
+    hashes a key. The only Spark job is the collect of the source's key
+    hashes; the probe itself (``IceMiniTable.bloom_prune``) runs on the
+    driver when the sidecars fit one task — a few hundred small
+    sidecars — and as one job sized by sidecar bytes otherwise."""
     if key != "doc_id" or n_src > max_probe_keys:
         return candidates
-    with_bloom = [e for e in candidates if e.key_bloom]
-    if not with_bloom:
+    if not any(e.key_bloom for e in candidates):
         return candidates
-    spark = table.spark
-    import numpy as np
-
-    hashes = (
-        src_keys.select(F.xxhash64(key).alias("h"))
-        .toPandas()["h"]
-        .to_numpy(dtype=np.int64)
-    )
-    bc = spark.sparkContext.broadcast(hashes)
-    root = table.root
-
-    def _probe(batches):
-        import os as _os
-
-        import pandas as _pd
-
-        from datalakequality_spark.sources import keybloom as kb
-
-        h = bc.value
-        for pdf in batches:
-            maybe = [
-                kb.probe_any(kb.load(_os.path.join(root, bp)), h)
-                for bp in pdf["bloom"]
-            ]
-            yield _pd.DataFrame({"path": pdf["path"], "maybe": maybe})
-
-    # one task per maxPartitionBytes of sidecar, sized from the manifest
-    # (a sidecar's size follows from its file's row count), at most 64
-    sidecar_bytes = sum(
-        keybloom.num_blocks_for(e.rows) * keybloom.BLOCK_BYTES for e in with_bloom
-    )
-    parts = min(64, max(1, -(-sidecar_bytes // _max_partition_bytes(spark))))
-    cdf = spark.createDataFrame(
-        [(e.path, e.key_bloom) for e in with_bloom], "path string, bloom string"
-    )
-    # coalesce keeps a one-task probe a single narrow stage (no shuffle)
-    cdf = cdf.coalesce(1) if parts == 1 else cdf.repartition(parts)
-    kept = {
-        r["path"]
-        for r in cdf.mapInPandas(_probe, "path string, maybe boolean")
-        .where("maybe")
-        .collect()
-    }
-    bc.unpersist()
-    return [e for e in candidates if not e.key_bloom or e.path in kept]
+    return table.bloom_prune(candidates, key_hashes(src_keys, key))
 
 
 def _plan_merge(
@@ -862,11 +835,8 @@ def _plan_merge(
     if not candidates:
         return [{"task_id": "inserts", "input_files": [], "kind": "inserts"}]
 
-    cand_abs = [table._abs(e.path) for e in candidates]
-    tgt = (
-        spark.read.schema(table.schema())
-        .parquet(*cand_abs)
-        .select(key, F.input_file_name().alias("____file"))
+    tgt = table.read_parquet(table.schema(), [e.path for e in candidates]).select(
+        key, F.input_file_name().alias("____file")
     )
     hits = tgt.join(src_keys, key, "inner")
     single = max_batch_files is None

@@ -34,7 +34,8 @@ table, not a one-shot layout):
   still carries ITS codebook (``codebook_id``) — losing to a concurrent
   rebuild raises CommitConflict, since cells assigned under the old
   codebook are meaningless under the new one. Concurrent appends
-  commute and simply retry.
+  commute and retry on top of the winner; ``_MAX_LOST_CLAIMS`` lost
+  races in a row raise CommitConflict, as IceMini's claims do.
 - ``expire`` — GC: drop all but the last ``keep_last`` manifests and
   delete data files no retained version references.
 
@@ -58,7 +59,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .icemini import ORPHAN_TEMP_AGE_S, CommitConflict, claim_json, remove_stale
+from .icemini import (
+    _MAX_LOST_CLAIMS,
+    ORPHAN_TEMP_AGE_S,
+    CommitConflict,
+    claim_json,
+    remove_stale,
+)
 
 _VMANIFEST_RE = "v{n}.manifest.json"
 
@@ -265,11 +272,14 @@ class AnnIvfIndex:
         idx = cls(spark, root, manifest, 0)
         # a re-build is a full-replace snapshot on top of whatever is
         # current — old files become unreferenced and expire() sweeps
-        # them; claim races (vs other builders) just advance the version
-        base = cls.current_version(root)
-        while not idx._try_claim(base + 1, manifest):
-            base = cls.current_version(root)
-        return idx
+        # them; claim races (vs other builders) just advance the
+        # version, up to _MAX_LOST_CLAIMS in a row
+        for _ in range(_MAX_LOST_CLAIMS):
+            if idx._try_claim(cls.current_version(root) + 1, manifest):
+                return idx
+        raise CommitConflict(
+            f"ann build: lost {_MAX_LOST_CLAIMS} manifest claims in a row"
+        )
 
     def append(self, df: DataFrame) -> "AnnIvfIndex":
         """Incrementally index a new vector batch: assign cells with the
@@ -287,7 +297,7 @@ class AnnIvfIndex:
             self.centroids,
             None,
         )
-        while True:
+        for _ in range(_MAX_LOST_CLAIMS):
             base = self.current_version(self.root)
             parent = self.load(self.spark, self.root, base).manifest
             if parent.get("codebook_id") != m.get("codebook_id"):
@@ -298,6 +308,9 @@ class AnnIvfIndex:
             manifest = {**parent, "files": [*parent["files"], *new_files]}
             if self._try_claim(base + 1, manifest):
                 return self
+        raise CommitConflict(
+            f"ann append: lost {_MAX_LOST_CLAIMS} manifest claims in a row"
+        )
 
     def expire(self, keep_last: int = 1) -> dict[str, Any]:
         """Drop all but the last ``keep_last`` manifests, GC data files

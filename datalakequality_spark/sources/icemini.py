@@ -88,6 +88,66 @@ ORPHAN_TEMP_AGE_S = 3600.0
 _MAX_LOST_CLAIMS = 20
 
 
+def max_partition_bytes(spark: SparkSession) -> int:
+    """Session ``spark.sql.files.maxPartitionBytes`` in bytes (the
+    bytes one scan task reads), 128 MB if it cannot be read."""
+    try:
+        return int(spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes())
+    except Exception:
+        return 128 * 1024 * 1024
+
+
+def sidecar_probe_tasks(spark: SparkSession, entries: Iterable["FileEntry"]) -> int:
+    """Tasks for a probe over the key-Bloom sidecars of ``entries``:
+    one per ``maxPartitionBytes`` of sidecar bytes (a sidecar's size
+    follows from its file's manifest row count), at most 64."""
+    sidecar_bytes = sum(
+        keybloom.num_blocks_for(e.rows) * keybloom.BLOCK_BYTES
+        for e in entries
+        if e.key_bloom
+    )
+    return min(64, max(1, -(-sidecar_bytes // max_partition_bytes(spark))))
+
+
+# joins a string list for one gateway call; no path holds a NUL
+_SEP = "\0"
+# Hadoop's glob metacharacters: the reader globs every path it is given
+_GLOB_CHARS = re.compile(r"([\\{}\[\]*?])")
+
+
+def _jvm_strings(spark: SparkSession, items: list[str]):
+    """``items`` as a JVM ``Seq[String]``, sent as ONE joined string:
+    py4j converts a Python list with one gateway round trip per
+    element."""
+    jvm = spark._jvm
+    return jvm.scala.collection.immutable.ArraySeq.unsafeWrapArray(
+        jvm.org.apache.commons.lang3.StringUtils.split(_SEP.join(items), _SEP)
+    )
+
+
+def input_uris(df: DataFrame) -> list[str]:
+    """``df.inputFiles()`` in one gateway call (pyspark's fetches the
+    Java array element by element): the URIs as ``input_file_name()``
+    spells them."""
+    jvm = df.sparkSession._jvm
+    joined = jvm.scala.collection.immutable.ArraySeq.unsafeWrapArray(
+        df._jdf.inputFiles()
+    ).mkString(_SEP)
+    return joined.split(_SEP) if joined else []
+
+
+def key_hashes(keys: DataFrame, key: str = "doc_id"):
+    """``xxhash64`` of ``keys[key]`` collected as an int64 array — the
+    hash the writer feeds the key-Bloom sidecars (``bloom_prune``)."""
+    return keys.select(F.xxhash64(key).alias("h")).toPandas()["h"].to_numpy(dtype="int64")
+
+
+def _sql_string(s: str) -> str:
+    """A Spark SQL string literal of ``s`` (backslash escapes on, the
+    parser's default)."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
 def remove_stale(pattern: str, age_s: float) -> None:
     """Remove the files and directories matching ``pattern`` whose
     mtime is at least ``age_s`` old — the orphan-file-cleanup pattern
@@ -1020,28 +1080,50 @@ class IceMiniTable:
             out.append(e)
         return out
 
+    def read_parquet(self, schema: T.StructType, rel_paths: list[str]) -> DataFrame:
+        """ONE parquet scan of the table files ``rel_paths`` under
+        ``schema`` (no inference job), the path list passed to the JVM
+        in one gateway call. Glob metacharacters are escaped: under a
+        root holding a backslash, ``\\b`` would glob to ``b`` and the
+        read fail with PATH_NOT_FOUND."""
+        paths = [_GLOB_CHARS.sub(r"\\\1", self._abs(p)) for p in rel_paths]
+        reader = self.spark.read.schema(schema)
+        return reader._df(reader._jreader.parquet(_jvm_strings(self.spark, paths)))
+
     def file_seq(self, df: DataFrame, entries: list[FileEntry]) -> Column:
         """Each row's sequence number in ``df`` — a scan of exactly the
         files of ``entries`` — as an expression over
-        ``input_file_name()``, not a joined relation: a ``CASE`` over
-        the entries' distinct seqs, each an ``isin`` of that seq's file
-        URIs as ``df.inputFiles()`` spells them (percent-encoded, the
-        way ``input_file_name()`` does), most files first; a literal
-        when there is one seq. A row from any other file raises: a NULL
-        seq would make ``seq < del_seq`` unknown and silently resurrect
-        deleted rows."""
+        ``input_file_name()``, not a joined relation: ONE SQL ``CASE``
+        over the entries' distinct seqs, each an ``IN`` list of that
+        seq's file URIs as ``df.inputFiles()`` spells them (percent-
+        encoded, the way ``input_file_name()`` does), most files first;
+        a literal when there is one seq. Built as one SQL string and
+        the URIs fetched in one call, so planning makes a fixed number
+        of gateway round trips whatever the file count (a ``Column``
+        per ``isin`` element cost one each). A row from any other file
+        raises: a NULL seq would make ``seq < del_seq`` unknown and
+        silently resurrect deleted rows."""
         by_seq: dict[int, list[str]] = {}
         for e in entries:
             by_seq.setdefault(int(e.seq or 0), []).append(e.path)
         if len(by_seq) == 1:
             return F.lit(next(iter(by_seq))).cast("long")
-        uri = {local_path(u): u for u in df.inputFiles()}
-        f = F.input_file_name()
-        seq = None
-        for s, paths in sorted(by_seq.items(), key=lambda kv: -len(kv[1])):
-            hit, val = f.isin([uri[self._abs(p)] for p in paths]), F.lit(s).cast("long")
-            seq = F.when(hit, val) if seq is None else seq.when(hit, val)
-        return seq.otherwise(F.raise_error(F.concat(F.lit("no sequence number for "), f)))
+        uri = {local_path(u): u for u in input_uris(df)}
+        whens = " ".join(
+            f"WHEN input_file_name() IN "
+            f"({', '.join(_sql_string(uri[self._abs(p)]) for p in paths)}) THEN {s}L"
+            for s, paths in sorted(by_seq.items(), key=lambda kv: -len(kv[1]))
+        )
+        return F.expr(
+            f"CASE {whens} ELSE raise_error(concat("
+            f"'no sequence number for ', input_file_name())) END"
+        )
+
+    def _key_scan(self, dels: list[FileEntry], version: int | None = None) -> DataFrame:
+        """ONE scan of the equality-delete files ``dels`` under the key
+        schema (``doc_id`` only, so no schema-inference job)."""
+        key_schema = T.StructType([self.schema(version)["doc_id"]])
+        return self.read_parquet(key_schema, [d.path for d in dels])
 
     def _delete_keys(
         self, dels: list[FileEntry], version: int | None = None
@@ -1053,10 +1135,7 @@ class IceMiniTable:
         shuffle to the data scan."""
         from ..maintenance.merge import broadcast_threshold_bytes
 
-        key_schema = T.StructType([self.schema(version)["doc_id"]])
-        scan = self.spark.read.schema(key_schema).parquet(
-            *[self._abs(d.path) for d in dels]
-        )
+        scan = self._key_scan(dels, version)
         keys = scan.select(
             F.col("doc_id").alias("__del_doc_id"),
             self.file_seq(scan, dels).alias("__del_seq"),
@@ -1084,7 +1163,7 @@ class IceMiniTable:
         sch = self.schema(version)
         if not entries:
             return self.spark.createDataFrame([], sch)
-        df = self.spark.read.schema(sch).parquet(*[self._abs(e.path) for e in entries])
+        df = self.read_parquet(sch, [e.path for e in entries])
         live_dels = self.live_delete_entries(version)
         app: set[str] = set()
         for e in entries:
@@ -1110,6 +1189,61 @@ class IceMiniTable:
         by_path = {e.path: e for e in self.live_entries(version)}
         entries = [by_path[p] for p in rel_paths if p in by_path]
         return self._read_with_deletes(entries, version)
+
+    def bloom_prune(self, entries: list[FileEntry], hashes) -> list[FileEntry]:
+        """The ``entries`` that may hold one of the keys whose
+        ``xxhash64(doc_id)`` values are ``hashes``: files whose key-Bloom
+        sidecar (``sources/keybloom.py``) admits none of them are
+        dropped. Bloom filters have no false negatives, so no file
+        holding a key is dropped; files without a sidecar, or with an
+        unreadable one, are kept.
+
+        Sidecars that fit one task (``sidecar_probe_tasks``) are probed
+        on the driver: no Spark job and no Python worker task, which
+        costs ~0.3 core-s before it reads a row. Larger sidecar volumes
+        are probed by one Spark job of that many tasks, the hashes
+        broadcast."""
+        with_bloom = [e for e in entries if e.key_bloom]
+        if not with_bloom:
+            return entries
+        spark = self.spark
+        parts = sidecar_probe_tasks(spark, with_bloom)
+        if parts == 1:
+            kept = {
+                e.path
+                for e in with_bloom
+                if keybloom.probe_any(keybloom.load(self._abs(e.key_bloom)), hashes)
+            }
+        else:
+            bc = spark.sparkContext.broadcast(hashes)
+            root = self.root
+
+            def _probe(batches):
+                import os as _os
+
+                import pandas as _pd
+
+                from datalakequality_spark.sources import keybloom as kb
+
+                h = bc.value
+                for pdf in batches:
+                    maybe = [
+                        kb.probe_any(kb.load(_os.path.join(root, bp)), h)
+                        for bp in pdf["bloom"]
+                    ]
+                    yield _pd.DataFrame({"path": pdf["path"], "maybe": maybe})
+
+            cdf = spark.createDataFrame(
+                [(e.path, e.key_bloom) for e in with_bloom], "path string, bloom string"
+            ).repartition(parts)
+            kept = {
+                r["path"]
+                for r in cdf.mapInPandas(_probe, "path string, maybe boolean")
+                .where("maybe")
+                .collect()
+            }
+            bc.unpersist()
+        return [e for e in entries if not e.key_bloom or e.path in kept]
 
     def scan(
         self,
@@ -1183,8 +1317,7 @@ class IceMiniTable:
         sch = self.schema(to_version)
         if not new_entries:
             return self.spark.createDataFrame([], sch)
-        paths = [self._abs(e.path) for e in new_entries]
-        return self.spark.read.schema(sch).parquet(*paths)
+        return self.read_parquet(sch, [e.path for e in new_entries])
 
     # content-preserving physical ops: the live ROW SET is unchanged by
     # construction (certified by the content-invariance tests), so the
@@ -1215,7 +1348,14 @@ class IceMiniTable:
         - appends → one scan of the added files, no diff;
         - merge-on-read commits → added files scanned for INSERTs, and
           DELETEs from a pruned semi-join: only data files whose
-          applicable-delete set changed are read at the parent version;
+          applicable-delete set changed are read at the parent version.
+          On an unclustered table that is every file, so when the new
+          delete files hold at most ``keybloom.MAX_PROBE_KEYS`` rows
+          their key hashes are collected (one small job) and only the
+          files whose Bloom sidecar may hold one of them are read
+          (``bloom_prune``: no false negatives, files without a
+          sidecar kept) — a ~100-key upsert reads a few files, not
+          the table;
         - everything else (CoW DML, rollback, quarantining rewrites) →
           bag-diff (exceptAll) restricted to the touched files.
 
@@ -1294,10 +1434,19 @@ class IceMiniTable:
                     parts.append(
                         _tag(self._read_with_deletes(added, v), "INSERT", v)
                     )
-                if common_changed and new_del_paths:
-                    keys = self._delete_keys(
-                        [d for d in cur_dels if d.path in new_del_paths], v
+                new_dels = [d for d in cur_dels if d.path in new_del_paths]
+                if (
+                    common_changed
+                    and new_dels
+                    and sum(d.rows for d in new_dels) <= keybloom.MAX_PROBE_KEYS
+                ):
+                    # a small key set reaches few files: read only those
+                    # whose sidecar may hold one of its keys
+                    common_changed = self.bloom_prune(
+                        common_changed, key_hashes(self._key_scan(new_dels, v))
                     )
+                if common_changed and new_dels:
+                    keys = self._delete_keys(new_dels, v)
                     gone = self._read_with_deletes(common_changed, v - 1).join(
                         keys, F.col("doc_id") == F.col("__del_doc_id"), "semi"
                     )

@@ -64,6 +64,12 @@ _SALTS = np.array(
 BITS_PER_KEY = 24.0
 MAX_BYTES = 4 << 20  # cap per sidecar; beyond this fpp degrades gracefully
 MIN_BLOCKS = 8
+# key sets up to this size are probed against the sidecars (MERGE
+# sources, a merge-on-read commit's delete keys in the changelog): at
+# 24 bits/key a K-key probe falsely admits a file with probability
+# ≈ 1-(1-4.2e-5)^K, ~16% at K=4096 but ~81% at K=40k, where a probe
+# prunes too little to pay for itself
+MAX_PROBE_KEYS = 4096
 
 
 def _as_u64(hashes) -> np.ndarray:

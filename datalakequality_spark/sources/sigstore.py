@@ -29,7 +29,9 @@ Store layout (the same versioned-manifest lifecycle as the ANN index):
 MinHash parameters (num_perm, k, bands) are pinned at create time and
 validated on every batch — mixing signature generations would silently
 break banding. Appends commit optimistically (``claim_json``: temp +
-hard link, so a failed write never takes the version) and commute; ``expire`` GCs unreferenced files.
+hard link, so a failed write never takes the version) and commute: a
+lost race retries on top of the winner, and ``_MAX_LOST_CLAIMS`` in a
+row raise CommitConflict. ``expire`` GCs unreferenced files.
 """
 
 from __future__ import annotations
@@ -43,7 +45,13 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .icemini import ORPHAN_TEMP_AGE_S, claim_json, remove_stale
+from .icemini import (
+    _MAX_LOST_CLAIMS,
+    ORPHAN_TEMP_AGE_S,
+    CommitConflict,
+    claim_json,
+    remove_stale,
+)
 
 SIG_SCHEMA = "doc_id string, sh array<long>, sig array<long>"
 
@@ -196,7 +204,10 @@ class MinHashStore:
         return files
 
     def _commit_append(self, files: list[dict[str, Any]]) -> None:
-        while True:
+        """Claim the next manifest with ``files`` appended; a lost race
+        retries on top of the winner, and after ``_MAX_LOST_CLAIMS`` in
+        a row raises ``CommitConflict``."""
+        for _ in range(_MAX_LOST_CLAIMS):
             base = self.current_version(self.root)
             with open(self._mpath(self.root, base)) as f:
                 parent = json.load(f)
@@ -209,6 +220,9 @@ class MinHashStore:
             manifest = {**parent, "files": [*parent["files"], *files]}
             if self._try_claim(base + 1, manifest):
                 return
+        raise CommitConflict(
+            f"signature store append: lost {_MAX_LOST_CLAIMS} manifest claims in a row"
+        )
 
     def scan(self) -> DataFrame:
         paths = [os.path.join(self.root, e["path"]) for e in self.manifest["files"]]

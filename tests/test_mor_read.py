@@ -121,3 +121,68 @@ def test_mor_reader_matches_iceberg_rule_and_last_writer_wins(spark, tmp_path):
     assert got == _iceberg_rule(t)
     assert got == _rows(want.reset_index())
     assert _rows(t.read_files([e.path for e in t.live_entries()]).toPandas()) == got
+
+
+def _gateway_calls(fn) -> int:
+    """py4j commands the driver sends while ``fn()`` runs, not counting
+    the release of JVM objects that Python garbage-collects (those
+    arrive whenever earlier objects die)."""
+    import gc
+
+    import py4j.clientserver as cs
+    from py4j import protocol
+
+    release = protocol.MEMORY_COMMAND_NAME + protocol.MEMORY_DEL_SUBCOMMAND_NAME
+    orig = cs.ClientServerConnection.send_command
+    n = {"calls": 0}
+
+    def counted(self, command):
+        n["calls"] += not command.startswith(release)
+        return orig(self, command)
+
+    gc.collect()
+    cs.ClientServerConnection.send_command = counted
+    try:
+        out = fn()
+    finally:
+        cs.ClientServerConnection.send_command = orig
+    del out
+    return n["calls"]
+
+
+def test_mor_scan_planning_makes_a_fixed_number_of_gateway_calls(spark, tmp_path):
+    """Planning a merge-on-read scan (the parquet path list, the
+    ``inputFiles()`` URIs and the per-row seq expression) sends the same
+    number of py4j commands at 48 files as at 8, under a root whose URIs
+    hold a quote, a backslash, a space and an escape-like ``%20+x``;
+    the scan equals the sequence-rule oracle there (a path list passed
+    unescaped globbed ``\\b`` to ``b`` and failed). A ``Column`` per
+    URI and pyspark's list conversions cost about 9 calls per file."""
+    tables = {}
+    for files in (8, 48):
+        t = IceMiniTable.create(spark, str(tmp_path / f"it's a\\b %20+x {files}"))
+        t.append(generate_sequences(spark, 50 * files, mean_tokens=8), target_file_rows=50)
+        for epoch in (1, 2):
+            merge_into(t, _batch(spark, epoch).limit(120), mode="merge_on_read")
+        assert len(t.live_entries()) >= files
+        tables[files] = t
+    t = tables[48]
+    assert _rows(t.scan().toPandas()) == _iceberg_rule(t)
+    tables[8].scan()  # warm the gateway's class lookups
+    calls = {f: _gateway_calls(t.scan) for f, t in tables.items()}
+    assert calls[8] == calls[48], calls
+
+
+def test_file_seq_raises_for_a_file_with_no_seq(spark, tmp_path):
+    """A row from a file the seq expression does not list raises rather
+    than reading a NULL seq (which would resurrect deleted rows)."""
+    import pytest
+
+    t = IceMiniTable.create(spark, str(tmp_path / "noseq"))
+    t.append(generate_sequences(spark, 300, mean_tokens=8), target_file_rows=100)
+    merge_into(t, _batch(spark, 1).limit(50), mode="merge_on_read")
+    entries = t.live_entries()
+    assert len({e.seq for e in entries[1:]}) == 2
+    df = t.read_parquet(t.schema(), [e.path for e in entries])
+    with pytest.raises(Exception, match="no sequence number for"):
+        df.select(t.file_seq(df, entries[1:])).collect()

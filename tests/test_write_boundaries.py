@@ -59,9 +59,11 @@ def _assert_delete_stats_match_files(t: IceMiniTable) -> None:
 def test_standalone_delete_writes_run_one_writer_job(spark, tmp_path):
     """A merge-on-read DELETE evaluates its key plan once (the writer
     job), not once for a count and again for the write; delete-file
-    compaction writes each group through the same writer. On a
+    compaction writes each group through the same writer, after one
+    evaluation of the backlog's keys and a one-task sidecar probe. On a
     4,000-row, 16-file table the stage-directory writer ran 8 and 11
-    jobs."""
+    jobs, and compaction with a separate key count and a 16-task probe
+    behind a shuffle 8."""
     t = _table(spark, tmp_path, "jobs")
     assert len(t.live_entries()) == 16
     n = _job_count(spark, lambda: delete_where(t, "n_tok % 3 = 0", mode="merge_on_read"))
@@ -70,7 +72,7 @@ def test_standalone_delete_writes_run_one_writer_job(spark, tmp_path):
         delete_where(t, f"n_tok % {m} = 1", mode="merge_on_read")
     assert len(t.live_delete_entries()) == 4
     n = _job_count(spark, lambda: compact_delete_files(t))
-    assert n == 8
+    assert n == 4
     assert len(t.live_delete_entries()) == 1
 
 
@@ -281,6 +283,49 @@ def test_a_claim_that_always_loses_raises_commit_conflict(spark, tmp_path, monke
         "add_columns": lambda: t.add_columns({"more": "int"}),
         "drop_columns": lambda: t.drop_columns(["extra"]),
         "rollback_to": lambda: t.rollback_to(2),
+    }
+    for name, op in ops.items():
+        calls["n"] = 0
+        with pytest.raises(CommitConflict, match="lost"):
+            op()
+        assert calls["n"] == icemini._MAX_LOST_CLAIMS, name
+
+
+def test_side_store_claims_that_always_lose_raise_commit_conflict(spark, tmp_path, monkeypatch):
+    """``MinHashStore`` appends and ``AnnIvfIndex`` builds and appends
+    give up with ``CommitConflict`` after ``_MAX_LOST_CLAIMS`` lost
+    manifest claims, as IceMini's snapshot claims do."""
+    import numpy as np
+
+    from datalakequality_spark.sources.annindex import AnnIvfIndex
+    from datalakequality_spark.sources.sigstore import MinHashStore
+
+    texts = spark.createDataFrame(
+        [(f"d{i}", " ".join(f"w{(i * 3 + j) % 40}" for j in range(12))) for i in range(20)],
+        "doc_id string, text string",
+    )
+    vecs = spark.createDataFrame(
+        [(i, v.tolist()) for i, v in enumerate(np.random.default_rng(2).standard_normal((40, 4)))],
+        "id long, v array<double>",
+    )
+    store = MinHashStore.create(spark, str(tmp_path / "sig"))
+    index = AnnIvfIndex.build(spark, vecs, "id", "v", str(tmp_path / "ivf"), n_centroids=2)
+    calls = {"n": 0}
+
+    def always_lose(self, version, manifest):
+        calls["n"] += 1
+        if calls["n"] > 10 * icemini._MAX_LOST_CLAIMS:
+            raise RuntimeError("claim loop does not give up")
+        return False
+
+    monkeypatch.setattr(MinHashStore, "_try_claim", always_lose)
+    monkeypatch.setattr(AnnIvfIndex, "_try_claim", always_lose)
+    ops = {
+        "sig append": lambda: store.add_batch(texts, "doc_id", "text"),
+        "ann build": lambda: AnnIvfIndex.build(
+            spark, vecs, "id", "v", str(tmp_path / "ivf"), n_centroids=2
+        ),
+        "ann append": lambda: index.append(vecs),
     }
     for name, op in ops.items():
         calls["n"] = 0
