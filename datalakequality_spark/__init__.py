@@ -35,3 +35,12 @@ touches data only through Arrow-vectorized pandas UDFs.
 """
 
 __version__ = "0.1.0"
+
+from pyspark.core.files import SparkFiles as _SparkFiles
+
+if _SparkFiles._is_running_on_worker:
+    # a Python worker pays for every task's importlib.invalidate_caches()
+    # with a re-read of each zip on sys.path (zipdirs.py)
+    from . import zipdirs
+
+    zipdirs.install()

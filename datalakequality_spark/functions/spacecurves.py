@@ -1,13 +1,18 @@
 """Z-order (Morton) and Hilbert clustering keys — SURVEY.md §4.2.
 
-OSS Spark SQL has no space-filling-curve expression, so the keys are
-computed in ONE Arrow-vectorized pandas UDF over pure numpy uint64 bit
-ops (no per-row Python, per BASELINE.json input_hint). Inputs are
-prepared JVM-side (``curve_inputs``: xxhash64 of source/doc_id, n_tok
-scaling), so the UDF sees only three integer Series per Arrow batch.
-``curve_key`` is the one numpy key of those raw inputs: the UDFs call
-it per batch, and the clustering rewrite calls it on the driver over
-its collected key sample to place the range-bucket bounds.
+Inputs are prepared JVM-side (``curve_inputs``: xxhash64 of
+source/doc_id, n_tok scaling); each key interleaves their low 16 bits.
+
+- Z-order is ONE Catalyst expression (``morton_key``): bit b of the
+  three inputs lands at bits 3b+2, 3b+1 and 3b, a shift and a mask per
+  bit, so no row crosses into Python. numpy ``morton3`` is the same
+  interleave; it stays as the test oracle and as ``hilbert3``'s last
+  step.
+- Hilbert stays an Arrow-vectorized pandas UDF over pure numpy uint64
+  bit ops (no per-row Python, per BASELINE.json input_hint): as
+  Catalyst expressions its bit loop cost 4x the CPU. ``curve_key`` is
+  its numpy key of raw inputs; the UDF calls it per batch, and the
+  clustering rewrite calls it on the driver over its sampled inputs.
 
 Dimension encoding for the (source, n_tok, doc_id) clustering required
 by the north_star, 16 bits per dimension:
@@ -23,6 +28,8 @@ bit loop is O(bits) numpy passes over the whole Arrow batch.
 """
 
 from __future__ import annotations
+
+from functools import reduce
 
 import numpy as np
 import pandas as pd
@@ -109,6 +116,8 @@ def _mask16(x) -> np.ndarray:
 
 
 _KERNELS = {"zorder": morton3, "hilbert": hilbert3}
+# the curve inputs as columns, projected once below the key expression
+_INPUTS = ("__curve_src", "__curve_ntok", "__curve_doc")
 
 
 def curve_inputs(n_tok_clip: int = 8192) -> list[Column]:
@@ -125,14 +134,43 @@ def curve_inputs(n_tok_clip: int = 8192) -> list[Column]:
 def curve_key(method: str, src_h, ntok16, doc_h) -> np.ndarray:
     """The int64 curve key of raw ``curve_inputs`` values (Series or
     int64 arrays): the low 16 bits of each through ``morton3``
-    (``"zorder"``) or ``hilbert3`` (``"hilbert"``). The Arrow UDFs and
-    the rewrite's driver-side bucket sample both call this."""
+    (``"zorder"``) or ``hilbert3`` (``"hilbert"``). The Hilbert UDF
+    and the rewrite's driver-side Hilbert sample call this; for
+    Z-order it is the oracle of ``morton_key``."""
     return _KERNELS[method](_mask16(src_h), _mask16(ntok16), _mask16(doc_h)).astype(np.int64)
 
 
-@F.pandas_udf(T.LongType())
-def _zorder_key_udf(src_h: pd.Series, ntok16: pd.Series, doc_h: pd.Series) -> pd.Series:
-    return pd.Series(curve_key("zorder", src_h, ntok16, doc_h))
+def morton_key(x: Column, y: Column, z: Column) -> Column:
+    """``morton3`` of the low 16 bits of three int64 columns as ONE
+    Catalyst expression: bit b of x, y and z moves to bit 3b+2, 3b+1
+    and 3b. Each input is referenced 16 times, so pass column
+    references (``with_cluster_key`` projects the inputs first), not
+    expressions to re-evaluate per bit."""
+    return reduce(
+        Column.bitwiseOR,
+        (
+            F.shiftleft(c.bitwiseAND(F.lit(1 << b)), 2 * b + k)
+            for b in range(BITS)
+            for k, c in ((2, x), (1, y), (0, z))
+        ),
+    )
+
+
+def bucket_of(key: Column, bounds: list[int]) -> Column:
+    """``np.searchsorted(bounds, key, side="left")`` — the count of
+    ``bounds`` (ascending) strictly below ``key`` — as a balanced
+    binary-search ``CASE``: ~log2(#bounds) comparisons per row and
+    ~2·#bounds expression nodes. The rewrite's bounds are per shard,
+    so there are at most ``max_shard_rows / target_rows_per_file`` of
+    them (63 by default)."""
+
+    def search(lo: int, hi: int) -> Column:  # the answer is in [lo, hi]
+        if lo == hi:
+            return F.lit(lo)
+        mid = (lo + hi) // 2
+        return F.when(key <= F.lit(bounds[mid]), search(lo, mid)).otherwise(search(mid + 1, hi))
+
+    return search(0, len(bounds))
 
 
 @F.pandas_udf(T.LongType())
@@ -146,10 +184,18 @@ def with_cluster_key(
     key_col: str = "__cluster_key",
     n_tok_clip: int = 8192,
 ) -> DataFrame:
-    """Add the clustering key column. JVM prepares the three int dims;
-    one pandas UDF interleaves them."""
-    udf = {"zorder": _zorder_key_udf, "hilbert": _hilbert_key_udf}[method]
-    return df.withColumn(key_col, udf(*curve_inputs(n_tok_clip)))
+    """Add the clustering key column: the JVM prepares the three int
+    dims, then ``morton_key`` (``"zorder"``) or the Hilbert Arrow UDF
+    (``"hilbert"``) interleaves them."""
+    if method == "hilbert":
+        return df.withColumn(key_col, _hilbert_key_udf(*curve_inputs(n_tok_clip)))
+    if method != "zorder":  # fail here, not inside a task
+        raise KeyError(method)
+    return (
+        df.withColumns(dict(zip(_INPUTS, curve_inputs(n_tok_clip))))
+        .withColumn(key_col, morton_key(*(F.col(c) for c in _INPUTS)))
+        .drop(*_INPUTS)
+    )
 
 
 def with_cluster_bucket(
@@ -160,34 +206,15 @@ def with_cluster_bucket(
     pid_col: str = "__pid",
     n_tok_clip: int = 8192,
 ) -> DataFrame:
-    """Add the curve key AND its range-bucket id in the SAME Arrow pass.
+    """Add the curve key AND its range-bucket id.
 
-    ``bounds`` are pre-sampled key quantiles (ascending); a row's bucket
-    is the count of bounds strictly below its key, computed with
-    ``np.searchsorted`` — O(log #buckets) per row. The naive Column
-    expression (``F.size(F.filter(bounds_arr, b < key))``) is a linear
-    scan: fine at 96 output files, catastrophic at real scale, where a
-    100 TB table at 256 MB target files has ~400k buckets and the scan
-    would do 400k comparisons PER ROW. Bounds are closure-captured into
-    the UDF (one broadcast-sized numpy array per python worker, ~8 B per
-    output file).
+    ``bounds`` are pre-sampled key quantiles; a row's bucket is the
+    count of bounds strictly below its key (``bucket_of``: a binary
+    search, O(log #buckets) per row; a linear scan over a bounds array
+    would be O(#buckets)). The bucket is a JVM expression over the key
+    column for both curves, so a Z-order pass evaluates no Python and
+    a Hilbert pass only its key UDF.
     """
-    if method not in _KERNELS:  # fail here, not inside a task
-        raise KeyError(method)
-    b = np.asarray(sorted(bounds), dtype=np.int64)
-
-    @F.pandas_udf("key long, pid int")
-    def _key_and_bucket(
-        src_h: pd.Series, ntok16: pd.Series, doc_h: pd.Series
-    ) -> pd.DataFrame:
-        k = curve_key(method, src_h, ntok16, doc_h)
-        pid = np.searchsorted(b, k, side="left").astype(np.int32)
-        return pd.DataFrame({"key": k, "pid": pid})
-
-    tmp = "__kb"
-    return (
-        df.withColumn(tmp, _key_and_bucket(*curve_inputs(n_tok_clip)))
-        .withColumn(key_col, F.col(f"{tmp}.key"))
-        .withColumn(pid_col, F.col(f"{tmp}.pid"))
-        .drop(tmp)
+    return with_cluster_key(df, method, key_col, n_tok_clip).withColumn(
+        pid_col, bucket_of(F.col(key_col), sorted(bounds))
     )

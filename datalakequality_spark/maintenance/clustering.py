@@ -1,9 +1,10 @@
 """Z-order / Hilbert clustering rewrite (north_star M4).
 
 Reads the live snapshot, computes the space-filling-curve key
-(functions/spacecurves.py — one Arrow UDF), assigns each row a range
-bucket from pre-sampled key quantiles, hash-exchanges on the bucket id
-and sorts within partitions; the fanout writer
+(functions/spacecurves.py — a Catalyst expression for Z-order, an Arrow
+UDF for Hilbert), assigns each row a range bucket from pre-sampled key
+quantiles, hash-exchanges on the bucket id and sorts within
+partitions; the fanout writer
 (IceMiniTable.write_data_files split_col) cuts one file per bucket.
 Output files are range-ordered on the curve key with tight per-file
 (source, n_tok, doc_id) min/max stats, which is exactly what
@@ -13,16 +14,18 @@ Each shard runs ONE light planning job, then ONE heavy pass. The
 planning job scans only ``doc_id``, ``n_tok`` and ``source`` of the
 shard's raw input files, grouped by ``input_file_name()``: per file it
 computes the quality gate's aggregates (``plans/quality_gate``, when
-gated) and collects a hash-sampled list of the three JVM-computed
-curve inputs (``spacecurves.curve_inputs``). The driver turns the rows
-into gate verdicts, drops the samples of quarantined files and takes
-the bucket bounds as quantiles of the surviving samples' keys, from
-the same numpy kernel the Arrow UDF runs (``spacecurves.curve_key``) —
-no Python UDF and no second scan before the heavy pass.
+gated) and collects a hash-sampled list of curve keys: Z-order keys
+from the same expression the heavy pass evaluates
+(``spacecurves.with_cluster_key``); for Hilbert the three JVM-computed
+curve inputs, which the driver keys with the numpy kernel its Arrow
+UDF runs (``spacecurves.curve_key``). The driver turns the rows into
+gate verdicts, drops the samples of quarantined files and takes the
+bucket bounds as quantiles of the surviving samples' keys — no Python
+UDF and no second scan before the heavy pass.
 
 Why not ``repartitionByRange`` directly: Spark's range exchange runs a
 separate sampling job over the FULL child plan — here that means
-decoding every token array and evaluating the curve UDF over all rows
+decoding every token array and evaluating the curve key over all rows
 twice. Bucket sizes stay balanced because bounds come from quantiles of
 the key itself (skew-resistant by construction), and AQE is free to
 coalesce the hash exchange into fewer, fuller write tasks without
@@ -50,7 +53,12 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.spacecurves import curve_inputs, curve_key, with_cluster_bucket
+from ..functions.spacecurves import (
+    curve_inputs,
+    curve_key,
+    with_cluster_bucket,
+    with_cluster_key,
+)
 from ..plans.quality_gate import gate_aggregates, gate_verdicts
 from ..sources.icemini import FileEntry, IceMiniTable, local_path
 from . import compaction
@@ -85,29 +93,31 @@ def _plan_shard(
     files (merge-on-read deletes are not applied — the gate judges
     files as written, and a few deleted rows in the key sample do not
     move the bounds). Per file it computes the gate aggregates (when
-    ``quality_gate``) and collects the curve inputs of a hash-sampled
-    ~``_SAMPLE_ROWS_PER_FILE`` rows per output file (the whole shard
-    when it is that small). Bounds are the ``num_files``-quantiles of
-    the clean files' sampled keys; no job runs when there is neither a
-    gate nor more than one bucket."""
+    ``quality_gate``) and collects the curve keys (Hilbert: the curve
+    inputs) of a hash-sampled ~``_SAMPLE_ROWS_PER_FILE`` rows per
+    output file (the whole shard when it is that small). Bounds are
+    the ``num_files``-quantiles of the clean files' sampled keys; no
+    job runs when there is neither a gate nor more than one bucket."""
     if not (quality_gate or num_files > 1):
         return [], []
     if quality_gate:
-        paths, tokens_nulls, global_stats = compaction.gate_setup(table, entries)
-    else:
-        paths = [table._abs(e.path) for e in entries]
-    df = (
-        table.spark.read.schema(table.schema())
-        .parquet(*paths)
-        .select("doc_id", "n_tok", "source", F.input_file_name().alias("__file"))
+        tokens_nulls, global_stats = compaction.gate_setup(table, entries)
+    df = table.read_parquet(table.schema(), [e.path for e in entries]).select(
+        "doc_id", "n_tok", "source", F.input_file_name().alias("__file")
     )
     aggs = gate_aggregates(df, global_stats) if quality_gate else []
     if num_files > 1:
         total = sum(e.rows for e in entries)
         frac = _SAMPLE_ROWS_PER_FILE * num_files / max(total, 1)
-        dims = F.struct(*curve_inputs())
+        if method == "zorder":
+            df = with_cluster_key(df)
+            sample = F.col("__cluster_key")
+        else:
+            sample = F.struct(*curve_inputs())
         # collect_list skips the nulls of unsampled rows
-        aggs.append(F.collect_list(dims if frac >= 1 else F.when(_sampled(frac), dims)).alias("__sample"))
+        aggs.append(
+            F.collect_list(sample if frac >= 1 else F.when(_sampled(frac), sample)).alias("__sample")
+        )
     rows = df.groupBy("__file").agg(*aggs).collect()
 
     quarantine = (
@@ -120,8 +130,9 @@ def _plan_shard(
         bad = {table._abs(q["path"]) for q in quarantine}
         sample = [d for r in rows if local_path(r["__file"]) not in bad for d in r["__sample"]]
         if sample:
-            dims_np = np.array(sample, dtype=np.int64).reshape(-1, 3)
-            keys = curve_key(method, dims_np[:, 0], dims_np[:, 1], dims_np[:, 2])
+            keys = np.array(sample, dtype=np.int64)
+            if method != "zorder":
+                keys = curve_key(method, *keys.reshape(-1, 3).T)
             qs = [i / num_files for i in range(1, num_files)]
             bounds = sorted({int(b) for b in np.quantile(keys, qs)})
     return quarantine, bounds
@@ -132,10 +143,9 @@ def _cluster_and_bucket(df: DataFrame, bounds: list[int], method: str) -> DataFr
     and return it hash-partitioned on the ``__pid`` bucket column and
     sorted by (``__pid``, key) within partitions — ready for the fanout
     writer (``write_data_files(..., split_col="__pid")``)."""
-    # key + bucket id in ONE Arrow pass (np.searchsorted over the
-    # closure-captured bounds — O(log #buckets)/row; a Column-expression
-    # linear scan over the bounds array would be O(#buckets)/row, which
-    # at 10^12 rows / ~400k output files is intractable)
+    # the bucket id is a binary search over the shard's bounds; for
+    # Z-order the key is a JVM expression too, so the pass runs no
+    # Python
     keyed = with_cluster_bucket(df, bounds, method=method)
     return (
         keyed.repartition("__pid")

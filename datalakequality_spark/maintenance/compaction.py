@@ -103,12 +103,8 @@ def rewrite_bins(
     workers = max(1, min(len(bins), max_concurrency or sc_cores))
 
     def one(b: int, members: list[FileEntry]) -> FileEntry:
-        paths = [os.path.join(table.root, e.path) for e in members]
-        df = (
-            spark.read.schema(table.schema())  # evolved columns survive
-            .parquet(*paths)
-            .coalesce(1)
-        )
+        # the table schema: evolved columns survive
+        df = table.read_parquet(table.schema(), [e.path for e in members]).coalesce(1)
         [entry] = table.write_data_files(df, prefix=f"{prefix}-{b:05d}")
         entry.seq = min((e.seq or 0) for e in members)
         return entry
@@ -130,9 +126,9 @@ def _null_rows(table: IceMiniTable, e: FileEntry, column: str) -> int:
 
 def gate_setup(
     table: IceMiniTable, entries: list[FileEntry]
-) -> tuple[list[str], dict[str, int], tuple[float, float] | None]:
-    """The gate's driver-side inputs for ``entries``: their absolute
-    paths, the tokens array's null rows by path (from the manifest —
+) -> tuple[dict[str, int], tuple[float, float] | None]:
+    """The gate's driver-side inputs for ``entries``: the tokens
+    array's null rows by absolute path (from the manifest —
     the array is never scanned), and the global n_tok (mean, pop-std)
     from manifest moments (Σn_tok, Σn_tok² are in the file stats —
     saves the gate's global-agg data pass). The denominator counts
@@ -141,8 +137,7 @@ def gate_setup(
     the stats are None and the gate computes them in one tiny job."""
     import math
 
-    paths = [table._abs(e.path) for e in entries]
-    tokens_nulls = {p: _null_rows(table, e, "tokens") for p, e in zip(paths, entries)}
+    tokens_nulls = {table._abs(e.path): _null_rows(table, e, "tokens") for e in entries}
     global_stats = None
     if entries and all(e.sum_sq_n_tok is not None for e in entries):
         n = sum(e.rows - _null_rows(table, e, "n_tok") for e in entries)
@@ -150,7 +145,7 @@ def gate_setup(
             mean = sum(e.token_count for e in entries) / n
             var = sum(e.sum_sq_n_tok for e in entries) / n - mean * mean
             global_stats = (mean, math.sqrt(max(var, 0.0)))
-    return paths, tokens_nulls, global_stats
+    return tokens_nulls, global_stats
 
 
 def quarantine_records(
@@ -176,13 +171,12 @@ def gate_batch(
     quarantined files. Returns (clean bins, quarantine records)."""
     from ..plans.quality_gate import gate_files
 
-    paths, tokens_nulls, global_stats = gate_setup(table, [e for b in bins for e in b])
+    entries = [e for b in bins for e in b]
+    tokens_nulls, global_stats = gate_setup(table, entries)
     # scan only the light columns (doc_id for PII, n_tok for outliers);
     # the tokens array's null rows come from the manifest
-    df = (
-        table.spark.read.schema(table.schema())
-        .parquet(*paths)
-        .select("doc_id", "n_tok", F.input_file_name().alias("__file"))
+    df = table.read_parquet(table.schema(), [e.path for e in entries]).select(
+        "doc_id", "n_tok", F.input_file_name().alias("__file")
     )
     records = quarantine_records(
         table, gate_files(df, thresholds, tokens_nulls, global_stats)

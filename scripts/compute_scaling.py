@@ -6,7 +6,7 @@ The sandbox's single virtio disk sustains ~20-25 MB/s under load (vs
 cores cannot cross — a wall a real 4N-executor cluster does not have
 (disks scale with executors). This script isolates what DOES scale
 with cores: the engine's execution path — scan, wide aggregations,
-regex gates, MinHash signatures, Z-order key computation (Arrow UDF),
+regex gates, MinHash signatures, Z-order key computation (Catalyst expression),
 shuffle + sort — by running them over a parquet table in page cache
 with NO output writes.
 

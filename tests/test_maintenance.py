@@ -1850,15 +1850,17 @@ def test_gated_rewrite_shard_runs_at_most_four_jobs(spark, tmp_path):
 def test_maintenance_under_a_root_that_needs_uri_escaping(spark, tmp_path):
     """input_file_name() percent-encodes file paths (``sp%20ace``), so a
     table whose root holds a space and a ``%`` must decode them before
-    matching manifest paths: the gated compaction and the gated rewrite
-    each drop the planted file's rows, MERGE finds its target files,
-    and the delete-backlog consolidation keeps the scan content."""
+    matching manifest paths, and Hadoop globs every path it reads, so
+    a ``\\`` in the root must be escaped: the gated compaction and the
+    gated rewrite each drop the planted file's rows, MERGE finds its
+    target files, and the delete-backlog consolidation keeps the scan
+    content."""
     from datalakequality_spark.maintenance.compaction import (
         compact_delete_files,
     )
     from datalakequality_spark.maintenance.merge import delete_where
 
-    root = tmp_path / "sp ace%20+x"
+    root = tmp_path / "sp ace%20+x\\b"
     bad = generate_sequences(spark, 400, start_id=10**9).withColumn(
         "doc_id", F.concat(F.col("doc_id"), F.lit("+leak@example.com"))
     )

@@ -109,7 +109,8 @@ def test_top_customers_aqe_broadcasts(spark):
 
 def test_cluster_rewrite_single_range_exchange(spark, tmp_path):
     """The (fused) sorted rewrite's data path is ONE range exchange +
-    within-partition sort + ONE Arrow UDF for the curve key — no extra
+    within-partition sort; the Z-order key is a Catalyst expression (no
+    Python eval node), the Hilbert key ONE Arrow UDF — no extra
     shuffles sneak in around the clustering."""
     from datalakequality_spark.functions.spacecurves import with_cluster_key
     from datalakequality_spark.sources.datagen import generate_sequences
@@ -117,34 +118,39 @@ def test_cluster_rewrite_single_range_exchange(spark, tmp_path):
     path = str(tmp_path / "seq")
     generate_sequences(spark, 2000).write.parquet(path)
     df = spark.read.parquet(path)
-    clustered = (
-        with_cluster_key(df, method="zorder")
-        .repartitionByRange(4, "__cluster_key")
-        .sortWithinPartitions("__cluster_key")
-        .drop("__cluster_key")
-    )
-    plan = _plan(clustered)
-    assert plan.count("Exchange") == 1
-    assert "rangepartitioning" in plan
-    assert plan.count("ArrowEvalPython") == 1
+    for method, python_evals in (("zorder", 0), ("hilbert", 1)):
+        clustered = (
+            with_cluster_key(df, method=method)
+            .repartitionByRange(4, "__cluster_key")
+            .sortWithinPartitions("__cluster_key")
+            .drop("__cluster_key")
+        )
+        plan = _plan(clustered)
+        assert plan.count("Exchange") == 1, method
+        assert "rangepartitioning" in plan, method
+        assert plan.count("ArrowEvalPython") == python_evals, method
+        assert plan.count("BatchEvalPython") == 0, method
 
 
 def test_cluster_and_bucket_one_exchange_one_udf(spark, tmp_path):
     """The production rewrite path (_cluster_and_bucket with sampled
-    bounds) must evaluate the curve key + bucket id in ONE Arrow UDF and
-    shuffle ONCE (hash on the bucket id) — repartitionByRange would add
-    a second full evaluation of the UDF for its sampling job."""
+    bounds) must shuffle ONCE (hash on the bucket id) —
+    repartitionByRange would add a second full evaluation of the key
+    for its sampling job. The bucket id is a JVM expression over the
+    key: a Z-order pass evaluates no Python, a Hilbert pass only its
+    ONE key UDF."""
     from datalakequality_spark.maintenance.clustering import _cluster_and_bucket
     from datalakequality_spark.sources.datagen import generate_sequences
 
     path = str(tmp_path / "seq")
     generate_sequences(spark, 2000).write.parquet(path)
     bounds = [i << 45 for i in range(1, 8)]  # 8 buckets over the 48-bit key
-    out = _cluster_and_bucket(spark.read.parquet(path), bounds, "zorder")
-    plan = _plan(out)
-    assert plan.count("ArrowEvalPython") == 1
-    assert plan.count("Exchange") == 1
-    assert "hashpartitioning(__pid" in plan
+    for method, python_evals in (("zorder", 0), ("hilbert", 1)):
+        plan = _plan(_cluster_and_bucket(spark.read.parquet(path), bounds, method))
+        assert plan.count("ArrowEvalPython") == python_evals, method
+        assert plan.count("BatchEvalPython") == 0, method
+        assert plan.count("Exchange") == 1, method
+        assert "hashpartitioning(__pid" in plan, method
 
 
 def test_minhash_single_tokenization(spark):

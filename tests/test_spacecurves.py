@@ -87,9 +87,9 @@ def test_skewed_source_still_balances_output_files(spark, tmp_path):
 
 
 def test_with_cluster_bucket_matches_linear_scan(spark):
-    """The searchsorted bucket id (one Arrow pass, O(log #buckets)/row)
-    must equal the definitional linear scan (count of bounds < key), and
-    empty bounds must yield bucket 0 everywhere."""
+    """The binary-search bucket id (O(log #buckets)/row) must equal the
+    definitional linear scan (count of bounds < key) for both curves,
+    and empty bounds must yield bucket 0 everywhere."""
     from datalakequality_spark.functions.spacecurves import (
         with_cluster_bucket,
         with_cluster_key,
@@ -97,17 +97,72 @@ def test_with_cluster_bucket_matches_linear_scan(spark):
     from datalakequality_spark.sources.datagen import generate_sequences
 
     df = generate_sequences(spark, 2000)
-    keys = with_cluster_key(df, method="hilbert")
-    bounds = sorted(
-        int(r["__cluster_key"])
-        for r in keys.sample(0.05, seed=7).select("__cluster_key").collect()
-    )[:31]
-    got = with_cluster_bucket(df, bounds, method="hilbert")
-    arr = F.array(*[F.lit(b) for b in bounds])
-    check = got.withColumn(
-        "__pid_ref",
-        F.size(F.filter(arr, lambda b: b < F.col("__cluster_key"))).cast("int"),
-    )
-    assert check.where(F.col("__pid") != F.col("__pid_ref")).count() == 0
+    for method in ("hilbert", "zorder"):
+        keys = with_cluster_key(df, method=method)
+        bounds = sorted(
+            int(r["__cluster_key"])
+            for r in keys.sample(0.05, seed=7).select("__cluster_key").collect()
+        )[:31]
+        got = with_cluster_bucket(df, bounds, method=method)
+        arr = F.array(*[F.lit(b) for b in bounds])
+        check = got.withColumn(
+            "__pid_ref",
+            F.size(F.filter(arr, lambda b: b < F.col("__cluster_key"))).cast("int"),
+        )
+        assert check.where(F.col("__pid") != F.col("__pid_ref")).count() == 0, method
     empty = with_cluster_bucket(df, [], method="zorder")
     assert empty.select(F.max("__pid"), F.min("__pid")).first() == (0, 0)
+
+
+def test_morton_key_is_bit_identical_to_morton3(spark):
+    """The Catalyst Z-order key equals numpy ``morton3`` of the masked
+    inputs, and its bucket equals ``np.searchsorted(side="left")``, on
+    30k datagen rows plus edge inputs: each axis at 0 and 0xFFFF,
+    negative int64 hashes and the int64 extremes, with bounds that
+    equal some keys (the first and last included)."""
+    import pandas as pd
+
+    from datalakequality_spark.functions.spacecurves import (
+        bucket_of,
+        curve_inputs,
+        curve_key,
+        morton_key,
+        with_cluster_key,
+    )
+    from datalakequality_spark.sources.datagen import generate_sequences
+
+    rows = (
+        with_cluster_key(generate_sequences(spark, 30_000))
+        .select(*[c.alias(n) for n, c in zip("xyz", curve_inputs())], "__cluster_key")
+        .toPandas()
+    )
+    assert len(rows) == 30_000 and (rows.x < 0).any() and (rows.z < 0).any()
+    np.testing.assert_array_equal(
+        rows["__cluster_key"].to_numpy(), curve_key("zorder", rows.x, rows.y, rows.z)
+    )
+
+    m = 0xFFFF
+    edges = [(a, b, c) for a in (0, m) for b in (0, m) for c in (0, m)] + [
+        (-1, -1, -1),
+        (-(2**63), 2**63 - 1, -(2**16)),
+        (-(2**16) - 1, 2**16, -2),
+    ]
+    inputs = pd.concat([rows[["x", "y", "z"]], pd.DataFrame(edges, columns=["x", "y", "z"])])
+    want = curve_key("zorder", inputs.x, inputs.y, inputs.z)
+    assert want.min() == 0 and want.max() == 2**48 - 1  # the edges reach both ends
+    bounds = sorted(
+        {int(want.min()), int(want.max())}
+        | {int(k) for k in np.random.default_rng(3).choice(want, 61)}
+    )
+    x, y, z = (F.col(c) for c in "xyz")
+    key = morton_key(x, y, z)
+    got = (
+        spark.createDataFrame(inputs, "x long, y long, z long")
+        .select(key.alias("k"))
+        .select("k", bucket_of(F.col("k"), bounds).alias("pid"))
+        .toPandas()
+    )
+    np.testing.assert_array_equal(got.k.to_numpy(), want)
+    np.testing.assert_array_equal(
+        got.pid.to_numpy(), np.searchsorted(np.array(bounds), want, side="left")
+    )
