@@ -38,41 +38,28 @@ import os
 import uuid
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..sources import keybloom
 from ..sources.icemini import (
     FileEntry,
     IceMiniTable,
+    broadcast_threshold_bytes,
     key_hashes,
     local_path,
     max_partition_bytes,
+    read_parquet,
 )
 from .lineage import JobLog, run_job
 
 
-def broadcast_threshold_bytes(spark: SparkSession) -> int:
-    """Session autoBroadcastJoinThreshold in bytes, via Spark's own
-    parsers — handles ``10485760``, ``10m``, ``64MB`` and ``-1`` alike
-    (a hand regex silently mis-parsed unusual forms; VERDICT r3)."""
-    try:
-        return int(
-            spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
-        )
-    except Exception:
-        pass
-    val = str(spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "-1")).strip()
-    try:
-        return int(val)
-    except ValueError:
-        pass
-    try:
-        return int(
-            spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(val)
-        )
-    except Exception:
-        return -1
+def _matched_keys(table: IceMiniTable, keys_dir: str, key: str) -> DataFrame:
+    """The key→batch side table (``key``, ``__batch``) a batched plan
+    wrote under ``keys_dir``, read under its written schema."""
+    schema = T.StructType([table.schema()[key], T.StructField("__batch", T.IntegerType())])
+    return read_parquet(table.spark, schema, [keys_dir])
 
 
 def _chunk(items: list, size: int) -> list[list]:
@@ -237,7 +224,7 @@ def merge_into(
         # rows (commit()'s no_new_deletes_since, Iceberg
         # validateNoNewDeleteFiles)
         rewritten = _task_output(
-            spark, table, task, source, src_keys, key, keys_dir,
+            table, task, source, src_keys, key, keys_dir,
             matched=matched, not_matched_condition=not_matched_condition,
             version=read_v,
         )
@@ -273,7 +260,7 @@ def merge_into(
             return False
         ins = source
         if os.path.isdir(keys_dir):
-            seen = spark.read.parquet(keys_dir).select(key)
+            seen = _matched_keys(table, keys_dir, key).select(key)
             ins = source.join(seen, key, "left_anti")
         return (
             ins.select(key)
@@ -940,7 +927,6 @@ def _conditional_file_rewrite(
 
 
 def _task_output(
-    spark: SparkSession,
     table: IceMiniTable,
     task: dict[str, Any],
     source: DataFrame,
@@ -959,7 +945,7 @@ def _task_output(
     if kind == "inserts":
         ins = source
         if os.path.isdir(keys_dir):
-            seen = spark.read.parquet(keys_dir).select(key)
+            seen = _matched_keys(table, keys_dir, key).select(key)
             ins = source.join(seen, key, "left_anti")
         if not_matched_condition is not None:
             ins = ins.alias("s").where(F.expr(not_matched_condition))
@@ -998,7 +984,7 @@ def _task_output(
         upserts = source
     else:
         keys_b = (
-            spark.read.parquet(keys_dir)
+            _matched_keys(table, keys_dir, key)
             .where(F.col("__batch") == task["batch"])
             .select(key)
         )

@@ -99,10 +99,6 @@ def _column_mode(df: DataFrame, col: str) -> Any | None:
     return r[0][col] if r else None
 
 
-def _date_name_cols(df: DataFrame) -> list[str]:
-    return [c for c in df.columns if "date" in c.lower()]
-
-
 def apply_autofix(
     df: DataFrame, options: AutofixOptions | None = None
 ) -> DataFrame:

@@ -116,20 +116,3 @@ def pii_flags_df(df: DataFrame, columns: list[str] | None = None) -> DataFrame:
     return wide.selectExpr(
         f"stack({len(cols)}, {stack_args}) as (column_name, has_email, has_phone, has_id)"
     ).orderBy("column_name")
-
-
-def pii_row_flags(df: DataFrame, column: str) -> DataFrame:
-    """Per-row PII flags on one column — used by the quality gate to
-    quarantine and by autofix to mask. Pure JVM expressions."""
-    qc = F.col(column)
-    return df.withColumn(
-        "__pii_types",
-        F.array_compact(
-            F.array(
-                *[
-                    F.when(qc.rlike(pattern), F.lit(tname))
-                    for tname, pattern in PII_TYPES
-                ]
-            )
-        ),
-    )

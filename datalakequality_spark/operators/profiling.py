@@ -58,14 +58,6 @@ def numeric_columns(df: DataFrame) -> list[str]:
     ]
 
 
-def float_columns(df: DataFrame) -> list[str]:
-    return [
-        f.name
-        for f in df.schema.fields
-        if isinstance(f.dataType, (T.FloatType, T.DoubleType))
-    ]
-
-
 def nn(df: DataFrame, c: str) -> F.Column:
     """Numeric column with NaN normalized to NULL — pandas counts NaN as
     missing (``isna``) and drops it from stats, while Spark aggregates

@@ -8,48 +8,36 @@ brute force scans everything per query; hyperplane-LSH bucketing prunes
 compute but still *reads* everything; an IVF-clustered layout prunes
 I/O — a probe touches ``n_probe / n_centroids`` of the bytes.
 
-Lifecycle (the IceMini snapshot model, VERDICT r4 #3 — an index is a
-table, not a one-shot layout):
-
-    <root>/
-      data/<uuid>-c<cell>-<i>.parquet   (immutable; cell in the manifest)
-      v<N>.manifest.json                (codebook + file list + parent;
-                                         readers take max vN)
+The index is a ``manifeststore.ManifestStore`` (its layout, commits,
+stage publishing, scans and ``expire``; an index is a table, not a
+one-shot layout). Its files hold one cell each (the cell is in the
+manifest) and its manifests the codebook, the pinned id/vec column
+types and the file list:
 
 - ``build``  — train a spherical k-means codebook on a seeded UNBIASED
-  Bernoulli sample (not ``limit()`` — that was partition-biased on
-  pre-sorted inputs; VERDICT r4 nit), assign every vector its cell via
-  ONE Arrow-batched matmul, hash-exchange on the cell id and write the
+  Bernoulli sample (not ``limit()``, which is partition-biased on
+  pre-sorted inputs), assign every vector its cell via ONE
+  Arrow-batched matmul, hash-exchange on the cell id and write the
   cell-clustered files. Re-building an existing root commits a full-
   replace snapshot (old files become unreferenced, swept by ``expire``).
 - ``append`` — assign NEW vectors with the EXISTING codebook and commit
   only their per-cell files: O(batch) work, zero rebuild, existing
   files untouched. A cell accumulates multiple files across appends
-  (and ``max_rows_per_file`` splits hot cells at build time — the
-  one-file-per-cell hot-spot nit is gone); per-file cell stats stay
-  exact because every file holds exactly one cell.
-- commits are optimistic: version N+1 claimed with ``claim_json`` (temp
-  + hard link: the filesystem arbitrates, and a failed write never
-  takes the version); an append validates that the parent snapshot
-  still carries ITS codebook (``codebook_id``) — losing to a concurrent
-  rebuild raises CommitConflict, since cells assigned under the old
-  codebook are meaningless under the new one. Concurrent appends
-  commute and retry on top of the winner; ``_MAX_LOST_CLAIMS`` lost
-  races in a row raise CommitConflict, as IceMini's claims do.
-- ``expire`` — GC: drop all but the last ``keep_last`` manifests and
-  delete data files no retained version references.
+  (and ``max_rows_per_file`` splits hot cells at build time); per-file
+  cell stats stay exact because every file holds exactly one cell. An
+  append validates that the parent manifest still carries ITS codebook
+  (``codebook_id``): losing to a concurrent rebuild raises
+  CommitConflict, since cells assigned under the old codebook are
+  meaningless under the new one. Concurrent appends commute.
 
 Probe: rank codebook cells against the query (driver-side, K floats),
 prune the manifest to the top ``n_probe`` cells' files, scan only
-those, exact-cosine re-rank JVM-side.
+those under the pinned column types, exact-cosine re-rank JVM-side.
 """
 
 from __future__ import annotations
 
-import glob
-import json
 import os
-import shutil
 import uuid
 from typing import Any
 
@@ -59,15 +47,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .icemini import (
-    _MAX_LOST_CLAIMS,
-    ORPHAN_TEMP_AGE_S,
-    CommitConflict,
-    claim_json,
-    remove_stale,
-)
-
-_VMANIFEST_RE = "v{n}.manifest.json"
+from .icemini import CommitConflict
+from .manifeststore import ManifestStore
 
 
 def train_kmeans(
@@ -114,10 +95,12 @@ def cell_assign_udf(centroids: np.ndarray):
     return _cell
 
 
-class AnnIvfIndex:
+class AnnIvfIndex(ManifestStore):
     """IVF-clustered embedding index with snapshot lifecycle (see module
     docstring). ``self.manifest`` is the snapshot this object was loaded
     at; mutating operations re-resolve the current version at commit."""
+
+    kind = "ANN index"
 
     def __init__(
         self,
@@ -126,98 +109,32 @@ class AnnIvfIndex:
         manifest: dict[str, Any],
         version: int,
     ):
-        self.spark = spark
-        self.root = os.path.abspath(root)
-        self.manifest = manifest
-        self.version = version
+        super().__init__(spark, root, manifest, version)
         self.centroids = np.asarray(manifest["centroids"], dtype=np.float64)
 
-    # ------------------------------------------------------------ metadata
-
-    @staticmethod
-    def _manifest_path(root: str, version: int) -> str:
-        return os.path.join(root, _VMANIFEST_RE.format(n=version))
-
-    @staticmethod
-    def current_version(root: str) -> int:
-        vs = [
-            int(os.path.basename(p)[1:].split(".", 1)[0])
-            for p in glob.glob(os.path.join(root, "v*.manifest.json"))
-        ]
-        return max(vs, default=0)
-
-    @classmethod
-    def load(
-        cls, spark: SparkSession, root: str, version: int | None = None
-    ) -> "AnnIvfIndex":
-        root = os.path.abspath(root)
-        v = version if version is not None else cls.current_version(root)
-        if v == 0:
-            raise FileNotFoundError(f"no ANN index at {root}")
-        with open(cls._manifest_path(root, v)) as f:
-            return cls(spark, root, json.load(f), v)
-
-    def _try_claim(self, version: int, manifest: dict[str, Any]) -> bool:
-        if not claim_json(self._manifest_path(self.root, version), manifest):
-            return False
-        self.manifest, self.version = manifest, version
-        return True
-
-    # --------------------------------------------------------------- write
-
-    @staticmethod
     def _assign_and_write(
-        spark: SparkSession,
-        df: DataFrame,
-        id_col: str,
-        vec_col: str,
-        root: str,
-        cents: np.ndarray,
-        max_rows_per_file: int | None,
+        self, df: DataFrame, id_col: str, vec_col: str, max_rows_per_file: int | None
     ) -> list[dict[str, Any]]:
-        """Assign cells and write (uncommitted) cell-clustered files.
+        """Assign cells and publish (uncommitted) cell-clustered files.
 
         One hash exchange on the cell id: every cell lands wholly inside
         one task, so ``partitionBy`` emits per-cell files and per-file
         cell stats are exact (``maxRecordsPerFile`` splits hot cells
         into multiple files). At 10^12 scale the exchange moves each
-        vector once; probes then skip whole files. The stage directory
-        is removed even when the write fails; ``expire`` sweeps one a
-        killed driver left behind."""
-        import pyarrow.parquet as pq
-
-        data_dir = os.path.join(root, "data")
-        os.makedirs(data_dir, exist_ok=True)
-        prefix = uuid.uuid4().hex
-        stage = os.path.join(data_dir, f".stage-{prefix}")
+        vector once; probes then skip whole files."""
         assigned = df.select(
             F.col(id_col),
             F.col(vec_col),
-            cell_assign_udf(cents)(F.col(vec_col)).alias("__cell"),
+            cell_assign_udf(self.centroids)(F.col(vec_col)).alias("__cell"),
         )
-        writer = assigned.repartition(len(cents), "__cell").write.mode("overwrite")
+        writer = assigned.repartition(len(self.centroids), "__cell").write.mode("overwrite")
         if max_rows_per_file:
             writer = writer.option("maxRecordsPerFile", max_rows_per_file)
-        files: list[dict[str, Any]] = []
-        try:
-            writer.partitionBy("__cell").parquet(stage)
-            for p in sorted(glob.glob(os.path.join(stage, "__cell=*", "*.parquet"))):
-                cell = int(os.path.basename(os.path.dirname(p)).split("=", 1)[1])
-                final = os.path.join(
-                    data_dir, f"{prefix}-c{cell}-{len(files):05d}.parquet"
-                )
-                os.rename(p, final)
-                files.append(
-                    {
-                        "path": os.path.relpath(final, root),
-                        "cell": cell,
-                        "rows": pq.read_metadata(final).num_rows,
-                        "size_bytes": os.path.getsize(final),
-                    }
-                )
-        finally:
-            shutil.rmtree(stage, ignore_errors=True)
-        return files
+        return self._publish(
+            lambda stage: writer.partitionBy("__cell").parquet(stage),
+            # part paths are __cell=<cell>/part-*.parquet
+            lambda part: {"cell": int(part.split(os.sep, 1)[0].split("=", 1)[1])},
+        )
 
     @classmethod
     def build(
@@ -252,34 +169,25 @@ class AnnIvfIndex:
             iters=iters,
             seed=seed,
         )
-        files = cls._assign_and_write(
-            spark, df, id_col, vec_col, root, cents, max_rows_per_file
-        )
         manifest = {
             "id_col": id_col,
             "vec_col": vec_col,
-            # column types pinned at build time so the empty-probe
-            # DataFrame's schema matches the data files exactly (a
-            # hardcoded LongType id diverged for string-id indexes and
-            # broke downstream unions; ADVICE r4)
+            # column types pinned at build time: probes read the files
+            # under them, so an empty and a non-empty probe share one
+            # schema and no inference job runs
             "id_type": df.schema[id_col].dataType.simpleString(),
             "vec_type": df.schema[vec_col].dataType.simpleString(),
             "n_centroids": n_centroids,
             "codebook_id": uuid.uuid4().hex,  # appends pin against this
             "centroids": cents.tolist(),
-            "files": files,
         }
         idx = cls(spark, root, manifest, 0)
+        manifest["files"] = idx._assign_and_write(df, id_col, vec_col, max_rows_per_file)
         # a re-build is a full-replace snapshot on top of whatever is
         # current — old files become unreferenced and expire() sweeps
-        # them; claim races (vs other builders) just advance the
-        # version, up to _MAX_LOST_CLAIMS in a row
-        for _ in range(_MAX_LOST_CLAIMS):
-            if idx._try_claim(cls.current_version(root) + 1, manifest):
-                return idx
-        raise CommitConflict(
-            f"ann build: lost {_MAX_LOST_CLAIMS} manifest claims in a row"
-        )
+        # them; claim races (vs other builders) just advance the version
+        idx._commit("ann build", lambda parent: manifest)
+        return idx
 
     def append(self, df: DataFrame) -> "AnnIvfIndex":
         """Incrementally index a new vector batch: assign cells with the
@@ -289,58 +197,19 @@ class AnnIvfIndex:
         replaced the codebook (cell ids would be meaningless)."""
         m = self.manifest
         new_files = self._assign_and_write(
-            self.spark,
-            df.select(m["id_col"], m["vec_col"]),
-            m["id_col"],
-            m["vec_col"],
-            self.root,
-            self.centroids,
-            None,
+            df.select(m["id_col"], m["vec_col"]), m["id_col"], m["vec_col"], None
         )
-        for _ in range(_MAX_LOST_CLAIMS):
-            base = self.current_version(self.root)
-            parent = self.load(self.spark, self.root, base).manifest
+
+        def build(parent: dict[str, Any]) -> dict[str, Any]:
             if parent.get("codebook_id") != m.get("codebook_id"):
                 raise CommitConflict(
                     "ann append: codebook replaced by a concurrent rebuild "
                     "— re-assign the batch against the new codebook"
                 )
-            manifest = {**parent, "files": [*parent["files"], *new_files]}
-            if self._try_claim(base + 1, manifest):
-                return self
-        raise CommitConflict(
-            f"ann append: lost {_MAX_LOST_CLAIMS} manifest claims in a row"
-        )
+            return {**parent, "files": [*parent["files"], *new_files]}
 
-    def expire(self, keep_last: int = 1) -> dict[str, Any]:
-        """Drop all but the last ``keep_last`` manifests, GC data files
-        no retained version references (O(#files) driver-side,
-        metadata-scale — the IceMini expire shape), and sweep stage
-        directories older than IceMini's orphan-temp age."""
-        remove_stale(os.path.join(self.root, "data", ".stage-*"), ORPHAN_TEMP_AGE_S)
-        current = self.current_version(self.root)
-        keep = set(range(max(1, current - keep_last + 1), current + 1))
-        retained: set[str] = set()
-        for v in keep:
-            with open(self._manifest_path(self.root, v)) as f:
-                retained.update(e["path"] for e in json.load(f)["files"])
-        deleted = []
-        for p in glob.glob(os.path.join(self.root, "data", "*.parquet")):
-            rel = os.path.relpath(p, self.root)
-            if rel not in retained:
-                os.remove(p)
-                deleted.append(rel)
-        dropped_versions = []
-        for p in glob.glob(os.path.join(self.root, "v*.manifest.json")):
-            v = int(os.path.basename(p)[1:].split(".", 1)[0])
-            if v not in keep:
-                os.remove(p)
-                dropped_versions.append(v)
-        return {
-            "deleted_files": sorted(deleted),
-            "deleted_versions": sorted(dropped_versions),
-            "retained_versions": sorted(keep),
-        }
+        self._commit("ann append", build)
+        return self
 
     # ------------------------------------------------------------------ probe
 
@@ -358,33 +227,14 @@ class AnnIvfIndex:
 
     def scan_cells(self, cells: list[int]) -> DataFrame:
         """Scan ONLY the probed cells' files (the pruned I/O path)."""
-        paths = [os.path.join(self.root, p) for p in self.prune_files(cells)]
-        if not paths:
-            # empty-result schema from the manifest's pinned column
-            # types (pre-pinning manifests fall back to the old
-            # long-id/double-vec assumption)
-            return self.spark.createDataFrame(
-                [],
-                T.StructType(
-                    [
-                        T.StructField(
-                            self.manifest["id_col"],
-                            T.DataType.fromDDL(
-                                self.manifest.get("id_type", "bigint")
-                            ),
-                        ),
-                        T.StructField(
-                            self.manifest["vec_col"],
-                            T.DataType.fromDDL(
-                                self.manifest.get("vec_type", "array<double>")
-                            ),
-                        ),
-                    ]
-                ),
-            )
-        return self.spark.read.parquet(*paths).select(
-            self.manifest["id_col"], self.manifest["vec_col"]
+        m = self.manifest
+        schema = T.StructType(
+            [
+                T.StructField(m["id_col"], T.DataType.fromDDL(m["id_type"])),
+                T.StructField(m["vec_col"], T.DataType.fromDDL(m["vec_type"])),
+            ]
         )
+        return self._scan(schema, self.prune_files(cells))
 
     def topk(self, query: list[float], k: int = 10, n_probe: int = 4) -> DataFrame:
         """IVF probe: prune to n_probe cells' files, exact-cosine

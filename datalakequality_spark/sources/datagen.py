@@ -143,23 +143,3 @@ def generate_merge_batch(
     )
     inserts = generate_sequences(spark, insert_rows, start_id=table_rows, rev=0, seed=seed, **kw)
     return updates.unionByName(inserts)
-
-
-def generate_drifted(
-    spark: SparkSession,
-    n_rows: int,
-    drift_source: str = "web",
-    shift: float = 1.6,
-    seed: int = 42,
-    **kw,
-) -> DataFrame:
-    """Drift variant: n_tok of one source scaled by ``shift`` (>30% mean
-    shift ⇒ PSI > 0.25), mirroring the customers_v1→v2 demo."""
-    df = generate_sequences(spark, n_rows, seed=seed, **kw)
-    return df.withColumn(
-        "n_tok",
-        F.when(
-            F.col("source") == drift_source,
-            F.least((F.col("n_tok") * shift).cast("int"), F.lit(8192)),
-        ).otherwise(F.col("n_tok")),
-    ).withColumn("tokens", F.slice(F.concat("tokens", "tokens"), 1, F.col("n_tok")))

@@ -28,9 +28,9 @@ validation semantics for conflicting rewrites); otherwise it retries on
 top. ``version-hint.text`` is advisory (crash between snapshot write and
 hint update is harmless — readers take ``max(vN present)``).
 
-Every snapshot after v1 is claimed by one bounded loop
-(``IceMiniTable._claim_next``): commits, schema changes and rollbacks
-differ only in how they build the snapshot from its parent.
+Every snapshot after v1 is claimed by one bounded loop (``claim_loop``,
+which the side stores' manifests share): commits, schema changes and
+rollbacks differ only in how they build the snapshot from its parent.
 
 Scale notes: all metadata ops are O(#files) driver-side, the same cost
 class as Iceberg's own planning. Every file under data/ — data files,
@@ -97,6 +97,16 @@ def max_partition_bytes(spark: SparkSession) -> int:
         return 128 * 1024 * 1024
 
 
+def broadcast_threshold_bytes(spark: SparkSession) -> int:
+    """Session ``spark.sql.autoBroadcastJoinThreshold`` in bytes, parsed
+    by Spark's own conf (``10485760``, ``10m``, ``64MB`` and ``-1``
+    alike), -1 (no broadcast hint) if it cannot be read."""
+    try:
+        return int(spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold())
+    except Exception:
+        return -1
+
+
 def sidecar_probe_tasks(spark: SparkSession, entries: Iterable["FileEntry"]) -> int:
     """Tasks for a probe over the key-Bloom sidecars of ``entries``:
     one per ``maxPartitionBytes`` of sidecar bytes (a sidecar's size
@@ -123,6 +133,17 @@ def _jvm_strings(spark: SparkSession, items: list[str]):
     return jvm.scala.collection.immutable.ArraySeq.unsafeWrapArray(
         jvm.org.apache.commons.lang3.StringUtils.split(_SEP.join(items), _SEP)
     )
+
+
+def read_parquet(spark: SparkSession, schema: T.StructType, paths: list[str]) -> DataFrame:
+    """ONE parquet scan of ``paths`` (files or Spark-written
+    directories) under ``schema`` (no inference job), the path list
+    passed to the JVM in one gateway call. Glob metacharacters are
+    escaped: under a root holding a backslash, ``\\b`` would glob to
+    ``b`` and the read fail with PATH_NOT_FOUND."""
+    escaped = [_GLOB_CHARS.sub(r"\\\1", p) for p in paths]
+    reader = spark.read.schema(schema)
+    return reader._df(reader._jreader.parquet(_jvm_strings(spark, escaped)))
 
 
 def input_uris(df: DataFrame) -> list[str]:
@@ -189,6 +210,22 @@ def claim_json(path: str, payload: dict[str, Any]) -> bool:
 
 class CommitConflict(Exception):
     """A concurrent commit invalidated this writer's input files."""
+
+
+def claim_loop(what: str, base: int, attempt, current):
+    """The one optimistic claim loop behind every IceMini snapshot after
+    v1 and every side-store manifest. ``attempt(base)`` builds the next
+    version's content from version ``base`` and tries to claim ``base +
+    1``: it returns the claimed result, or None on a lost race, and may
+    raise to abort. A lost race re-resolves the head with ``current()``
+    and rebuilds on top of the winner; after ``_MAX_LOST_CLAIMS`` lost
+    races in a row it raises ``CommitConflict``."""
+    for _ in range(_MAX_LOST_CLAIMS):
+        won = attempt(base)
+        if won is not None:
+            return won
+        base = current()
+    raise CommitConflict(f"{what}: lost {_MAX_LOST_CLAIMS} claims in a row")
 
 
 def applicable_delete_paths(entry, deletes) -> frozenset:
@@ -558,33 +595,26 @@ class IceMiniTable:
         return True
 
     def _claim_next(self, operation: str, build, base: int | None = None) -> Snapshot:
-        """The one optimistic claim loop behind every snapshot after v1.
-        Resolve the current version (or start at ``base``), build the
-        new snapshot's content from that parent — ``build(base,
-        parent)`` returns the Snapshot fields other than its ids,
-        ``operation`` and timestamp, and may raise to abort (e.g.
-        ``CommitConflict`` when the parent invalidates the operation) —
-        and claim ``base + 1``. A lost race re-resolves and rebuilds on
-        top of the winner; after ``_MAX_LOST_CLAIMS`` lost races in a
-        row it raises ``CommitConflict``."""
-        if base is None:
-            base = self.current_version()
-        for _ in range(_MAX_LOST_CLAIMS):
+        """Claim the snapshot after the current version (or ``base``)
+        on ``claim_loop``: ``build(base, parent)`` returns the Snapshot
+        fields other than its ids, ``operation`` and timestamp, and may
+        raise to abort (e.g. ``CommitConflict`` when the parent
+        invalidates the operation)."""
+
+        def attempt(base: int) -> Snapshot | None:
             parent = self.snapshot(base)
-            content = build(base, parent)
             snap = Snapshot(
                 snapshot_id=base + 1,
                 parent_snapshot_id=parent.snapshot_id,
                 operation=operation,
                 timestamp_ms=int(time.time() * 1000),
-                **content,
+                **build(base, parent),
             )
-            if self._try_claim_version(base + 1, snap):
-                return snap
+            return snap if self._try_claim_version(base + 1, snap) else None
+
+        if base is None:
             base = self.current_version()
-        raise CommitConflict(
-            f"{operation}: lost {_MAX_LOST_CLAIMS} snapshot claims in a row"
-        )
+        return claim_loop(operation, base, attempt, self.current_version)
 
     def commit(
         self,
@@ -1082,13 +1112,8 @@ class IceMiniTable:
 
     def read_parquet(self, schema: T.StructType, rel_paths: list[str]) -> DataFrame:
         """ONE parquet scan of the table files ``rel_paths`` under
-        ``schema`` (no inference job), the path list passed to the JVM
-        in one gateway call. Glob metacharacters are escaped: under a
-        root holding a backslash, ``\\b`` would glob to ``b`` and the
-        read fail with PATH_NOT_FOUND."""
-        paths = [_GLOB_CHARS.sub(r"\\\1", self._abs(p)) for p in rel_paths]
-        reader = self.spark.read.schema(schema)
-        return reader._df(reader._jreader.parquet(_jvm_strings(self.spark, paths)))
+        ``schema`` (module-level ``read_parquet``)."""
+        return read_parquet(self.spark, schema, [self._abs(p) for p in rel_paths])
 
     def file_seq(self, df: DataFrame, entries: list[FileEntry]) -> Column:
         """Each row's sequence number in ``df`` — a scan of exactly the
@@ -1133,8 +1158,6 @@ class IceMiniTable:
         manifest-known size fits the session threshold — at 10^12-row
         scale a takedown's key set is tiny, so joining it adds no
         shuffle to the data scan."""
-        from ..maintenance.merge import broadcast_threshold_bytes
-
         scan = self._key_scan(dels, version)
         keys = scan.select(
             F.col("doc_id").alias("__del_doc_id"),

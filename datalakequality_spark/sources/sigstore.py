@@ -20,38 +20,24 @@ The plan therefore carries exactly ONE ArrowEvalPython node — over the
 new batch — regardless of corpus size (pinned by
 ``tests/test_sigstore.py::test_incremental_dedup_no_store_recompute``).
 
-Store layout (the same versioned-manifest lifecycle as the ANN index):
-
-    <root>/
-      data/<uuid>-*.parquet     (doc_id, sh, sig) — immutable
-      v<N>.manifest.json        file list + MinHash params + parent
-
-MinHash parameters (num_perm, k, bands) are pinned at create time and
-validated on every batch — mixing signature generations would silently
-break banding. Appends commit optimistically (``claim_json``: temp +
-hard link, so a failed write never takes the version) and commute: a
-lost race retries on top of the winner, and ``_MAX_LOST_CLAIMS`` in a
-row raise CommitConflict. ``expire`` GCs unreferenced files.
+The store is a ``manifeststore.ManifestStore`` (its layout, commits,
+stage publishing, scans and ``expire``): its files hold (doc_id, sh,
+sig) and its manifests the MinHash parameters (num_perm, k, bands).
+They are pinned at create time and validated on every append, also
+against the parent a concurrent writer committed — mixing signature
+generations would silently break banding. Appends commute: a lost race
+retries on top of the winner.
 """
 
 from __future__ import annotations
 
-import glob
-import json
 import os
-import uuid
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .icemini import (
-    _MAX_LOST_CLAIMS,
-    ORPHAN_TEMP_AGE_S,
-    CommitConflict,
-    claim_json,
-    remove_stale,
-)
+from .manifeststore import ManifestStore
 
 SIG_SCHEMA = "doc_id string, sh array<long>, sig array<long>"
 
@@ -67,28 +53,8 @@ def band_hashes(sig_col, num_perm: int, bands: int):
     )
 
 
-class MinHashStore:
-    def __init__(
-        self, spark: SparkSession, root: str, manifest: dict[str, Any], version: int
-    ):
-        self.spark = spark
-        self.root = os.path.abspath(root)
-        self.manifest = manifest
-        self.version = version
-
-    # ------------------------------------------------------------ lifecycle
-
-    @staticmethod
-    def _mpath(root: str, v: int) -> str:
-        return os.path.join(root, f"v{v}.manifest.json")
-
-    @staticmethod
-    def current_version(root: str) -> int:
-        vs = [
-            int(os.path.basename(p)[1:].split(".", 1)[0])
-            for p in glob.glob(os.path.join(root, "v*.manifest.json"))
-        ]
-        return max(vs) if vs else 0
+class MinHashStore(ManifestStore):
+    kind = "signature store"
 
     @classmethod
     def create(
@@ -101,57 +67,11 @@ class MinHashStore:
     ) -> "MinHashStore":
         if num_perm % bands:
             raise ValueError("num_perm must be divisible by bands")
-        root = os.path.abspath(root)
-        os.makedirs(os.path.join(root, "data"), exist_ok=True)
-        store = cls(
-            spark,
-            root,
-            {"num_perm": num_perm, "k": k, "bands": bands, "files": []},
-            0,
-        )
+        store = cls(spark, root, {"num_perm": num_perm, "k": k, "bands": bands, "files": []}, 0)
+        os.makedirs(os.path.join(store.root, "data"), exist_ok=True)
         if not store._try_claim(1, store.manifest):
-            raise FileExistsError(f"signature store already exists at {root}")
+            raise FileExistsError(f"signature store already exists at {store.root}")
         return store
-
-    @classmethod
-    def load(
-        cls, spark: SparkSession, root: str, version: int | None = None
-    ) -> "MinHashStore":
-        root = os.path.abspath(root)
-        v = version if version is not None else cls.current_version(root)
-        if v == 0:
-            raise FileNotFoundError(f"no signature store at {root}")
-        with open(cls._mpath(root, v)) as f:
-            return cls(spark, root, json.load(f), v)
-
-    def _try_claim(self, version: int, manifest: dict[str, Any]) -> bool:
-        if not claim_json(self._mpath(self.root, version), manifest):
-            return False
-        self.manifest, self.version = manifest, version
-        return True
-
-    def expire(self, keep_last: int = 1) -> dict[str, Any]:
-        """Drop all but the last ``keep_last`` manifests, GC data files
-        no retained version references, and sweep stage directories
-        older than IceMini's orphan-temp age."""
-        remove_stale(os.path.join(self.root, "data", ".stage-*"), ORPHAN_TEMP_AGE_S)
-        current = self.current_version(self.root)
-        keep = set(range(max(1, current - keep_last + 1), current + 1))
-        retained: set[str] = set()
-        for v in keep:
-            with open(self._mpath(self.root, v)) as f:
-                retained.update(e["path"] for e in json.load(f)["files"])
-        deleted = []
-        for p in glob.glob(os.path.join(self.root, "data", "*.parquet")):
-            rel = os.path.relpath(p, self.root)
-            if rel not in retained:
-                os.remove(p)
-                deleted.append(rel)
-        for p in glob.glob(os.path.join(self.root, "v*.manifest.json")):
-            v = int(os.path.basename(p)[1:].split(".", 1)[0])
-            if v not in keep:
-                os.remove(p)
-        return {"deleted_files": sorted(deleted), "retained_versions": sorted(keep)}
 
     # ------------------------------------------------------------------ I/O
 
@@ -173,67 +93,29 @@ class MinHashStore:
             .where(F.size("sh") > 0)
         )
 
-    def _write_files(self, sigs: DataFrame) -> list[dict[str, Any]]:
-        """Write (uncommitted) signature files: a Spark write into a
-        stage directory, whose part files are renamed into data/. The
-        stage is removed even when the write fails; ``expire`` sweeps
-        one a killed driver left behind."""
-        import shutil
+    def _append(self, sigs: DataFrame) -> list[dict[str, Any]]:
+        """Publish signature files and commit them on top of the current
+        manifest, whose MinHash params must still be this store's."""
+        files = self._publish(lambda stage: sigs.write.mode("overwrite").parquet(stage))
 
-        import pyarrow.parquet as pq
-
-        prefix = uuid.uuid4().hex
-        stage = os.path.join(self.root, "data", f".stage-{prefix}")
-        try:
-            sigs.write.mode("overwrite").parquet(stage)
-            files = []
-            for i, p in enumerate(
-                sorted(glob.glob(os.path.join(stage, "part-*.parquet")))
-            ):
-                final = os.path.join(self.root, "data", f"{prefix}-{i:05d}.parquet")
-                os.rename(p, final)
-                files.append(
-                    {
-                        "path": os.path.relpath(final, self.root),
-                        "rows": pq.read_metadata(final).num_rows,
-                        "size_bytes": os.path.getsize(final),
-                    }
-                )
-        finally:
-            shutil.rmtree(stage, ignore_errors=True)
-        return files
-
-    def _commit_append(self, files: list[dict[str, Any]]) -> None:
-        """Claim the next manifest with ``files`` appended; a lost race
-        retries on top of the winner, and after ``_MAX_LOST_CLAIMS`` in
-        a row raises ``CommitConflict``."""
-        for _ in range(_MAX_LOST_CLAIMS):
-            base = self.current_version(self.root)
-            with open(self._mpath(self.root, base)) as f:
-                parent = json.load(f)
+        def build(parent: dict[str, Any]) -> dict[str, Any]:
             for p in ("num_perm", "k", "bands"):
                 if parent[p] != self.manifest[p]:
                     raise ValueError(
                         "signature store params changed under a concurrent "
                         f"writer ({p}): {parent[p]} != {self.manifest[p]}"
                     )
-            manifest = {**parent, "files": [*parent["files"], *files]}
-            if self._try_claim(base + 1, manifest):
-                return
-        raise CommitConflict(
-            f"signature store append: lost {_MAX_LOST_CLAIMS} manifest claims in a row"
-        )
+            return {**parent, "files": [*parent["files"], *files]}
+
+        self._commit("signature store append", build)
+        return files
 
     def scan(self) -> DataFrame:
-        paths = [os.path.join(self.root, e["path"]) for e in self.manifest["files"]]
-        if not paths:
-            return self.spark.createDataFrame([], SIG_SCHEMA)
-        return self.spark.read.schema(SIG_SCHEMA).parquet(*paths)
+        return self._scan(SIG_SCHEMA, [e["path"] for e in self.manifest["files"]])
 
     def add_batch(self, df: DataFrame, id_col: str, text_col: str) -> dict[str, Any]:
         """Signature-compute a batch once and append it to the store."""
-        files = self._write_files(self._signatures_of(df, id_col, text_col))
-        self._commit_append(files)
+        files = self._append(self._signatures_of(df, id_col, text_col))
         return {
             "files": len(files),
             "rows": sum(f["rows"] for f in files),
@@ -302,5 +184,5 @@ class MinHashStore:
         if add:
             # reuses the persisted new_sigs frame — signatures are still
             # computed exactly once per document
-            self._commit_append(self._write_files(new_sigs))
+            self._append(new_sigs)
         return verified

@@ -400,7 +400,7 @@ def test_merge_batched_crash_resume(spark, tmp_path, monkeypatch):
 def test_broadcast_threshold_parsing(spark):
     """merge's broadcast gate parses every conf form Spark accepts
     (plain bytes, short suffix, unit suffix, disabled)."""
-    from datalakequality_spark.maintenance.merge import broadcast_threshold_bytes
+    from datalakequality_spark.sources.icemini import broadcast_threshold_bytes
 
     orig = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
@@ -1853,8 +1853,8 @@ def test_maintenance_under_a_root_that_needs_uri_escaping(spark, tmp_path):
     matching manifest paths, and Hadoop globs every path it reads, so
     a ``\\`` in the root must be escaped: the gated compaction and the
     gated rewrite each drop the planted file's rows, MERGE finds its
-    target files, and the delete-backlog consolidation keeps the scan
-    content."""
+    target files, the delete-backlog consolidation keeps the scan
+    content, and a batched MERGE reads back its key→batch side table."""
     from datalakequality_spark.maintenance.compaction import (
         compact_delete_files,
     )
@@ -1891,6 +1891,16 @@ def test_maintenance_under_a_root_that_needs_uri_escaping(spark, tmp_path):
     assert n < 4400
     r = compact_delete_files(t)
     assert r["output_delete_rows"] > 0
+    assert t.scan().count() == n and _content_hash(t) == h
+
+    t = build("batched")
+    src = generate_merge_batch(spark, 4000, update_fraction=0.2, insert_rows=300, seed=7)
+    want = t.scan().join(src.select("doc_id"), "doc_id", "left_anti").unionByName(src)
+    n, h = want.count(), want.agg(
+        F.sum(F.pmod(F.xxhash64("doc_id", "tokens", "n_tok", "source"), F.lit(2**31)))
+    ).collect()[0][0]
+    r = merge_into(t, src, max_batch_files=2)
+    assert r["tasks"] > 2  # two or more file batches plus the inserts task
     assert t.scan().count() == n and _content_hash(t) == h
 
 

@@ -380,3 +380,50 @@ def test_side_store_stages_are_removed_on_failure_and_swept_by_expire(spark, tmp
         os.utime(old, (past, past))
         side.expire()
         assert stages(side.root) == [".stage-young"]
+
+
+def test_side_stores_under_a_root_that_needs_uri_escaping(spark, tmp_path):
+    """The signature store and the ANN index publish and read their
+    files under a root holding a space, a ``%``, a ``+`` and a ``\\``
+    (which Hadoop globs away unless the read escapes it) exactly as
+    under a plain root, and leave no stage directory behind."""
+    import numpy as np
+
+    from datalakequality_spark.sources.annindex import AnnIvfIndex
+    from datalakequality_spark.sources.sigstore import MinHashStore
+
+    def words(i: int) -> str:
+        return " ".join(f"w{(i * 7 + j) % 50}" for j in range(20))
+
+    old = spark.createDataFrame([(f"a{i}", words(i)) for i in range(30)], "doc_id string, text string")
+    new = spark.createDataFrame(  # each an exact dup of a stored doc
+        [(f"b{i}", words(i + 1)) for i in range(0, 27, 3)], "doc_id string, text string"
+    )
+    vecs = np.random.default_rng(5).standard_normal((80, 4))
+
+    def vec_df(lo: int, hi: int):
+        return spark.createDataFrame(
+            [(i, vecs[i].tolist()) for i in range(lo, hi)], "id long, v array<double>"
+        )
+
+    def run(root: str):
+        store = MinHashStore.create(spark, os.path.join(root, "sig"))
+        store.add_batch(old, "doc_id", "text")
+        pairs = sorted(map(tuple, store.dedup_batch(new, "doc_id", "text").collect()))
+        ids = sorted(r["doc_id"] for r in store.scan().select("doc_id").collect())
+        index = AnnIvfIndex.build(spark, vec_df(0, 60), "id", "v", os.path.join(root, "ivf"), n_centroids=3)
+        index.append(vec_df(60, 80))
+        top = [r["id"] for r in index.topk(vecs[61].tolist(), k=5, n_probe=2).collect()]
+        expired = [store.expire(), index.expire()]
+        stages = [
+            n for side in (store, index)
+            for n in os.listdir(os.path.join(side.root, "data")) if n.startswith(".stage-")
+        ]
+        return pairs, ids, top, [e["deleted_versions"] for e in expired], stages
+
+    escaped = run(str(tmp_path / "sp ace%20+x\\b"))
+    pairs, ids, top, deleted_versions, stages = escaped
+    assert {(f"a{i + 1}", f"b{i}", 1.0) for i in range(0, 27, 3)} <= set(pairs)
+    assert len(ids) == 39 and top[0] == 61
+    assert deleted_versions == [[1, 2], [1]] and stages == []
+    assert escaped == run(str(tmp_path / "plain"))
