@@ -309,13 +309,13 @@ def main(argv: list[str] | None = None) -> dict[str, Any]:
             "deletes": written.where("_change_type = 'DELETE'").count(),
         }
     elif args.cmd == "gate":
-        from .maintenance.compaction import gate_batch
+        from .plans.quality_gate import gate_entries
 
         entries = table.live_entries()
-        clean, quarantine = gate_batch(table, [entries], None)
+        quarantine = gate_entries(table, entries)
         out = {
             "files": len(entries),
-            "clean_files": sum(len(b) for b in clean),
+            "clean_files": len(entries) - len(quarantine),
             "quarantine": quarantine,
         }
     else:  # pragma: no cover - argparse enforces choices

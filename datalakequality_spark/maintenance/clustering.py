@@ -13,8 +13,8 @@ manifest-level pruning (IceMiniTable.prune_entries) needs.
 Each shard runs ONE light planning job, then ONE heavy pass. The
 planning job scans only ``doc_id``, ``n_tok`` and ``source`` of the
 shard's raw input files, grouped by ``input_file_name()``: per file it
-computes the quality gate's aggregates (``plans/quality_gate``, when
-gated) and collects a hash-sampled list of curve keys: Z-order keys
+computes the quality gate's aggregates (``plans/quality_gate.file_gate``,
+when gated) and collects a hash-sampled list of curve keys: Z-order keys
 from the same expression the heavy pass evaluates
 (``spacecurves.with_cluster_key``); for Hilbert the three JVM-computed
 curve inputs, which the driver keys with the numpy kernel its Arrow
@@ -59,9 +59,8 @@ from ..functions.spacecurves import (
     with_cluster_bucket,
     with_cluster_key,
 )
-from ..plans.quality_gate import gate_aggregates, gate_verdicts
+from ..plans.quality_gate import file_gate
 from ..sources.icemini import FileEntry, IceMiniTable, local_path
-from . import compaction
 from .lineage import JobLog, run_job
 
 # ~500 sampled keys per output file bound the bucket-size error well
@@ -100,12 +99,12 @@ def _plan_shard(
     job runs when there is neither a gate nor more than one bucket."""
     if not (quality_gate or num_files > 1):
         return [], []
-    if quality_gate:
-        tokens_nulls, global_stats = compaction.gate_setup(table, entries)
     df = table.read_parquet(table.schema(), [e.path for e in entries]).select(
         "doc_id", "n_tok", "source", F.input_file_name().alias("__file")
     )
-    aggs = gate_aggregates(df, global_stats) if quality_gate else []
+    aggs, judge = (
+        file_gate(table, entries, df, gate_thresholds) if quality_gate else ([], lambda rows: [])
+    )
     if num_files > 1:
         total = sum(e.rows for e in entries)
         frac = _SAMPLE_ROWS_PER_FILE * num_files / max(total, 1)
@@ -120,11 +119,7 @@ def _plan_shard(
         )
     rows = df.groupBy("__file").agg(*aggs).collect()
 
-    quarantine = (
-        compaction.quarantine_records(table, gate_verdicts(rows, gate_thresholds, tokens_nulls))
-        if quality_gate
-        else []
-    )
+    quarantine = judge(rows)
     bounds: list[int] = []
     if num_files > 1:
         bad = {table._abs(q["path"]) for q in quarantine}
@@ -224,8 +219,8 @@ def rewrite_sorted(
     Before the heavy pass each shard runs ONE planning job over the
     light columns of its inputs (``_plan_shard``): it yields the range
     bucket bounds from a hash sample of curve keys and, with
-    ``quality_gate=True``, the per-file gate verdicts — the same
-    aggregates and verdicts as compaction's ``gate_batch``. Failing
+    ``quality_gate=True``, the per-file gate verdicts — the same gate
+    (``plans/quality_gate.file_gate``) as compaction's ``gate_batch``. Failing
     files are quarantined out of the rewrite and the live set, and
     their rows do not count toward the bounds.
 

@@ -6,17 +6,18 @@ Iceberg's RewriteDataFiles planning): files smaller than
 ``target_bytes``; files already ≥ the threshold are left untouched, so a
 steady-state table converges and compaction is incremental.
 
-Execution is ONE Spark job per batch of bins: the file→bin assignment is
-broadcast and joined on ``input_file_name()`` (no shuffle for the map
-side), then a single hash repartition on ``bin_id`` + ``partitionBy``
-write produces exactly one output file per bin. Batches (≤
+Execution is one SINGLE-TASK Spark job per bin (``rewrite_bins``),
+submitted concurrently from a thread pool: ``coalesce(1)`` over the
+bin's member files into the table's streaming writer, so each bin
+becomes exactly one output file with no shuffle. Batches (≤
 ``bins_per_batch`` bins) are the resumability unit: each batch is its
 own snapshot commit + lineage record, so a killed job restarts from the
 last committed batch (see maintenance/lineage.py).
 
-Quality gates can run inside each batch pass (plans/quality_gate.py):
-per-input-file metrics come from the same frame already materialized,
-and failing files are quarantined out of the commit.
+Quality gates can run inside each batch pass (``gate_batch``): one
+light grouped scan of the batch's input files runs the per-file gate
+(``plans/quality_gate.file_gate``) before the rewrite, and failing
+files are quarantined out of the commit.
 """
 
 from __future__ import annotations
@@ -112,75 +113,15 @@ def rewrite_bins(
     return run_tasks(list(enumerate(bins)), lambda ib: one(*ib), workers)
 
 
-def _null_rows(table: IceMiniTable, e: FileEntry, column: str) -> int:
-    """Null rows of ``column`` in one data file: the writer's manifest
-    stat, else (files written before it) an exact count of that one
-    column of that one file."""
-    n = getattr(e, f"null_{column}")
-    if n is None:
-        import pyarrow.parquet as pq
-
-        n = pq.read_table(table._abs(e.path), columns=[column]).column(column).null_count
-    return n
-
-
-def gate_setup(
-    table: IceMiniTable, entries: list[FileEntry]
-) -> tuple[dict[str, int], tuple[float, float] | None]:
-    """The gate's driver-side inputs for ``entries``: the tokens
-    array's null rows by absolute path (from the manifest —
-    the array is never scanned), and the global n_tok (mean, pop-std)
-    from manifest moments (Σn_tok, Σn_tok² are in the file stats —
-    saves the gate's global-agg data pass). The denominator counts
-    non-null n_tok only (Spark aggs skip nulls), so the n_tok null
-    rows come from the manifest too; if any entry predates the moments
-    the stats are None and the gate computes them in one tiny job."""
-    import math
-
-    tokens_nulls = {table._abs(e.path): _null_rows(table, e, "tokens") for e in entries}
-    global_stats = None
-    if entries and all(e.sum_sq_n_tok is not None for e in entries):
-        n = sum(e.rows - _null_rows(table, e, "n_tok") for e in entries)
-        if n > 0:
-            mean = sum(e.token_count for e in entries) / n
-            var = sum(e.sum_sq_n_tok for e in entries) / n - mean * mean
-            global_stats = (mean, math.sqrt(max(var, 0.0)))
-    return tokens_nulls, global_stats
-
-
-def quarantine_records(
-    table: IceMiniTable, metrics: dict[str, dict[str, Any]]
-) -> list[dict[str, Any]]:
-    """Snapshot quarantine records (relative path, reasons, rows,
-    tokens) of the failing files in per-file gate ``metrics``, sorted
-    by path."""
-    bad = sorted(
-        (os.path.relpath(p, table.root), m) for p, m in metrics.items() if m["quarantined"]
-    )
-    return [
-        {"path": rel, "reasons": m["reasons"], "rows": m["rows"], "tokens": m["tokens"]}
-        for rel, m in bad
-    ]
-
-
 def gate_batch(
     table: IceMiniTable, bins: list[list[FileEntry]], thresholds: dict[str, Any] | None
 ) -> tuple[list[list[FileEntry]], list[dict[str, Any]]]:
-    """Run the per-file quality gate (plans/quality_gate.gate_files) over
-    one batch's input files — ONE grouped aggregation — and split out
-    quarantined files. Returns (clean bins, quarantine records)."""
-    from ..plans.quality_gate import gate_files
+    """Run the per-file quality gate (``plans/quality_gate.file_gate``,
+    ONE grouped aggregation) over one batch's input files and split out
+    the quarantined files. Returns (clean bins, quarantine records)."""
+    from ..plans.quality_gate import gate_entries
 
-    entries = [e for b in bins for e in b]
-    tokens_nulls, global_stats = gate_setup(table, entries)
-    # scan only the light columns (doc_id for PII, n_tok for outliers);
-    # the tokens array's null rows come from the manifest
-    df = table.read_parquet(table.schema(), [e.path for e in entries]).select(
-        "doc_id", "n_tok", F.input_file_name().alias("__file")
-    )
-    records = quarantine_records(
-        table, gate_files(df, thresholds, tokens_nulls, global_stats)
-    )
+    records = gate_entries(table, [e for b in bins for e in b], thresholds)
     if not records:
         return bins, []
     bad = {r["path"] for r in records}

@@ -11,22 +11,26 @@ history persist. The engine flavor:
 - outliers reuse the profile's mean/std/count stats (one shared pass);
 - state (contract, drift/schema baselines, history) lives in a
   StateStore rooted next to the table's snapshots;
-- ``gate_files`` runs the same checks per data file in ONE grouped
-  aggregation over ``input_file_name()`` and returns quarantine
-  decisions — this is what compaction calls inside each pass
-  (north_star: "quality gates that run inside each compaction pass and
-  quarantine failing files"). Its two halves, ``gate_aggregates`` and
-  ``gate_verdicts``, also run inside the sorted rewrite's planning job,
-  next to the curve-key sample.
+- ``file_gate`` is the one per-file gate (north_star: "quality gates
+  that run inside each compaction pass and quarantine failing files"):
+  from the manifest it sets up the null rows and n_tok moments, and it
+  returns the per-file aggregate columns for ONE grouped aggregation
+  over ``input_file_name()`` plus the judge that turns its rows into
+  quarantine records against the thresholds. Compaction's
+  ``gate_batch``, both stream sinks and ``cli gate`` run it through
+  ``gate_entries`` (one job over the light columns); the sorted
+  rewrite runs its columns inside its planning job, next to the
+  curve-key sample.
 """
 
 from __future__ import annotations
 
 import math
+import os
 from datetime import datetime, timezone
-from typing import Any
+from typing import Any, Callable
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Row
 from pyspark.sql import functions as F
 
 from ..functions.narration import build_alerts, build_explanations, generate_insights
@@ -38,7 +42,7 @@ from ..operators.profiling import numeric_columns, profile_dataset, string_colum
 from ..operators.schema_change import detect_schema_changes
 from ..operators.scoring import compute_quality_score
 from ..operators.autofix import build_autofix
-from ..sources.icemini import local_path
+from ..sources.icemini import FileEntry, IceMiniTable, local_path
 from ..sources.state import StateStore
 
 
@@ -223,26 +227,63 @@ def run_quality_gate(
 
 # ------------------------------------------------------- per-file gate (M5)
 
+# a file is quarantined when any of its ratios exceeds the threshold of
+# that name; a caller's ``thresholds`` override these by name
+_THRESHOLDS = {
+    "max_null_ratio": 0.0,  # sequences contract: tokens/n_tok required
+    "max_outlier_ratio": 0.10,
+    "max_pii_ratio": 0.05,
+}
 
-def gate_aggregates(
-    df_with_file: DataFrame, global_stats: tuple[float, float] | None = None
-) -> list[Column]:
-    """The gate's per-file aggregate columns — ``rows``, ``nulls``
-    (n_tok), ``outliers`` (n_tok z > 3 against the GLOBAL distribution),
-    ``pii_rows`` (doc_id PII regex hits) and ``tokens`` — to run in a
-    ``groupBy("__file")`` over the light columns ``doc_id`` and
-    ``n_tok``. The global n_tok mean/pop-std come from ``global_stats``
-    (the caller's manifest moments: zero data passes — Σn_tok and
-    Σn_tok² live in the file stats), else from one tiny job over
-    ``df_with_file``."""
-    if global_stats is not None:
-        gmean, gstd = global_stats
-    else:
-        g = df_with_file.agg(
-            F.avg("n_tok").alias("mean"), F.stddev_pop("n_tok").alias("std")
-        ).first()
-        gmean = float(g["mean"]) if g["mean"] is not None else 0.0
-        gstd = float(g["std"]) if g["std"] is not None else 0.0
+
+def _null_rows(table: IceMiniTable, e: FileEntry, column: str) -> int:
+    """Null rows of ``column`` in one data file: the writer's manifest
+    stat, else (files written before it) an exact count of that one
+    column of that one file."""
+    n = getattr(e, f"null_{column}")
+    if n is None:
+        import pyarrow.parquet as pq
+
+        n = pq.read_table(table._abs(e.path), columns=[column]).column(column).null_count
+    return n
+
+
+def file_gate(
+    table: IceMiniTable,
+    entries: list[FileEntry],
+    df: DataFrame,
+    thresholds: dict[str, Any] | None = None,
+) -> tuple[list[Column], Callable[[list[Row]], list[dict[str, Any]]]]:
+    """The per-file quality gate over ``entries`` — the one place a
+    data file is judged. Returns ``(columns, judge)``: the caller runs
+    ``df.groupBy("__file").agg(*columns, ...)`` — ONE job, which may
+    carry aggregates of its own — and ``judge(rows)`` turns the
+    collected rows into the snapshot quarantine records (relative path,
+    reasons, rows, tokens) of the failing files, sorted by path.
+
+    ``df`` scans the light columns ``doc_id`` and ``n_tok`` of the
+    entries' files, with ``__file`` = ``input_file_name()``. Per file
+    the columns count rows, null n_tok, n_tok z-outliers (|z| > 3
+    against the GLOBAL distribution of the entries) and doc_id PII
+    regex hits. The tokens array is never scanned: its null rows come
+    from the writer's manifest stats and count toward the null ratio.
+    The global n_tok (mean, pop-std) comes from manifest moments
+    (Σn_tok, Σn_tok² are in the file stats), over non-null n_tok rows
+    only, as Spark's aggregates count them. Entries written before a
+    stat fall back: null rows to an exact count of that one column of
+    that one file, the moments to one tiny job over ``df``."""
+    tokens_nulls = {table._abs(e.path): _null_rows(table, e, "tokens") for e in entries}
+    moments = None
+    if entries and all(e.sum_sq_n_tok is not None for e in entries):
+        n = sum(e.rows - _null_rows(table, e, "n_tok") for e in entries)
+        if n > 0:
+            mean = sum(e.token_count for e in entries) / n
+            var = sum(e.sum_sq_n_tok for e in entries) / n - mean * mean
+            moments = (mean, math.sqrt(max(var, 0.0)))
+    if moments is None:
+        g = df.agg(F.avg("n_tok").alias("mean"), F.stddev_pop("n_tok").alias("std")).first()
+        moments = (float(g["mean"] or 0.0), float(g["std"] or 0.0))
+    gmean, gstd = moments
 
     z_out = (
         F.abs((F.col("n_tok").cast("double") - gmean) / gstd) > 3.0
@@ -252,81 +293,51 @@ def gate_aggregates(
     pii_hit = sum(
         (F.col("doc_id").rlike(p).cast("int") for _, p in PII_TYPES), F.lit(0)
     ) > 0
-    return [
+    columns = [
         F.count(F.lit(1)).alias("rows"),
         F.sum(F.col("n_tok").isNull().cast("long")).alias("nulls"),
         F.sum(z_out.cast("long")).alias("outliers"),
         F.sum(pii_hit.cast("long")).alias("pii_rows"),
         F.sum("n_tok").alias("tokens"),
     ]
+    thr = {**_THRESHOLDS, **(thresholds or {})}
+
+    def judge(rows: list[Row]) -> list[dict[str, Any]]:
+        records = []
+        for r in rows:
+            path = local_path(r["__file"])  # a percent-encoded URI
+            n = max(int(r["rows"]), 1)
+            ratios = {
+                "null_ratio": max(int(r["nulls"] or 0), tokens_nulls.get(path, 0)) / n,
+                "outlier_ratio": int(r["outliers"] or 0) / n,
+                "pii_ratio": int(r["pii_rows"] or 0) / n,
+            }
+            reasons = [
+                f"{k} {v:.4f} > {thr[f'max_{k}']}"
+                for k, v in ratios.items()
+                if v > thr[f"max_{k}"]
+            ]
+            if reasons:
+                records.append({
+                    "path": os.path.relpath(path, table.root),
+                    "reasons": reasons,
+                    "rows": int(r["rows"]),
+                    "tokens": int(r["tokens"] or 0),
+                })
+        return sorted(records, key=lambda q: q["path"])
+
+    return columns, judge
 
 
-def gate_verdicts(
-    rows: list,
+def gate_entries(
+    table: IceMiniTable,
+    entries: list[FileEntry],
     thresholds: dict[str, Any] | None = None,
-    extra_null_counts: dict[str, int] | None = None,
-) -> dict[str, dict[str, Any]]:
-    """Quarantine decisions from collected ``gate_aggregates`` rows,
-    keyed by file path (``__file`` holds ``input_file_name()`` URIs and
-    is decoded here). ``extra_null_counts`` — null rows of the tokens
-    array, by path, from the manifest — count toward the null ratio. A file is
-    quarantined when any threshold is exceeded."""
-    thr = {
-        "max_null_ratio": 0.0,  # sequences contract: tokens/n_tok required
-        "max_outlier_ratio": 0.10,
-        "max_pii_ratio": 0.05,
-        **(thresholds or {}),
-    }
-    extra = extra_null_counts or {}
-    out: dict[str, dict[str, Any]] = {}
-    for r in rows:
-        path = local_path(r["__file"])
-        n = max(int(r["rows"]), 1)
-        null_ratio = max(int(r["nulls"] or 0), extra.get(path, 0)) / n
-        outlier_ratio = int(r["outliers"] or 0) / n
-        pii_ratio = int(r["pii_rows"] or 0) / n
-        reasons = []
-        if null_ratio > thr["max_null_ratio"]:
-            reasons.append(f"null_ratio {null_ratio:.4f} > {thr['max_null_ratio']}")
-        if outlier_ratio > thr["max_outlier_ratio"]:
-            reasons.append(
-                f"outlier_ratio {outlier_ratio:.4f} > {thr['max_outlier_ratio']}"
-            )
-        if pii_ratio > thr["max_pii_ratio"]:
-            reasons.append(f"pii_ratio {pii_ratio:.4f} > {thr['max_pii_ratio']}")
-        out[path] = {
-            "rows": int(r["rows"]),
-            "tokens": int(r["tokens"] or 0),
-            "null_ratio": null_ratio,
-            "outlier_ratio": outlier_ratio,
-            "pii_ratio": pii_ratio,
-            "quarantined": bool(reasons),
-            "reasons": reasons,
-        }
-    return out
-
-
-def gate_files(
-    df_with_file: DataFrame,
-    thresholds: dict[str, Any] | None = None,
-    extra_null_counts: dict[str, int] | None = None,
-    global_stats: tuple[float, float] | None = None,
-) -> dict[str, dict[str, Any]]:
-    """Per-FILE quality metrics in ONE grouped aggregation over
-    ``__file`` (``input_file_name()``, set by the caller), plus
-    quarantine decisions, keyed by file path.
-
-    Metrics per file over the sequences schema: row count, null
-    n_tok/tokens (tokens nulls come from ``extra_null_counts`` — the
-    writer's manifest stats — so the array column is never scanned), n_tok z-outliers vs
-    the GLOBAL distribution, doc_id PII regex hits. A file is
-    quarantined when any threshold is exceeded — failing files are
-    excluded from the maintenance commit and listed in the snapshot's
-    quarantine metadata.
-    """
-    rows = (
-        df_with_file.groupBy("__file")
-        .agg(*gate_aggregates(df_with_file, global_stats))
-        .collect()
+) -> list[dict[str, Any]]:
+    """``file_gate`` as ONE grouped job over the light columns of
+    ``entries``' files: the quarantine records of the failing files."""
+    df = table.read_parquet(table.schema(), [e.path for e in entries]).select(
+        "doc_id", "n_tok", F.input_file_name().alias("__file")
     )
-    return gate_verdicts(rows, thresholds, extra_null_counts)
+    columns, judge = file_gate(table, entries, df, thresholds)
+    return judge(df.groupBy("__file").agg(*columns).collect())

@@ -169,12 +169,20 @@ def _sql_string(s: str) -> str:
     return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
-def remove_stale(pattern: str, age_s: float) -> None:
-    """Remove the files and directories matching ``pattern`` whose
-    mtime is at least ``age_s`` old — the orphan-file-cleanup pattern
-    for temps a crashed writer left behind."""
+def glob_in(directory: str, pattern: str, recursive: bool = False) -> list[str]:
+    """The paths under ``directory`` matching the glob ``pattern``;
+    ``directory`` itself is matched literally (a table root may hold
+    ``[``, ``*`` or ``?``)."""
+    return glob.glob(os.path.join(glob.escape(directory), pattern), recursive=recursive)
+
+
+def remove_stale(directory: str, pattern: str, age_s: float) -> None:
+    """Remove the files and directories in ``directory`` matching
+    ``pattern`` whose mtime is at least ``age_s`` old — the
+    orphan-file-cleanup pattern for temps a crashed writer left
+    behind."""
     now = time.time()
-    for p in glob.glob(pattern):
+    for p in glob_in(directory, pattern):
         try:
             if now - os.path.getmtime(p) >= age_s:
                 if os.path.isdir(p):
@@ -404,7 +412,7 @@ class IceMiniTable:
         if best == 0:
             versions = [
                 int(m.group(1))
-                for p in glob.glob(os.path.join(self.meta_dir, "v*.metadata.json"))
+                for p in glob_in(self.meta_dir, "v*.metadata.json")
                 if (m := _VMETA_RE.search(p))
             ]
             best = max(versions, default=0)
@@ -1651,7 +1659,7 @@ class IceMiniTable:
 
     def tags(self) -> dict[str, int]:
         out = {}
-        for p in glob.glob(os.path.join(self.meta_dir, "ref-*.json")):
+        for p in glob_in(self.meta_dir, "ref-*.json"):
             try:
                 with open(p) as f:
                     d = json.load(f)
@@ -1711,9 +1719,9 @@ class IceMiniTable:
         # every hidden entry of data/ is one) and metadata temps of
         # crashed commits — age-gated so live writers' open temps
         # survive a concurrent GC
-        remove_stale(os.path.join(self.data_dir, ".*"), orphan_temp_age_s)
-        remove_stale(os.path.join(self.meta_dir, ".tmp-*"), orphan_temp_age_s)
-        for p in glob.glob(os.path.join(self.data_dir, "*.parquet")):
+        remove_stale(self.data_dir, ".*", orphan_temp_age_s)
+        remove_stale(self.meta_dir, ".tmp-*", orphan_temp_age_s)
+        for p in glob_in(self.data_dir, "*.parquet"):
             rel = os.path.relpath(p, self.root)
             if rel not in retained_files:
                 os.remove(p)
@@ -1722,18 +1730,18 @@ class IceMiniTable:
         # any whose data file is not retained (covers both expired files
         # and the crash window where a sidecar landed but its data
         # file's rename never happened)
-        for p in glob.glob(os.path.join(self.data_dir, "*.parquet.bloom")):
+        for p in glob_in(self.data_dir, "*.parquet.bloom"):
             rel = os.path.relpath(p, self.root)
             if rel[: -len(".bloom")] not in retained_files:
                 try:
                     os.remove(p)
                 except OSError:
                     pass
-        for p in glob.glob(os.path.join(self.meta_dir, "manifest-*.json")):
+        for p in glob_in(self.meta_dir, "manifest-*.json"):
             if os.path.basename(p) not in retained_manifests:
                 os.remove(p)
                 deleted_manifests.append(os.path.basename(p))
-        for p in glob.glob(os.path.join(self.meta_dir, "v*.metadata.json")):
+        for p in glob_in(self.meta_dir, "v*.metadata.json"):
             m = _VMETA_RE.search(p)
             if m and int(m.group(1)) not in keep_versions:
                 os.remove(p)

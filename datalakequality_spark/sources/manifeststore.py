@@ -25,7 +25,6 @@ layout, commits, publishing, scans and GC live here once:
 
 from __future__ import annotations
 
-import glob
 import json
 import os
 import shutil
@@ -35,7 +34,7 @@ from typing import Any, Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from .icemini import ORPHAN_TEMP_AGE_S, claim_json, claim_loop, read_parquet, remove_stale
+from .icemini import ORPHAN_TEMP_AGE_S, claim_json, claim_loop, glob_in, read_parquet, remove_stale
 
 
 class ManifestStore:
@@ -60,7 +59,7 @@ class ManifestStore:
     def _versions(root: str) -> list[int]:
         return [
             int(os.path.basename(p)[1:].split(".", 1)[0])
-            for p in glob.glob(os.path.join(glob.escape(root), "v*.manifest.json"))
+            for p in glob_in(root, "v*.manifest.json")
         ]
 
     @classmethod
@@ -121,7 +120,7 @@ class ManifestStore:
         files: list[dict[str, Any]] = []
         try:
             write(stage)
-            parts = glob.glob(os.path.join(glob.escape(stage), "**", "*.parquet"), recursive=True)
+            parts = glob_in(stage, os.path.join("**", "*.parquet"), recursive=True)
             for i, p in enumerate(sorted(parts)):
                 final = os.path.join(data_dir, f"{prefix}-{i:05d}.parquet")
                 os.rename(p, final)
@@ -147,12 +146,12 @@ class ManifestStore:
         no retained version references (O(#files) driver-side), and
         sweep stage directories older than IceMini's orphan-temp age."""
         data_dir = os.path.join(self.root, "data")
-        remove_stale(os.path.join(glob.escape(data_dir), ".stage-*"), ORPHAN_TEMP_AGE_S)
+        remove_stale(data_dir, ".stage-*", ORPHAN_TEMP_AGE_S)
         current = self.current_version(self.root)
         keep = set(range(max(1, current - keep_last + 1), current + 1))
         retained = {e["path"] for v in keep for e in self._read(self.root, v)["files"]}
         deleted = []
-        for p in glob.glob(os.path.join(glob.escape(data_dir), "*.parquet")):
+        for p in glob_in(data_dir, "*.parquet"):
             rel = os.path.relpath(p, self.root)
             if rel not in retained:
                 os.remove(p)

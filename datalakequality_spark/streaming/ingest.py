@@ -20,6 +20,7 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..plans.quality_gate import gate_entries
 from ..sources.icemini import IceMiniTable
 
 
@@ -54,15 +55,12 @@ class IceMiniStreamSink:
         through the per-file quality gate — the north-star "gates run
         inside each pass" contract extended to ingest: a failing file
         never becomes live, it is recorded in the commit's quarantine
-        metadata instead (same reader as compaction's gate_batch)."""
+        metadata instead (the same gate as compaction's)."""
         if not self.quality_gate or not entries:
             return entries, []
-        from ..maintenance.compaction import gate_batch
-
-        clean_bins, quarantine = gate_batch(
-            self.table, [entries], self.gate_thresholds
-        )
-        return (clean_bins[0] if clean_bins else []), quarantine
+        quarantine = gate_entries(self.table, entries, self.gate_thresholds)
+        bad = {q["path"] for q in quarantine}
+        return [e for e in entries if e.path not in bad], quarantine
 
     def _committed_epochs(self) -> set[int]:
         return {

@@ -1761,15 +1761,31 @@ def _planted_table(spark, root: str) -> tuple[IceMiniTable, dict[str, str]]:
     return t, paths
 
 
-def test_gated_rewrite_quarantines_what_gate_batch_names(spark, tmp_path):
-    """The rewrite's planning job and ``gate_batch`` run the same gate:
-    a gated rewrite_sorted quarantines exactly the files gate_batch
-    names, with the same reasons, and the rewritten table holds exactly
-    the clean files' rows."""
+def test_gated_rewrite_quarantines_what_gate_batch_names(spark, tmp_path, monkeypatch):
+    """Every gate caller runs the same gate: a gated rewrite_sorted, a
+    gated compact_table (one batch holding every file) and ``cli gate``
+    quarantine exactly the files gate_batch names, with the same
+    reasons, and each rewritten table holds exactly the clean files'
+    rows. gate_batch itself is one grouped aggregation (two Spark jobs:
+    its map stage and its collect)."""
+    import shutil
+
+    from datalakequality_spark import cli
     from datalakequality_spark.maintenance.compaction import gate_batch
 
     t, planted = _planted_table(spark, str(tmp_path / "parity"))
-    _, want = gate_batch(t, [t.live_entries()], None)
+    # a copy holds the same relative paths, so the same records
+    shutil.copytree(t.root, str(tmp_path / "copy"))
+    tc = IceMiniTable.load(spark, str(tmp_path / "copy"))
+    sc = spark.sparkContext
+    group = "gate-batch-job-count"
+    sc.setJobGroup(group, "gate_batch")
+    try:
+        _, want = gate_batch(t, [t.live_entries()], None)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 2
     bad = {q["path"] for q in want}
     assert bad == set(planted.values())
     clean = [p for p in t.live_paths() if p not in bad]
@@ -1778,6 +1794,17 @@ def test_gated_rewrite_quarantines_what_gate_batch_names(spark, tmp_path):
         .agg(F.sum(F.pmod(F.xxhash64("doc_id", "tokens", "n_tok", "source"), F.lit(2**31))))
         .collect()[0][0]
     )
+
+    monkeypatch.setattr(cli, "get_spark", lambda *a, **k: spark)
+    out = cli.main(["gate", "--table", t.root])
+    assert out["quarantine"] == want
+    assert out["clean_files"] == out["files"] - len(want) == len(clean)
+
+    r = compact_table(tc, target_bytes=1 << 30, quality_gate=True)
+    got = sorted((q for s in tc.snapshots() for q in s.quarantine), key=lambda q: q["path"])
+    assert r["batches"] == 1 and r["new_files"] == 1
+    assert got == want
+    assert _content_hash(tc) == h_clean
 
     r = rewrite_sorted(t, target_rows_per_file=1000, quality_gate=True)
     got = sorted((q for s in t.snapshots() for q in s.quarantine), key=lambda q: q["path"])
@@ -1792,7 +1819,8 @@ def test_gate_quarantines_null_token_rows_not_empty_or_null_elements(spark, tmp_
     arrays are all null, and neither quarantines a file holding only
     empty or partly-null arrays. The writer records the null rows in the
     manifest; an entry without them gets the same exact count."""
-    from datalakequality_spark.maintenance.compaction import gate_batch, gate_setup
+    from datalakequality_spark.maintenance.compaction import gate_batch
+    from datalakequality_spark.plans.quality_gate import file_gate
 
     t = IceMiniTable.create(spark, str(tmp_path / "nulltok"))
     t.append(generate_sequences(spark, 4000, mean_tokens=8), target_file_rows=500)
@@ -1814,11 +1842,25 @@ def test_gate_quarantines_null_token_rows_not_empty_or_null_elements(spark, tmp_
     assert by_path[planted["null"]].null_tokens == 300
     assert by_path[planted["empty_or_partly_null"]].null_tokens == 0
 
+    # the gate's inputs (null rows and n_tok moments) are the same from
+    # the manifest stats and from the fallback count: the same z-outlier
+    # column, and every file's ratios equal (negative thresholds make
+    # every ratio a reason)
+    df = t.read_files(t.live_paths()).select(
+        "doc_id", "n_tok", F.input_file_name().alias("__file")
+    )
+    every = {"max_null_ratio": -1, "max_outlier_ratio": -1, "max_pii_ratio": -1}
+
+    def gate_inputs(entries):
+        columns, judge = file_gate(t, entries, df, every)
+        return [str(c) for c in columns], judge(df.groupBy("__file").agg(*columns).collect())
+
     entries = t.live_entries()
-    want = gate_setup(t, entries)
+    want = gate_inputs(entries)
+    assert len(want[1]) == len(entries)
     for e in entries:
         e.null_tokens = e.null_n_tok = None
-    assert gate_setup(t, entries) == want
+    assert gate_inputs(entries) == want
 
     _, q = gate_batch(t, [t.live_entries()], None)
     assert [r["path"] for r in q] == [planted["null"]]
@@ -1902,6 +1944,29 @@ def test_maintenance_under_a_root_that_needs_uri_escaping(spark, tmp_path):
     r = merge_into(t, src, max_batch_files=2)
     assert r["tasks"] > 2  # two or more file batches plus the inserts task
     assert t.scan().count() == n and _content_hash(t) == h
+
+
+def test_metadata_globs_under_a_root_holding_glob_metacharacters(spark, tmp_path):
+    """Python's glob reads ``[x]`` in a table root as a character class,
+    so a table at ``a[x]/t`` beside a neighbour at ``ax/t`` must write
+    its own v1, list its own tags and expire only its own files."""
+    near = IceMiniTable.create(spark, str(tmp_path / "ax" / "t"))
+    near.append(generate_sequences(spark, 300, with_tokens=False), target_file_rows=100)
+    near_files = {d: sorted(os.listdir(d)) for d in (near.data_dir, near.meta_dir)}
+
+    t = IceMiniTable.create(spark, str(tmp_path / "a[x]" / "t"))
+    assert os.path.exists(os.path.join(t.meta_dir, "v1.metadata.json"))
+    assert t.current_version() == 1
+    t.append(generate_sequences(spark, 200, with_tokens=False), target_file_rows=100)
+    assert t.create_tag("first") == 2 and t.tags() == {"first": 2}
+    t.append(generate_sequences(spark, 100, start_id=200, with_tokens=False))
+    compact_table(t)
+    r = t.expire_snapshots(keep_last=1, orphan_temp_age_s=0)
+    assert r["deleted_snapshots"] == [1, 3] and len(r["deleted_data_files"]) == 1
+    assert t.tags() == {"first": 2}
+    assert t.scan("first").count() == 200 and t.scan().count() == 300
+    assert {d: sorted(os.listdir(d)) for d in near_files} == near_files
+    assert near.scan().count() == 300
 
 
 def test_metadata_reads_close_their_files(spark, tmp_path):
